@@ -40,317 +40,6 @@ from big_data_code_spark.cacheutil import release_persisted
 from big_data_code_spark.plans.registry import QUERIES
 from big_data_code_spark.session import get_spark
 
-BENCH_QUERIES = (
-    "pageviews_over_time",
-    "uniques_over_time",
-    "uniques_over_time_hll",
-    "rolling_7d_uniques",
-    "bounce_rate",
-    "user_id_normalization",
-    "normalized_events",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q4_order_priority",
-    "q10_returned_items",
-    "q17_small_quantity_revenue",
-    "q2_min_cost_supplier",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q13_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_dominant_suppliers",
-    "q21_waiting_supplier",
-    "q22_wealthy_inactive",
-    "top_users_by_event_type",
-    "running_daily_revenue",
-    "sales_rollup",
-    "viewers_set_ops",
-    "rich_customers",
-    "props_json_extract",
-    "asof_last_event_value",
-    "value_percentiles",
-    "user_event_pivot",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ann_cosine_topk",
-    "text_stats",
-    "doc_quality_filter",
-    "pii_redact",
-    "ann_ivf",
-    "lang_id",
-    "token_counts",
-    "tfidf_top_terms",
-    "hash_split",
-    "benchmark_contamination",
-    "doc_repetition",
-    "multimodal_features",
-    "multimodal_decode",
-    "streaming_pageviews_hourly",
-    "streaming_uniques_hourly_hll",
-    # r4: the JVM session_window bounce rate is the headline; the
-    # applyInPandasWithState custom-expiry twin (streaming_bounce_rate)
-    # stays registered + oracle-checked but out of the bench — its
-    # Python-per-state-key cost is a documented parity demonstration,
-    # not the production plan (VERDICT r3 #6).
-    "streaming_bounce_rate_native",
-    "streaming_sessions",
-    "person_purge",
-    "log_compaction",
-    "funnel_conversion",
-    "funnel_3step",
-    "deterministic_sample",
-    "user_value_windows",
-    "rolling_7d_revenue",
-    "cohort_retention",
-    "dq_checks",
-    "hourly_anomalies",
-    "monthly_daily_corr",
-    "sales_cube",
-    "value_histogram",
-    "top_terms_global",
-    "embedding_stats",
-    "streaming_enriched_counts",
-    "keyvalue_export",
-    "dedup_incremental",
-    "training_corpus_final",
-    "multimodal_metadata",
-    "text_normalize",
-    "sequence_packing",
-    "ann_lsh",
-    "mix_balance_uniform",
-    "bpe_pair_stats",
-    "vocab_coverage",
-    "corpus_shuffle",
-    "unigram_logprob",
-    "embedding_quantize",
-    "stratified_sample",
-    "simhash_dup_pairs",
-    "chunk_dedup",
-    "doc_chunking",
-    "perplexity_filter",
-    "token_budget_mix",
-    "streaming_ingest_dedup",
-    "embedding_pq",
-    "ann_pq",
-    "ann_ivf_pq",
-    "bigram_logprob",
-    "corpus_drift",
-    "curriculum_order",
-    "dedup_semantic_final",
-    "streaming_top_pages_hourly",
-    "keyvalue_export_hll",
-    "temperature_mix",
-    "ccnet_buckets",
-    "tokenizer_fertility",
-    "data_card_stats",
-    "streaming_funnel_hourly",
-    "ann_range_search",
-    "minhash_containment",
-    "exact_substring_dedup",
-    "multimodal_framesample",
-    "multimodal_resize",
-    "knn_graph",
-    "value_percentiles_approx",
-    "gopher_repetition_rules",
-    "quality_logit",
-    "char_entropy",
-    "heavy_hitters_cms",
-    "ann_recall_eval",
-    "tfidf_cosine_pairs",
-    "bm25_search",
-    "pca_power_iteration",
-    "pagerank_knn_graph",
-    "source_blocklist_filter",
-    "bpe_train_merges",
-    "dp_noisy_counts",
-    "streaming_heavy_hitters_cms",
-    "build_term_index",
-    "merge_upsert_orders",
-    "table_profile_events",
-    "multimodal_phash_dedup",
-    "streaming_scd2_customers",
-    "skew_salted_quantity",
-    "lang_id_confusion",
-    "dedup_eval_pr",
-    "lambda_merged_uniques_hll",
-    "sql_interface_pricing_summary",
-    "zorder_layout_keys",
-    # r5: full registry coverage (VERDICT r4 #5) — every registry
-    # query has a bench row except the one documented exclusion
-    # below. The new r5 operators:
-    "substring_dedup_apply",
-    "quality_logit_train",
-    # r6 operator:
-    "bpe_encode",
-    # ...and the r1-r4 entries that never had a row (cheap twins and
-    # variants, benched anyway so the judge sees measured numbers):
-    "customers_no_orders",
-    "uniques_over_time_normalized",
-    "dedup_events",
-    "normalize_urls",
-    "incremental_pageviews_update",
-    "current_person_properties",
-    "simhash_fingerprint",
-    "dedup_embedding_cosine",
-    "hourly_locf",
-    "sales_grouping_sets",
-    "scd2_customer_updates",
-    "events_near_pairs",
-    "streaming_view_attribution",
-    "lambda_merged_pageviews",
-    "dedup_ngram_jaccard",
-    "doc_fingerprint",
-    "dedup_corpus_final",
-    "value_tier_lookup",
-    "hourly_gap_fill",
-    "user_event_unpivot",
-    "dedup_cluster_stats",
-    "triangle_count_knn",
-    "dsir_importance_sample",
-    "quality_logit_calibration",
-    "label_propagation_knn",
-    "source_quality_report",
-    "audience_overlap",
-    "keyvalue_export_ranged",
-    # r7 operators:
-    "knn_graph_incremental",
-    "doremi_mixture_weights",
-    "semdedup_incremental",
-    "contrastive_pairs",
-    "minhash_band_sweep",
-    "ngram_novelty",
-    "topic_cluster_mix",
-    "split_leakage_audit",
-    "quality_logit_pr_curve",
-    "packing_efficiency",
-    "quality_ablation_report",
-    "chunk_bm25_search",
-    "streaming_ngram_novelty",
-    "top_event_transitions",
-    "trending_events_decay",
-    "abtest_value_ztest",
-    # r7 wave 3:
-    "sessionize_events",
-    "session_paths_topk",
-    "market_basket_lift",
-    "rfm_segments",
-    "value_mad_outliers",
-    "mmr_select",
-    "kcenter_select",
-    "term_pmi_pairs",
-    "knn_label_agreement",
-    # r7 wave 4:
-    "sessionize_incremental",
-    "shipping_latency_percentiles",
-    "dim_truncation_eval",
-    "link_prediction_aa",
-    "lambda_merged_sessions",
-    "cross_source_dedup_matrix",
-    "time_to_first_purchase",
-    "fuzzy_name_match",
-    # r7 wave 5 (continuation session):
-    "kanonymity_report",
-    "dau_mau_stickiness",
-    "pareto_user_concentration",
-    "seasonal_hourly_anomalies",
-    "psi_value_drift",
-    "source_score_quantile_norm",
-    "rrf_hybrid_search",
-    "markov_attribution",
-    # r7 wave 6:
-    "churn_weekly",
-    "new_vs_returning_daily",
-    "wow_growth",
-    "ewma_daily_forecast",
-    "node_jaccard_similarity",
-    "source_quota_thresholds",
-    "audio_energy_windows",
-    "entity_resolution_clusters",
-    "kcore_knn_graph",
-    # r7 wave 8:
-    "hits_knn_graph",
-    "ndcg_retrieval_eval",
-    "ks_source_drift",
-    "benford_digit_audit",
-    "item_item_cosine",
-    "open_orders_over_time",
-    "revenue_trend_ols",
-    "ldiversity_report",
-    "chi2_segment_priority",
-    "mutual_information_features",
-    "streaming_psi_monitor",
-    "jsonl_ingest_quarantine",
-    "dedup_keep_best",
-    "neyman_allocation",
-    "trimmed_mean_order_values",
-    "cross_device_sessions",
-    "revenue_pattern_match",
-    "decontaminate_corpus",
-    "itemcf_eval",
-    "embedding_label_drift",
-    "master_roundtrip_counts",
-    "keyvalue_export_delta",
-    "chunk_lang_mix",
-    "transition_entropy",
-    "join_skew_report",
-    "touch_attribution",
-    "bootstrap_ci_order_value",
-    "supplier_reliability_wilson",
-    # r8 operators:
-    "quality_logit_holdout_eval",
-    "events_near_pairs_capped",
-    "semdedup_hierarchical",
-    "order_value_quantiles_exact",
-    "gini_user_concentration",
-    "hill_tail_index",
-    # r9 operators:
-    "cuped_abtest",
-    "cusum_changepoint",
-    "weighted_sample_es",
-    "zipf_slope_fit",
-    "boilerplate_ngrams",
-    "embedding_decontaminate",
-    "srm_check",
-    "mrr_eval",
-    "ppr_knn_graph",
-    "orc_roundtrip_counts",
-    "streaming_cusum_monitor",
-    "user_id_normalization_incremental",
-    "csv_ingest_quarantine",
-    "ewma_backtest_mape",
-    "kfold_assign",
-    # r10 operators:
-    "training_export_roundtrip",
-    "audience_overlap_sketch",
-    "uniques_weekly_kmv_union",
-    "survival_km_ship_lag",
-    "perplexity_band_prune",
-    "streaming_kmv_uniques",
-    "holt_backtest_model_select",
-    "dedup_weighted_sample",
-    # r11 (VERDICT r10 #1 — the bench must charge serve-many cache
-    # builds): cold-build twins of the build-once/serve-many index
-    # caches. Each bypasses its result cache entirely, so BOTH reps
-    # pay the full build and the reported min is the honest cold
-    # compute; the pre-existing rows for the served queries keep
-    # timing the serve path. Additions-only, as required.
-    "dedup_corpus_final_build",
-    "user_id_normalization_build",
-    "knn_graph_build",
-    "ann_cosine_topk_build",
-    "ann_ivf_build",
-    "semdedup_hierarchical_build",
-)
-
 #: Registry entries deliberately NOT benched, with the reason —
 #: kept in code so bench coverage is auditable (VERDICT r4 #5).
 BENCH_EXCLUDED = {
@@ -361,6 +50,9 @@ BENCH_EXCLUDED = {
         " plan (VERDICT r3 #6)"
     ),
 }
+
+#: Every registry query not excluded above, in registry order.
+BENCH_QUERIES = tuple(n for n in QUERIES if n not in BENCH_EXCLUDED)
 
 
 def main() -> None:

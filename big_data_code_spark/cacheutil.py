@@ -1,23 +1,55 @@
-"""Tracking for DataFrames persisted inside lazily-returned plans.
+"""Lifetimes of the derived data a plan holds on to.
 
-Operators like `operators.dedup.minhash_lsh_pairs` persist an
-intermediate (the signature table) that several branches of the
-returned — still lazy — plan consume. The operator cannot unpersist
-it before the caller materializes the plan, so Spark's CacheManager
-would otherwise hold the blocks for the session lifetime. Harness
-loops that run many queries in one session (bench.py,
-tools/driver_check.py) call `release_persisted()` after
-materializing each query; long-lived services can do the same at
-their own batch boundaries. A plan re-run after release simply
-recomputes (and re-registers) its cache — correctness never depends
-on the cache being present.
+Persisted intermediates. Operators like
+`operators.dedup.minhash_lsh_pairs` persist an intermediate (the
+signature table) that several branches of the returned — still lazy
+— plan consume. The operator cannot unpersist it before the caller
+materializes the plan, so Spark's CacheManager would otherwise hold
+the blocks for the session lifetime. Harness loops that run many
+queries in one session (bench.py, tools/driver_check.py) call
+`release_persisted()` after materializing each query; long-lived
+services can do the same at their own batch boundaries. A plan
+re-run after release simply recomputes (and re-registers) its cache
+— correctness never depends on the cache being present.
+
+Serve-once entries. A view that is a pure function of one version
+of its input tables is built once and served until that version
+changes — the batch layer's rule. `serve_once` is the one store:
+
+- key: ``(applicationId, name, abspath(sf_dir), fingerprints)``,
+  one `sources.tables.fingerprint` per input table, so a rewritten
+  input misses and a new Spark application never sees another's
+  blocks;
+- eviction: a miss drops the entry it supersedes, the one for the
+  same ``(applicationId, name, abspath(sf_dir))``, so the store holds
+  at most one version per input dir;
+- a DataFrame is stored as a localCheckpoint scan (a build that
+  checkpoints itself is stored as is), so consumers plan over the
+  materialized rows, not the build lineage. Entries are not
+  release-tracked: they are the index;
+- `STATS[name]` counts hits, misses and build seconds.
+
+`bypass(name)` runs `serve_once(..., name, ...)`'s build and returns
+it without reading or writing the entry or `STATS` — the registry's
+``*_build`` twins, which charge the build to every call.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import time
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
+
+from .sources.tables import fingerprint
 
 _PERSISTED: list[DataFrame] = []
+
+_STORE: dict[tuple, object] = {}
+STATS: dict[str, dict[str, float]] = {}
+_BYPASSED: set[str] = set()
 
 
 def track_persisted(df: DataFrame) -> DataFrame:
@@ -39,26 +71,47 @@ def release_persisted() -> int:
     return n
 
 
-def evict_superseded(cache: dict, key: tuple) -> None:
-    """For build-once serve-many index caches keyed
-    (applicationId, (sf_dir, mtime, size)): unpersist + drop entries
-    for the SAME (application, sf_dir) whose corpus fingerprint
-    differs from ``key``'s — a regenerated corpus (new mtime/size)
-    must not leave the old materialized frame pinned for the session
-    lifetime, and a multi-SF sweep holds at most one live frame per
-    sf_dir (r7 advice #3)."""
-    app, (sf_dir, _, _) = key
-    stale = [k for k in cache if k[0] == app and k[1][0] == sf_dir and k != key]
-    for k in stale:
-        try:
-            # NOTE (r10 advice): the three DataFrame caches store
-            # localCheckpoint-ed frames, for which unpersist() is a
-            # no-op — the checkpoint RDD's blocks are freed later by
-            # Python GC + the ContextCleaner once the dict entry (the
-            # last reference) is dropped here. Eviction is therefore
-            # prompt for the dict and eventual for the blocks; a
-            # regenerated corpus never sees stale RESULTS (the key
-            # changed), it only leaves the old blocks to the cleaner.
-            cache.pop(k).unpersist()
-        except Exception:
-            pass  # session stopped — blocks already gone
+def _is_checkpoint(df: DataFrame) -> bool:
+    return df._jdf.queryExecution().logical().nodeName() == "LogicalRDD"
+
+
+def serve_once(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    tables: Sequence[str],
+    build: Callable[[], object],
+):
+    """``build()`` once per version of ``tables`` under ``sf_dir``,
+    then the stored value (see the module docstring)."""
+    if name in _BYPASSED:
+        return build()
+    scope = (spark.sparkContext.applicationId, name, os.path.abspath(sf_dir))
+    key = (*scope, tuple(fingerprint(sf_dir, t) for t in tables))
+    stats = STATS.setdefault(name, {"hits": 0, "misses": 0, "build_s": 0.0})
+    if key in _STORE:
+        stats["hits"] += 1
+        return _STORE[key]
+    stats["misses"] += 1
+    # a superseded checkpoint's blocks go to the ContextCleaner once
+    # this last reference is dropped (unpersist is a no-op on them)
+    for k in [k for k in _STORE if k[:3] == scope]:
+        del _STORE[k]
+    t0 = time.perf_counter()
+    value = build()
+    if isinstance(value, DataFrame) and not _is_checkpoint(value):
+        value = value.localCheckpoint(eager=True)
+    stats["build_s"] += time.perf_counter() - t0
+    _STORE[key] = value
+    return value
+
+
+@contextmanager
+def bypass(name: str) -> Iterator[None]:
+    """Within the block, `serve_once` calls for ``name`` build fresh
+    and leave the store and `STATS` untouched."""
+    _BYPASSED.add(name)
+    try:
+        yield
+    finally:
+        _BYPASSED.discard(name)

@@ -124,7 +124,7 @@ def salted_broadcast_left_join(
 
 
 def narrow_for_iteration(
-    df: DataFrame, src_file: str, target_bytes: int = 64 << 20
+    df: DataFrame, sf_dir: str, table: str, target_bytes: int = 64 << 20
 ) -> DataFrame:
     """Partition-count ceiling for a NARROW frame that an iterative
     driver loop persists and re-scans every round (guide §2.2/§5:
@@ -142,13 +142,15 @@ def narrow_for_iteration(
     on a cluster where the scan is already right-sized this is a
     no-op (no shuffle inserted), so it is scale-adaptive rather
     than a local-mode constant (`widen_for_compute`'s contract,
-    mirrored)."""
+    mirrored). The size is `sources.tables.fingerprint`'s byte
+    count, so a part-file directory counts its files, not its
+    inode."""
     import math
-    import os
 
-    try:
-        size = os.stat(src_file).st_size
-    except OSError:
+    from ..sources.tables import fingerprint
+
+    size = fingerprint(sf_dir, table)[2]
+    if not size:
         return df
     n = max(1, math.ceil(size / target_bytes))
     if n >= df.rdd.getNumPartitions():

@@ -15,12 +15,14 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.timebuckets import epoch_us, us_to_ts
-from ..sources.tables import load_table
+from ..sources.tables import load_table, staging_dir
 from ..streaming import speed_layer as sl
 
 
@@ -44,17 +46,46 @@ def _static_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_src(sf_dir: str) -> str:
     """FileStreamSource needs a *directory*; stage the events
     parquet into one via symlink (falling back to copy)."""
-    src = os.path.join(sf_dir, "events.parquet")
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"swa_stream_src_{os.path.basename(sf_dir)}"
-    )
+    out_dir = staging_dir(sf_dir, "events", "swa_stream_src")
     link = os.path.join(out_dir, "00.parquet")
-    if not os.path.exists(link):
+    if not os.path.lexists(link):
         os.makedirs(out_dir, exist_ok=True)
+        src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
         try:
             os.symlink(src, link)
         except OSError:
             shutil.copyfile(src, link)
+    return out_dir
+
+
+def _staged_chunks(
+    sf_dir: str, table: str, prefix: str, frames: Callable[[], Iterable[DataFrame]]
+) -> str:
+    """Write ``frames()`` as one parquet file each, in stream order,
+    into a `staging_dir` of ``table`` — strictly increasing mtimes
+    fix the file-stream batch order, so ``maxFilesPerTrigger=1``
+    reads one chunk per micro-batch. Staged once per version of
+    ``table``: a hit costs the fingerprint stat and one ``isdir``,
+    and ``frames`` runs only on a miss. The chunks are written to a
+    private dir renamed into place, so a concurrent reader never
+    sees a partial staging."""
+    out_dir = staging_dir(sf_dir, table, prefix)
+    if os.path.isdir(out_dir):
+        return out_dir
+    tmp_dir = f"{out_dir}.tmp-{uuid.uuid4().hex[:8]}"
+    os.makedirs(tmp_dir)
+    for i, df in enumerate(frames()):
+        tmp = os.path.join(tmp_dir, f"_tmp_{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        chunk = os.path.join(tmp_dir, f"{i:02d}.parquet")
+        os.replace(os.path.join(tmp, part), chunk)
+        shutil.rmtree(tmp)
+        os.utime(chunk, (1_700_000_000 + i, 1_700_000_000 + i))
+    try:
+        os.rename(tmp_dir, out_dir)
+    except OSError:  # a concurrent staging of the same version won
+        shutil.rmtree(tmp_dir, ignore_errors=True)
     return out_dir
 
 
@@ -162,64 +193,30 @@ def _chunked_events_dir(
     consumers pass larger offsets so the watermark also clears the
     last hour window's END (e.g. (180, 360) for the funnel)."""
     suffix = f"_flush{flush_mins[0]}_{flush_mins[1]}" if flush else ""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_stream_{os.path.basename(sf_dir)}_{n_chunks}{suffix}",
-    )
-    # staging is deterministic in (source file, n_chunks, flush) —
-    # reuse an existing staging keyed by the source's fingerprint
-    # instead of re-running the chunk-write jobs every invocation
-    src_stat = os.stat(os.path.join(sf_dir, "events.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = (
-        f"{src_stat.st_mtime}:{src_stat.st_size}:{n_chunks}:{flush}:{flush_mins}"
-    )
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
 
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "ts",
-        epoch_us("ts").alias("us"),
-        "user_id",
-        "event_type",
-    )
-    lo, hi = events.select(F.min("us"), F.max("us")).first()
-    step = (hi - lo) // n_chunks + 1
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-
-    def stage(df: DataFrame, i: int) -> None:
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        # strictly increasing mtimes fix the file-stream batch order
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
+    def frames() -> Iterable[DataFrame]:
+        events = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            "ts",
+            epoch_us("ts").alias("us"),
+            "user_id",
+            "event_type",
         )
-
-    for i in range(n_chunks):
-        stage(
-            events.where(
+        lo, hi = events.select(F.min("us"), F.max("us")).first()
+        step = (hi - lo) // n_chunks + 1
+        for i in range(n_chunks):
+            yield events.where(
                 (F.col("us") >= lo + i * step) & (F.col("us") < lo + (i + 1) * step)
-            ).select("event_id", "ts", "user_id", "event_type"),
-            i,
-        )
-    if flush:
-        for j, mins in enumerate(flush_mins):
-            sentinel = spark.range(1).select(
+            ).select("event_id", "ts", "user_id", "event_type")
+        for j, mins in enumerate(flush_mins if flush else ()):
+            yield spark.range(1).select(
                 F.lit(-(j + 1)).cast("long").alias("event_id"),
                 us_to_ts(F.lit(hi + mins * 60_000_000)).cast("timestamp_ntz").alias("ts"),
                 F.lit(-(j + 1)).cast("long").alias("user_id"),
                 F.lit(FLUSH_DOMAIN).alias("event_type"),
             )
-            stage(sentinel, n_chunks + j)
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+
+    return _staged_chunks(sf_dir, "events", f"swa_stream_{n_chunks}{suffix}", frames)
 
 
 def streaming_bounce_rate(
@@ -551,9 +548,7 @@ def lambda_merged_pageviews(
     )
 
     recent = events.where(F.col("ts") > cutoff)
-    speed_src = os.path.join(
-        tempfile.gettempdir(), f"swa_speed_recent_{os.path.basename(sf_dir)}"
-    )
+    speed_src = staging_dir(sf_dir, "events", "swa_speed_recent")
     (
         recent.select("event_id", "ts", "user_id", "event_type")
         .write.mode("overwrite")
@@ -632,39 +627,14 @@ def _chunked_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> st
     """Stage the incoming-batch side of the dedup corpus (the
     seeded copies, doc_id ≥ 1M) into ``n_chunks`` parquet files
     (split by doc_id % n) so a file stream ingests them as
-    deterministic micro-batches. Fingerprint-cached like
-    `_chunked_events_dir`."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_docs_stream_{os.path.basename(sf_dir)}_{n_chunks}",
-    )
-    src_stat = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = f"{src_stat.st_mtime}:{src_stat.st_size}:{n_chunks}"
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
-
+    deterministic micro-batches."""
     from .llm import _corpus
 
-    batch = _corpus(spark, sf_dir).where(F.col("doc_id") >= 1_000_000)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    for i in range(n_chunks):
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        batch.where(F.col("doc_id") % n_chunks == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
-        )
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+    def frames() -> Iterable[DataFrame]:
+        batch = _corpus(spark, sf_dir).where(F.col("doc_id") >= 1_000_000)
+        return (batch.where(F.col("doc_id") % n_chunks == i) for i in range(n_chunks))
 
+    return _staged_chunks(sf_dir, "documents", f"swa_docs_stream_{n_chunks}", frames)
 
 
 def _prune_stale_sinks(prefix: str) -> None:
@@ -870,39 +840,15 @@ FROM ranked WHERE rank <= 3
 
 def _chunked_all_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> str:
     """Stage the FULL documents table into ``n_chunks`` parquet
-    files (doc_id % n) for file-stream micro-batch ingestion;
-    fingerprint-cached like `_chunked_docs_dir` (which stages only
-    the seeded incoming-batch side)."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_alldocs_stream_{os.path.basename(sf_dir)}_{n_chunks}",
-    )
-    src_stat = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = f"{src_stat.st_mtime}:{src_stat.st_size}:{n_chunks}"
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
+    files (doc_id % n) for file-stream micro-batch ingestion
+    (`_chunked_docs_dir` stages only the seeded incoming-batch
+    side)."""
 
-    from ..sources.tables import load_table
+    def frames() -> Iterable[DataFrame]:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        return (docs.where(F.col("doc_id") % n_chunks == i) for i in range(n_chunks))
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    for i in range(n_chunks):
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        docs.where(F.col("doc_id") % n_chunks == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
-        )
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+    return _staged_chunks(sf_dir, "documents", f"swa_alldocs_stream_{n_chunks}", frames)
 
 
 def _cms_partial_cells(batch_df: DataFrame) -> DataFrame:
@@ -1003,41 +949,22 @@ SCD2_STREAM_ROUNDS = 3
 def _chunked_scd2_updates_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage SCD2_STREAM_ROUNDS CDC update batches (every 5th
     customer, balance +100 per round, absolute new values) as
-    mtime-ordered parquet files for micro-batch ingestion;
-    fingerprint-cached like the other staging helpers."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_scd2_stream_{os.path.basename(sf_dir)}_{SCD2_STREAM_ROUNDS}",
+    mtime-ordered parquet files for micro-batch ingestion."""
+
+    def frames() -> Iterable[DataFrame]:
+        cust = load_table(spark, sf_dir, "customer")
+        return (
+            cust.where(F.col("c_custkey") % 5 == 0).select(
+                "c_custkey",
+                F.round(F.col("c_acctbal") + 100.0 * i, 2).alias("acctbal"),
+                F.lit(SCD2_STREAM_TS0 + i).cast("long").alias("batch_ts"),
+            )
+            for i in range(1, SCD2_STREAM_ROUNDS + 1)
+        )
+
+    return _staged_chunks(
+        sf_dir, "customer", f"swa_scd2_stream_{SCD2_STREAM_ROUNDS}", frames
     )
-    src_stat = os.stat(os.path.join(sf_dir, "customer.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = f"{src_stat.st_mtime}:{src_stat.st_size}:{SCD2_STREAM_ROUNDS}"
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
-
-    from ..sources.tables import load_table
-
-    cust = load_table(spark, sf_dir, "customer")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    for i in range(1, SCD2_STREAM_ROUNDS + 1):
-        batch = cust.where(F.col("c_custkey") % 5 == 0).select(
-            "c_custkey",
-            F.round(F.col("c_acctbal") + 100.0 * i, 2).alias("acctbal"),
-            F.lit(SCD2_STREAM_TS0 + i).cast("long").alias("batch_ts"),
-        )
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
-        )
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
 
 
 def streaming_scd2_customers(
@@ -1204,9 +1131,7 @@ def lambda_merged_uniques_hll(
         )
     )
     recent = events.where(F.col("ts") > cutoff)
-    speed_src = os.path.join(
-        tempfile.gettempdir(), f"swa_speed_uniq_{os.path.basename(sf_dir)}"
-    )
+    speed_src = staging_dir(sf_dir, "events", "swa_speed_uniq")
     (
         recent.select("event_id", "ts", "user_id", "event_type")
         .write.mode("overwrite")

@@ -6,7 +6,10 @@ pruning freedom; no caching here — callers decide lifetime.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import stat
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -64,3 +67,38 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for ``spark.sql`` use."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def fingerprint(sf_dir: str, table: str) -> tuple[str, int, int]:
+    """Version of one input table: ``(abspath, mtime_ns, bytes)`` of
+    ``<table>.parquet``. A Spark part-file directory reports its
+    newest mtime (the directory's own included, so a removed part
+    file counts) and the total bytes of its data files — names
+    starting with ``_`` or ``.`` (``_SUCCESS``, ``.crc``) are not
+    data. A missing table is ``(abspath, 0, 0)``."""
+    path = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    try:
+        st = os.stat(path)
+    except OSError:
+        return (path, 0, 0)
+    if not stat.S_ISDIR(st.st_mode):
+        return (path, st.st_mtime_ns, st.st_size)
+    mtime, size = st.st_mtime_ns, 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                fst = os.stat(os.path.join(root, f))
+                mtime, size = max(mtime, fst.st_mtime_ns), size + fst.st_size
+    return (path, mtime, size)
+
+
+def staging_dir(sf_dir: str, table: str, prefix: str) -> str:
+    """Scratch dir for data staged from one version of ``table``: the
+    name carries a hash of the absolute ``sf_dir`` and the table's
+    `fingerprint`, so a rewritten table gets a fresh dir and two
+    inputs sharing a basename never collide. Finding it costs the
+    fingerprint's stat and no read of the table."""
+    _, mtime_ns, size = fingerprint(sf_dir, table)
+    h = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"{prefix}_v2_{h}_{mtime_ns}_{size}")

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -26,6 +28,21 @@ TABLES = (
 def spark():
     spark = get_spark("tests")
     yield spark
+
+
+def sf_copy(dst, table: str, keep) -> str:
+    """``SF_SMOKE`` at ``dst``: every table symlinked except
+    ``table``, which is written with the rows ``keep(arrow_table)``
+    returns. Returns ``dst`` as a string."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(dst)
+    for t in TABLES:
+        if t != table:
+            os.symlink(os.path.join(SF_SMOKE, f"{t}.parquet"), os.path.join(dst, f"{t}.parquet"))
+    src = pq.read_table(os.path.join(SF_SMOKE, f"{table}.parquet"))
+    pq.write_table(keep(src), os.path.join(dst, f"{table}.parquet"))
+    return str(dst)
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

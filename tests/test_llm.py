@@ -658,7 +658,7 @@ def test_dedup_cluster_stats_consistency(spark):
 
 
 def test_dedup_cc_cache_serves_identical_verdicts(spark):
-    """The r10 verdict-table cache: repeat calls serve the SAME
+    """The `dedup_cc` serve-once entry: repeat calls serve the SAME
     checkpoint-truncated frame (one LSH+CC build per corpus and
     session), the cached rows are bit-identical to a fresh un-cached
     build, and the truncated plan keeps its LSH+CC build under the
@@ -682,32 +682,122 @@ def test_dedup_cc_cache_serves_identical_verdicts(spark):
 
 
 def test_build_twins_bypass_result_caches(spark):
-    """r11 (VERDICT r10 #1): every registered `*_build` bench twin
-    must (a) produce rows identical to its served counterpart and
-    (b) leave the serve-many result caches untouched — never read
-    (the twin computes even when a cached frame exists) and never
-    written (a twin call must not warm the serve path)."""
-    from big_data_code_spark.plans import llm, swa
-    from big_data_code_spark.plans.registry import QUERIES
+    """Every `*_build` twin generated from the registry's serve-once
+    twin map must (a) produce rows identical to its served counterpart
+    and (b) leave the serve-once store untouched — never read (the
+    twin computes even when a stored entry exists), never written (a
+    twin call must not warm the serve path) and not counted in its
+    entry's hit/miss STATS. A twin may still read other entries, e.g.
+    the kNN band-row count."""
+    import copy
 
-    pairs = [
-        ("dedup_corpus_final_build", "dedup_corpus_final", llm._DEDUP_CC_CACHE),
-        ("user_id_normalization_build", "user_id_normalization", swa._EQUIV_MAP_CACHE),
-        ("knn_graph_build", "knn_graph", llm._KNN_GRAPH_CACHE),
-        ("ann_cosine_topk_build", "ann_cosine_topk", llm._ANN_EXACT_CACHE),
-        ("ann_ivf_build", "ann_ivf", llm._IVF_INDEX_CACHE),
-        (
-            "semdedup_hierarchical_build",
-            "semdedup_hierarchical",
-            llm._SEMDEDUP_HIER_INDEX_CACHE,
-        ),
-    ]
-    for build_name, served_name, cache in pairs:
-        served = sorted(map(tuple, QUERIES[served_name](spark, SF_SMOKE).collect()))
-        keys_before = set(cache)
-        built = sorted(map(tuple, QUERIES[build_name](spark, SF_SMOKE).collect()))
-        assert built == served, f"{build_name} != {served_name}"
-        assert set(cache) == keys_before, f"{build_name} touched its cache"
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans.registry import QUERIES, SERVE_ONCE_TWINS
+
+    assert len(SERVE_ONCE_TWINS) == 6
+    for served, entry in SERVE_ONCE_TWINS.items():
+        served_rows = sorted(map(tuple, QUERIES[served](spark, SF_SMOKE).collect()))
+        store, stats = dict(cacheutil._STORE), copy.deepcopy(cacheutil.STATS)
+        built = sorted(map(tuple, QUERIES[f"{served}_build"](spark, SF_SMOKE).collect()))
+        assert built == served_rows, f"{served}_build != {served}"
+        assert cacheutil._STORE.keys() == store.keys(), f"{served}_build wrote"
+        assert all(cacheutil._STORE[k] is v for k, v in store.items())
+        assert cacheutil.STATS[entry] == stats[entry], f"{served}_build counted"
+
+
+def test_serve_once_families(spark):
+    """Every family in the registry's serve-once twin map: after its
+    entry is dropped the next served call misses and rebuilds the
+    same rows; a second served call is a hit (for a DataFrame entry
+    it starts no Spark job and is the stored checkpoint scan; for an
+    index entry it starts fewer jobs than the twin, which skips the
+    store); the audit hooks that expose the checkpointed builds stay
+    registered."""
+    import copy
+    import os
+
+    from pyspark.sql import DataFrame
+
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans.registry import (
+        AUDIT_PLAN_HOOKS,
+        QUERIES,
+        SERVE_ONCE_TWINS,
+    )
+
+    st = spark.sparkContext.statusTracker()
+
+    def construct(name):
+        before = set(st.getJobIdsForGroup(None))
+        df = QUERIES[name](spark, SF_SMOKE)
+        return df, len(set(st.getJobIdsForGroup(None)) - before)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def entries(entry):
+        scope = (entry, os.path.abspath(SF_SMOKE))
+        return {k: v for k, v in cacheutil._STORE.items() if k[1:3] == scope}
+
+    assert len(SERVE_ONCE_TWINS) == 6
+    for served, entry in SERVE_ONCE_TWINS.items():
+        served_rows = rows(QUERIES[served](spark, SF_SMOKE))
+        stats = copy.deepcopy(cacheutil.STATS)
+        twin_df, twin_jobs = construct(f"{served}_build")
+        assert rows(twin_df) == served_rows, f"{served}_build != {served}"
+
+        for k in entries(entry):  # the next served call rebuilds
+            del cacheutil._STORE[k]
+        assert rows(QUERIES[served](spark, SF_SMOKE)) == served_rows
+        assert cacheutil.STATS[entry]["misses"] == stats[entry]["misses"] + 1
+        (value,) = entries(entry).values()
+
+        again, jobs = construct(served)
+        assert cacheutil.STATS[entry]["hits"] == stats[entry]["hits"] + 1
+        if isinstance(value, DataFrame):
+            assert again is value and jobs == 0, (served, jobs)
+            assert "Scan ExistingRDD" in physical_plan(again)
+        else:
+            assert jobs < twin_jobs, (served, jobs, twin_jobs)
+    assert {"dedup_corpus_final", "user_id_normalization", "knn_graph_build"} <= set(
+        AUDIT_PLAN_HOOKS
+    )
+
+
+def test_serve_once_misses_after_source_rewrite(spark, tmp_path):
+    """Rewriting a source file in place invalidates its serve-once
+    entry: the next call misses and matches the new oracle, and the
+    store keeps one entry for that (name, sf_dir)."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans.llm import ANN_N_QUERIES
+    from big_data_code_spark.plans.registry import QUERIES
+    from tests.conftest import sf_copy
+
+    sf = sf_copy(tmp_path / "sf", "embeddings", lambda t: t)
+    assert_matches_oracle(spark, "ann_cosine_topk", sf)
+    before = sorted(map(tuple, QUERIES["ann_cosine_topk"](spark, sf).collect()))
+    misses = cacheutil.STATS["ann_exact"]["misses"]
+
+    emb_path = os.path.join(sf, "embeddings.parquet")
+    emb = pq.read_table(emb_path)
+    vid = emb["vec_id"]
+    keep = pc.or_(pc.less(vid, ANN_N_QUERIES), pc.equal(pc.bit_wise_and(vid, 1), 0))
+    pq.write_table(emb.filter(keep), emb_path)
+
+    assert_matches_oracle(spark, "ann_cosine_topk", sf)
+    assert cacheutil.STATS["ann_exact"]["misses"] == misses + 1
+    after = sorted(map(tuple, QUERIES["ann_cosine_topk"](spark, sf).collect()))
+    assert after != before
+    scope = (spark.sparkContext.applicationId, "ann_exact", os.path.abspath(sf))
+    assert len([k for k in cacheutil._STORE if k[:3] == scope]) == 1
+
+
+def test_embedding_pq_invariants(spark):
     """Codes are 4 per vector in [0, K); reconstruction error is
     non-negative, deterministic across runs, and on average beats
     the zero-codebook baseline (mean ||v||^2)."""
@@ -3799,15 +3889,13 @@ def test_orc_roundtrip_counts_oracle_and_format(spark):
     conserved)."""
     import os
 
-    from big_data_code_spark.plans.llm import (
-        _staging_dir,
-        orc_roundtrip_counts,
-    )
+    from big_data_code_spark.plans.llm import orc_roundtrip_counts
+    from big_data_code_spark.sources.tables import staging_dir
 
     assert_matches_oracle(spark, "orc_roundtrip_counts", SF_SMOKE)
     assert_matches_oracle(spark, "orc_roundtrip_counts", SF_CORRECT)
 
-    out = _staging_dir(SF_SMOKE, "documents", "orc_rt")
+    out = staging_dir(SF_SMOKE, "documents", "orc_rt")
     assert os.path.isdir(out)
     assert any(f.endswith(".orc") for f in os.listdir(out)), os.listdir(out)
     n = spark.read.orc(out).count()

@@ -462,6 +462,22 @@ def test_stream_stream_join_state_is_watermark_bounded(spark, tmp_path):
     assert removed >= 40, f"expected the hour-0 burst evicted, removed={removed}"
 
 
+def test_streaming_sources_are_keyed_on_the_full_path(spark, tmp_path):
+    """Two input dirs sharing a basename stream their own events: a
+    copy of SF_SMOKE under the same basename holding half its events
+    matches its own oracle after SF_SMOKE has been streamed."""
+    from tests.conftest import sf_copy
+
+    half = sf_copy(
+        tmp_path / os.path.basename(SF_SMOKE),
+        "events",
+        lambda t: t.slice(0, t.num_rows // 2),
+    )
+    for name in ("streaming_pageviews_hourly", "streaming_kmv_uniques"):
+        assert_matches_oracle(spark, name, SF_SMOKE)
+        assert_matches_oracle(spark, name, half)
+
+
 def test_streaming_ingest_dedup_equals_batch_incremental(spark):
     """The foreachBatch streamed ingest (3 micro-batches) must equal
     the batch-at-once incremental dedup row-for-row, and the staging

@@ -157,11 +157,11 @@ def test_keyvalue_export_delta_oracle_and_invariants(spark):
 
 
 def test_equiv_map_cache_serves_identical_mapping(spark):
-    """The r10 equiv-mapping cache (the _DEDUP_CC_CACHE convention):
-    repeat calls serve the SAME checkpoint-truncated frame (one CC
-    per events corpus and session), the cached rows are bit-identical
-    to a fresh un-cached CC over the same edges, and the build stays
-    under the CI scale audits through the registered hook."""
+    """The `equiv_map` serve-once entry: repeat calls serve the SAME
+    checkpoint-truncated frame (one CC per events corpus and
+    session), the cached rows are bit-identical to a fresh un-cached
+    CC over the same edges, and the build stays under the CI scale
+    audits through the registered hook."""
     from tests.conftest import SF_SMOKE
 
     from big_data_code_spark.operators.graph import connected_components
