@@ -32,6 +32,19 @@ changes — the batch layer's rule. `serve_once` is the one store:
 `bypass(name)` runs `serve_once(..., name, ...)`'s build and returns
 it without reading or writing the entry or `STATS` — the registry's
 ``*_build`` twins, which charge the build to every call.
+
+Materialized frames. `materialize(df)` is the package's one eager
+local checkpoint: an iterative operator's round, a de-duplicated
+edge list, a serve-once value. A checkpoint truncates the frame's
+lineage, so the plan a query returns no longer shows the work that
+built it. Inside a `recording()` block (the registry-wide
+plan audits in the tests) `materialize` first appends the frame's
+pre-execution physical plan, the same lazily-planned value the
+checkpoint then executes, so a query is audited as its returned plan
+plus every plan it materialized on the way. A non-bypassed
+`serve_once` miss builds with recording paused, so what a query
+records never depends on what the store already held; each
+serve-once build is audited through its ``*_build`` twin instead.
 """
 
 from __future__ import annotations
@@ -39,7 +52,7 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable, Iterator, Sequence
-from contextlib import contextmanager
+from contextlib import AbstractContextManager, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,6 +63,7 @@ _PERSISTED: list[DataFrame] = []
 _STORE: dict[tuple, object] = {}
 STATS: dict[str, dict[str, float]] = {}
 _BYPASSED: set[str] = set()
+_RECORDED: list[str] | None = None
 
 
 def track_persisted(df: DataFrame) -> DataFrame:
@@ -69,6 +83,30 @@ def release_persisted() -> int:
         except Exception:
             pass  # session already stopped — nothing to release
     return n
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` executed once and truncated to a scan of its rows (see
+    the module docstring)."""
+    if _RECORDED is not None:
+        _RECORDED.append(df._jdf.queryExecution().executedPlan().toString())
+    return df.localCheckpoint(eager=True)
+
+
+@contextmanager
+def _record_into(plans: list[str] | None) -> Iterator[list[str] | None]:
+    global _RECORDED
+    prev, _RECORDED = _RECORDED, plans
+    try:
+        yield plans
+    finally:
+        _RECORDED = prev
+
+
+def recording() -> AbstractContextManager[list[str]]:
+    """Within the block, every `materialize` call appends the
+    physical plan it is about to execute to the yielded list."""
+    return _record_into([])
 
 
 def _is_checkpoint(df: DataFrame) -> bool:
@@ -98,9 +136,10 @@ def serve_once(
     for k in [k for k in _STORE if k[:3] == scope]:
         del _STORE[k]
     t0 = time.perf_counter()
-    value = build()
-    if isinstance(value, DataFrame) and not _is_checkpoint(value):
-        value = value.localCheckpoint(eager=True)
+    with _record_into(None):
+        value = build()
+        if isinstance(value, DataFrame) and not _is_checkpoint(value):
+            value = materialize(value)
     stats["build_s"] += time.perf_counter() - t0
     _STORE[key] = value
     return value

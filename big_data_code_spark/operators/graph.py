@@ -21,7 +21,7 @@ MapReduce algorithm (Kiveris et al., SOCC'14).
 
 Scale notes: edges stay static (one shuffle-friendly table); each
 round is two hash joins + one aggregate on (node) — all partitioned
-by node id, so AQE reuses the layout. ``localCheckpoint``
+by node id, so AQE reuses the layout. `cacheutil.materialize`
 truncates lineage so the loop's plans stay flat. Convergence is a
 cheap count of changed labels.
 """
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..cacheutil import materialize
 
 
 def connected_components(
@@ -47,31 +49,27 @@ def connected_components(
     # generation (e.g. the LSH band join feeding dedup's CC).
     # Materialize it once; edge lists are the SMALL side of these
     # pipelines at any scale (pairs, not corpora).
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
-        eager=True
-    )
+    raw = materialize(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     und = raw.where(F.col("a") != F.col("b"))
     # symmetric neighbor list, deduped once; cached via checkpoint —
     # reused every iteration
-    e = (
+    e = materialize(
         und.select("a", "b")
         .union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # seed labels from the RAW endpoints (pre self-loop filter) so a
     # node whose only edge is a self-loop still emerges as its own
     # singleton component instead of vanishing from the output
-    labels = (
+    labels = materialize(
         raw.select(F.col("a").alias("node"))
         .union(raw.select(F.col("b").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
     )
 
     for _ in range(max_iterations):
-        jumped = _cc_round(e, labels).localCheckpoint(eager=True)
+        jumped = materialize(_cc_round(e, labels))
 
         changed = jumped.where(F.col("label") != F.col("old_label")).count()
         labels = jumped.select("node", "label")
@@ -85,9 +83,7 @@ def connected_components(
 
 def _cc_round(e: DataFrame, labels: DataFrame) -> DataFrame:
     """One propagate+jump round, UN-checkpointed — the loop body of
-    `connected_components` and the plan surface `cc_audit_plans`
-    hands to the registry-wide scale audits (all rounds are
-    plan-identical)."""
+    `connected_components`."""
     # 1. propagate: min label among self + neighbors
     nbr = (
         e.join(labels.withColumnRenamed("node", "b"), "b")
@@ -110,26 +106,3 @@ def _cc_round(e: DataFrame, labels: DataFrame) -> DataFrame:
     return prop.join(as_parent, prop["label"] == as_parent["jlabel"], "left").select(
         "node", "old_label", F.coalesce("plabel", "label").alias("label")
     )
-
-
-def cc_audit_plans(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> list[DataFrame]:
-    """UNEXECUTED plan surface of a `connected_components` run over
-    ``edges`` for `AUDIT_PLAN_HOOKS` consumers: the eager
-    localCheckpoints inside the real run execute-and-vanish before
-    the registry-wide audits see the returned frame, so this rebuilds
-    the symmetric edge table and one representative round lazily over
-    un-checkpointed inputs."""
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = raw.where(F.col("a") != F.col("b"))
-    e = und.select("a", "b").union(
-        und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    labels = (
-        raw.select(F.col("a").alias("node"))
-        .union(raw.select(F.col("b").alias("node")))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
-    return [_cc_round(e, labels)]

@@ -9,10 +9,12 @@ declared identically in the Spark plan and the oracle SQL.
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cacheutil import materialize
 from ..functions.timebuckets import epoch_us
 from ..operators.asof import asof_join
 from ..sources.tables import load_table
@@ -3088,8 +3090,6 @@ def _markov_prob(spark: SparkSession, counts: DataFrame) -> DataFrame:
     per channel (transitions INTO the removed channel redirect to
     NULL — counts transformed BEFORE the divide, so every p stays
     an exact int/int ratio), absorbing self-loops on CONV/NULL."""
-    from functools import reduce
-
     from pyspark.sql.window import Window
 
     parts = [counts.select(F.lit("base").alias("chain"), "src", "dst", "cnt")]
@@ -3112,7 +3112,7 @@ def _markov_prob(spark: SparkSession, counts: DataFrame) -> DataFrame:
         ],
         "chain string, src string, dst string, cnt long",
     )
-    mat = reduce(lambda a, b: a.unionByName(b), parts + [loops])
+    mat = reduce(DataFrame.unionByName, parts + [loops])
     matg = mat.groupBy("chain", "src", "dst").agg(
         F.sum("cnt").cast("long").alias("cnt")
     )
@@ -3154,8 +3154,7 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ (5 chains × 7 × 7)-row matrix — per-step joins on tiny
     checkpointed frames (cluster: the matrix fits in one partition;
     the iteration costs nothing at any corpus size). The two
-    one-row final broadcasts are allowlisted; the per-step plan is
-    exposed via AUDIT_PLAN_HOOKS.
+    one-row final broadcasts are allowlisted.
 
     Returns (channel, p_conv_base, p_conv_removed, removal_effect,
     attribution_share).
@@ -3169,11 +3168,9 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every frame after counts is ≤ 245 rows, so AQE's per-shuffle
     # stage materialization was pure job overhead (14 jobs for the
     # matrix build alone).
-    counts = _markov_transition_counts(spark, sf_dir).localCheckpoint(
-        eager=True
-    )
+    counts = materialize(_markov_transition_counts(spark, sf_dir))
     with no_aqe(spark):
-        prob = _markov_prob(spark, counts).localCheckpoint(eager=True)
+        prob = materialize(_markov_prob(spark, counts))
     v = spark.createDataFrame(
         [(chain, "START", 1.0) for chain in ("base", *MARKOV_CHANNELS)],
         "chain string, state string, v double",
@@ -3198,9 +3195,9 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape). Rows unchanged — localCheckpoint is content-neutral;
     # oracle re-proved.
     with no_aqe(spark):
-        pcs = v.where(F.col("state") == "CONV").select(
-            "chain", F.col("v").alias("pc")
-        ).localCheckpoint(eager=True)
+        pcs = materialize(
+            v.where(F.col("state") == "CONV").select("chain", F.col("v").alias("pc"))
+        )
     basef = pcs.where(F.col("chain") == "base").agg(
         F.coalesce(F.max("pc"), F.lit(0.0)).alias("p_base")
     )
@@ -3243,22 +3240,6 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN te > 0 THEN removal_effect / te END"
         ).alias("attribution_share"),
     )
-
-
-def markov_attribution_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook: `markov_attribution` checkpoints its transition
-    matrix and every propagation step, so the registry-wide scale
-    audit would only see tiny materialized scans. Expose the two
-    UNEXECUTED shapes every run executes: the sessionize-and-count
-    plan (the data-scale pass) and one propagation step over the
-    un-checkpointed matrix (all steps are plan-identical)."""
-    counts = _markov_transition_counts(spark, sf_dir)
-    prob = _markov_prob(spark, counts)
-    v0 = spark.createDataFrame(
-        [(chain, "START", 1.0) for chain in ("base", *MARKOV_CHANNELS)],
-        "chain string, state string, v double",
-    )
-    return [counts, _markov_step(v0, prob)]
 
 
 def _markov_attribution_sql() -> str:
@@ -4988,10 +4969,7 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("skew_factor"),
             )
         )
-    res = out[0]
-    for o in out[1:]:
-        res = res.unionByName(o)
-    return res
+    return reduce(DataFrame.unionByName, out)
 
 
 JOIN_SKEW_REPORT_SQL = """

@@ -17,6 +17,7 @@ double accumulation (Spark ``aggregate`` ≡ DuckDB
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +32,7 @@ from ..functions.text import (
     tokenize,
     word_shingles,
 )
-from ..cacheutil import serve_once
+from ..cacheutil import materialize, serve_once
 from ..operators import ann, dedup
 from ..sources.tables import load_table, staging_dir
 
@@ -2279,23 +2280,6 @@ def dedup_corpus_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_corpus_final_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook (`quality_logit_train_audit_plans` convention):
-    the registered frame is a localCheckpoint scan and the CC fixed
-    point executes-and-vanishes at build time, so expose the
-    UNEXECUTED scale-critical plans — the banded-LSH pair join over
-    the corpus and one representative CC propagate+jump round over
-    un-checkpointed inputs."""
-    from ..operators.graph import cc_audit_plans
-
-    corpus = _corpus(spark, sf_dir)
-    pairs = dedup.minhash_lsh_pairs(corpus, threshold=MINHASH_LSH_THRESHOLD)
-    edges = pairs.select(
-        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-    )
-    return [pairs, *cc_audit_plans(edges)]
-
-
 DEDUP_CORPUS_FINAL_SQL = f"""
 WITH RECURSIVE {_CORPUS_CTE},
 {_SHINGLES_CTE},
@@ -4418,7 +4402,7 @@ def _knn_band_rows(spark: SparkSession, sf_dir: str) -> int:
         n = _embeddings(spark, sf_dir).count()
         return min(KNN_MAX_ROWS, max(KNN_MIN_ROWS, math.ceil(math.log2(max(n, 2)))))
 
-    # one count per corpus, read by every graph build and audit hook
+    # one count per corpus, read by every graph build
     return serve_once(spark, "knn_band_rows", sf_dir, ("embeddings",), build)
 
 
@@ -4514,45 +4498,13 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join reference — triangle_count_knn's explain carried
     # 2,126 Exchange / 5,896 ArrowEval nodes of pure plan text and
     # paid whole seconds of Catalyst time per query.
-    edges = (
+    edges = materialize(
         sym.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= KNN_K)
         .select("src", "rank", "dst", "cos")
-        .localCheckpoint(eager=True)
     )
     pairs.unpersist()
     return edges
-
-
-def knn_graph_build_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook (`dedup_corpus_final_audit_plans` convention): the
-    build twin's registered frame is a localCheckpoint scan (the
-    build executes-and-vanishes at call time), so expose the
-    UNEXECUTED banded-LSH pair join + symmetric top-k window over
-    un-persisted inputs for the registry-wide scale audits."""
-    emb = _embeddings(spark, sf_dir)
-    rows = _knn_band_rows(spark, sf_dir)
-    pairs = ann.cosine_dup_pairs_lsh(
-        emb,
-        threshold=-1.0,
-        n_planes=KNN_BANDS * rows,
-        n_bands=KNN_BANDS,
-        arrow_sig=True,
-        arrow_dot=True,
-    )
-    sym = pairs.select(
-        F.col("vec_id_a").alias("src"), F.col("vec_id_b").alias("dst"), "cos"
-    ).unionByName(
-        pairs.select(
-            F.col("vec_id_b").alias("src"), F.col("vec_id_a").alias("dst"), "cos"
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("cos"), "dst")
-    return [
-        sym.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= KNN_K)
-        .select("src", "rank", "dst", "cos")
-    ]
 
 
 KNN_GRAPH_SQL = f"""
@@ -5299,17 +5251,13 @@ def quality_logit_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization job per round and can improve nothing here.
     with no_aqe(spark):
         for rnd in range(1, QL_TRAIN_ROUNDS + 1):
-            wrow = _qlt_round_step(labeled, wrow, cols)
             # 1-row, executor-side; truncates the doubled-per-round lineage
             # (round k references round k-1 twice) to keep analysis linear.
-            wrow = wrow.localCheckpoint(eager=True)
+            wrow = materialize(_qlt_round_step(labeled, wrow, cols))
             out_rounds.append(
                 wrow.select(F.lit(rnd).cast("long").alias("round"), *report)
             )
-    out = out_rounds[0]
-    for s in out_rounds[1:]:
-        out = out.unionByName(s)
-    return out
+    return reduce(DataFrame.unionByName, out_rounds)
 
 
 def _qlt_w0(spark: SparkSession) -> DataFrame:
@@ -5346,33 +5294,15 @@ def _qlt_round_cols():
     return p, grads, updates
 
 
-def _qlt_round_step(
-    labeled: DataFrame, wrow: DataFrame, cols=None
-) -> DataFrame:
+def _qlt_round_step(labeled: DataFrame, wrow: DataFrame, cols) -> DataFrame:
     """One batch-GD round: score every doc against the broadcast
     1-row weight vector, sum fixed-point gradient contributions
     (carrying the round's constant weights along), update. Returns
-    the new 1-row weight frame PRE-checkpoint —
-    `quality_logit_train_audit_plans` hands exactly this shape to
-    the scale audit (`tests/test_tpch.py`), which otherwise only
-    sees the post-checkpoint union of executed RDD scans."""
-    p, grads, updates = cols if cols is not None else _qlt_round_cols()
+    the new 1-row weight frame PRE-checkpoint; ``cols`` is
+    `_qlt_round_cols()`."""
+    p, grads, updates = cols
     scored = labeled.crossJoin(F.broadcast(wrow)).withColumn("p", p)
     return scored.agg(*grads).select(*updates)
-
-
-def quality_logit_train_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook (r6 — VERDICT r5 'What's wrong' #3): the frame
-    `quality_logit_train` returns is a union of localCheckpoint-ed
-    1-row RDD scans, so the registry-wide scale audit would inspect
-    a plan whose per-round work already executed and vanished. This
-    returns the UNEXECUTED round-step plan (round 1: full-corpus
-    score + fixed-point gradient agg + weight update) so the audit
-    can sweep the shape every round actually runs. Every round is
-    plan-identical (same step applied to a new 1-row weight frame),
-    so one round is the complete surface (r7: over the standardized
-    frame, whose two stat broadcasts are part of the audited plan)."""
-    return [_qlt_round_step(_qlt_labeled_std(spark, sf_dir), _qlt_w0(spark))]
 
 
 def _qlt_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5581,8 +5511,8 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     consts, z4t, consts2 = _qlt_std_frames(train)
     # 1-row stat frames: checkpoint so the train scan behind them
     # runs once, not once per downstream consumer
-    consts = consts.localCheckpoint(eager=True)
-    consts2 = consts2.localCheckpoint(eager=True)
+    consts = materialize(consts)
+    consts2 = materialize(consts2)
     from ..operators.skew import narrow_for_iteration
 
     # r11: same iteration-frame sizing as quality_logit_train
@@ -5608,9 +5538,7 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = _qlt_round_cols()  # r10: parse expressions once, not per round
     with no_aqe(spark):  # r10: see quality_logit_train
         for _ in range(QL_TRAIN_ROUNDS):
-            wrow = _qlt_round_step(lab_train, wrow, cols).localCheckpoint(
-                eager=True
-            )
+            wrow = materialize(_qlt_round_step(lab_train, wrow, cols))
     lab_train.unpersist()
 
     val = labeled_all.where(~is_train)
@@ -5690,21 +5618,6 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-def quality_logit_holdout_eval_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook (the `quality_logit_train_audit_plans` convention):
-    the registered frame is built from localCheckpoint-ed weight
-    rows, so the scale audit gets the UNEXECUTED round-step plan
-    over the train-slice standardized frame — the shape every GD
-    round actually runs."""
-    labeled = _qlt_labeled(spark, sf_dir).where(F.expr(_QLT_TRAIN_SPARK))
-    _, z4t, consts2 = _qlt_std_frames(labeled)
-    lab_train = z4t.crossJoin(F.broadcast(consts2)).select(
-        "doc_id", "y", "zs", "zp", "zm", "zt",
-        F.expr("(zt * zt - mu_u) / sd_u").alias("zu"),
-    )
-    return [_qlt_round_step(lab_train, _qlt_w0(spark))]
 
 
 def _quality_logit_holdout_sql() -> str:
@@ -6604,10 +6517,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out_rounds.append(stats)
         words = words.select("word", "wf", "s")
-    out = out_rounds[0]
-    for s in out_rounds[1:]:
-        out = out.unionByName(s)
-    return out
+    return reduce(DataFrame.unionByName, out_rounds)
 
 
 def _bpe_train_sql() -> str:
@@ -9900,8 +9810,7 @@ def _doremi_round_step(dt: DataFrame, state: DataFrame) -> DataFrame:
     domain's own LM, multiplicative update, normalize. ``state`` is
     the K-row (dom, n, v, h_own, w) frame; returns the NEXT state
     carrying the round's report columns (dom, n, v, h_own, h_mix,
-    excess, w) PRE-checkpoint (the audit hook hands exactly this to
-    the scale sweep). Every double is produced by the identical
+    excess, w) PRE-checkpoint. Every double is produced by the identical
     expression chain as the pre-r11 shape (the per-domain constants
     now arrive via the state join instead of separate broadcasts —
     same values, same sorted folds, same 1e-9 quantization)."""
@@ -9997,8 +9906,7 @@ def doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizers), never re-reading documents. Rounds are fixed
     (DOREMI_ROUNDS) and the K-row weight frame is locally
     checkpointed per round (the `quality_logit_train` lineage
-    contract; pre-checkpoint round plan exposed to the scale audit
-    via AUDIT_PLAN_HOOKS).
+    contract).
 
     Float contract: every cross-token/cross-domain double sum folds
     in sorted order (the `unigram_logprob` pattern); excess and the
@@ -10029,25 +9937,20 @@ def doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         dt0.repartition(F.col("tok")).persist(StorageLevel.MEMORY_AND_DISK)
     )
     dt.count()
-    nd = dt.groupBy("dom").agg(F.sum("c").cast("long").alias("n")).localCheckpoint(
-        eager=True
+    nd = materialize(dt.groupBy("dom").agg(F.sum("c").cast("long").alias("n")))
+    v = materialize(
+        dt.select("tok").distinct().agg(F.count(F.lit(1)).cast("long").alias("v"))
     )
-    v = (
-        dt.select("tok")
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("v"))
-        .localCheckpoint(eager=True)
-    )
-    hown = _doremi_h_own(dt, nd, v).localCheckpoint(eager=True)
+    hown = materialize(_doremi_h_own(dt, nd, v))
     # r10 note: unlike the quality_logit loops, this round step has a
     # non-hinted dt⋈sm join that NEEDS AQE's runtime broadcast
     # decision (sm is vocab-sized — statically hinting it broadcast
     # would be wrong at 100 TB corpora); `no_aqe` measured 2× slower
     # here. AQE stays on.
-    state = _doremi_state0(nd, v, hown).localCheckpoint(eager=True)
+    state = materialize(_doremi_state0(nd, v, hown))
     out_rounds = []
     for rnd in range(1, DOREMI_ROUNDS + 1):
-        state = _doremi_round_step(dt, state).localCheckpoint(eager=True)
+        state = materialize(_doremi_round_step(dt, state))
         # reported entropies on the 1e-9 grid: the fold's last ulp is
         # engine-sensitive (one 2-ulp h_mix drift measured in 500
         # rounds x domains); everything that FEEDS FORWARD (excess,
@@ -10064,22 +9967,7 @@ def doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("w").alias("weight"),
             )
         )
-    out = out_rounds[0]
-    for s in out_rounds[1:]:
-        out = out.unionByName(s)
-    return out
-
-
-def doremi_mixture_weights_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook (the `quality_logit_train_audit_plans` contract):
-    `doremi_mixture_weights` returns unions of localCheckpoint-ed
-    K-row frames, so the scale sweep would otherwise only see
-    executed-and-vanished round plans. Exposes the UNEXECUTED
-    round-1 step (corpus stats + mixture fold + EG update); every
-    round is plan-identical."""
-    dt, nd, v = _doremi_base(spark, sf_dir)
-    hown = _doremi_h_own(dt, nd, v)
-    return [_doremi_round_step(dt, _doremi_state0(nd, v, hown))]
+    return reduce(DataFrame.unionByName, out_rounds)
 
 
 def _doremi_sql() -> str:
@@ -10559,11 +10447,9 @@ def mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoins + one map-side argmax per round — nothing for AQE
     # to re-plan, one extra materialization job per shuffle saved).
     with no_aqe(spark):
-        state = _mmr_state0(cand, anchor).localCheckpoint(eager=True)
+        state = materialize(_mmr_state0(cand, anchor))
         for rnd in range(1, SELECT_K + 1):
-            pick = _sel_argmax(_mmr_score(state), "score").localCheckpoint(
-                eager=True
-            )
+            pick = materialize(_sel_argmax(_mmr_score(state), "score"))
             out.append(
                 pick.select(
                     F.lit(rnd).cast("long").alias("round"),
@@ -10572,22 +10458,8 @@ def mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if rnd < SELECT_K:
-                state = _mmr_update(state, pick).localCheckpoint(eager=True)
-    res = out[0]
-    for s in out[1:]:
-        res = res.unionByName(s)
-    return res
-
-
-def mmr_select_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook: the registered frame is a union of checkpointed
-    1-row picks; this returns the UNEXECUTED round-1 argmax and
-    state-update plans (every later round is plan-identical over a
-    fresh 1-row pick)."""
-    cand, anchor = _sel_base(spark, sf_dir)
-    state = _mmr_state0(cand, anchor)
-    pick = _sel_argmax(_mmr_score(state), "score")
-    return [pick, _mmr_update(state, pick)]
+                state = materialize(_mmr_update(state, pick))
+    return reduce(DataFrame.unionByName, out)
 
 
 def _kc_state0(cand: DataFrame, anchor: DataFrame) -> DataFrame:
@@ -10636,9 +10508,9 @@ def kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand, anchor = _sel_base(spark, sf_dir)
     out = []
     with no_aqe(spark):  # r10: see mmr_select
-        state = _kc_state0(cand, anchor).localCheckpoint(eager=True)
+        state = materialize(_kc_state0(cand, anchor))
         for rnd in range(1, SELECT_K + 1):
-            pick = _sel_argmax(state, "dmin").localCheckpoint(eager=True)
+            pick = materialize(_sel_argmax(state, "dmin"))
             out.append(
                 pick.select(
                     F.lit(rnd).cast("long").alias("round"),
@@ -10647,19 +10519,8 @@ def kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             if rnd < SELECT_K:
-                state = _kc_update(state, pick).localCheckpoint(eager=True)
-    res = out[0]
-    for s in out[1:]:
-        res = res.unionByName(s)
-    return res
-
-
-def kcenter_select_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook: unexecuted round-1 argmax + dmin-update plans."""
-    cand, anchor = _sel_base(spark, sf_dir)
-    state = _kc_state0(cand, anchor)
-    pick = _sel_argmax(state, "dmin")
-    return [pick, _kc_update(state, pick)]
+                state = materialize(_kc_update(state, pick))
+    return reduce(DataFrame.unionByName, out)
 
 
 def _sel_cos_sql(a: str, b: str) -> str:
@@ -11871,32 +11732,19 @@ def kcore_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (vec_id, core_degree) for nodes in the k-core.
     """
     g = knn_graph(spark, sf_dir)
-    e = (
+    e = materialize(
         g.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
     for _ in range(KCORE_ROUNDS):
-        e = _kcore_peel(e).localCheckpoint(eager=True)
+        e = materialize(_kcore_peel(e))
     nbr = e.select(F.col("u").alias("n")).unionByName(
         e.select(F.col("v").alias("n"))
     )
     return nbr.groupBy(F.col("n").alias("vec_id")).agg(
         F.count(F.lit(1)).cast("long").alias("core_degree")
     )
-
-
-def kcore_knn_graph_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook: every peel is checkpointed, so expose one
-    UNEXECUTED peel over the un-checkpointed edge list (all rounds
-    are plan-identical) for the registry-wide scale sweep."""
-    g = knn_graph(spark, sf_dir)
-    e = g.select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).distinct()
-    return [_kcore_peel(e)]
 
 
 def _kcore_sql() -> str:
@@ -11983,7 +11831,7 @@ def hits_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATERIALIZED iterate instead of re-executing the whole chain
     (the `quality_logit_train` iterate pattern; un-checkpointed,
     the nested lineage re-ran ~2× per consumer — measured 78s → 8s
-    at sf0.1; per-round plans exposed via AUDIT_PLAN_HOOKS).
+    at sf0.1).
     Scores ride the order-free fixed-point grid, so results are
     partitioning-independent; max-normalization keeps the grid
     conditioned at any n (see _HITS_GRID). Nodes with no in-edges
@@ -11999,23 +11847,9 @@ def hits_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub = nodes.select("vec_id", F.lit(1.0).alias("hub"))
     auth = None
     for _ in range(HITS_ITERATIONS):
-        auth = _hits_half(
-            edges, nodes, hub, "hub", "src", "dst", "auth"
-        ).localCheckpoint(eager=True)
-        hub = _hits_half(
-            edges, nodes, auth, "auth", "dst", "src", "hub"
-        ).localCheckpoint(eager=True)
+        auth = materialize(_hits_half(edges, nodes, hub, "hub", "src", "dst", "auth"))
+        hub = materialize(_hits_half(edges, nodes, auth, "auth", "dst", "src", "hub"))
     return hub.join(auth, "vec_id").select("vec_id", "hub", "auth")
-
-
-def hits_knn_graph_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook: iterates are localCheckpoint-ed, so expose one
-    UNEXECUTED half-round over un-checkpointed inputs (all
-    half-rounds are plan-identical) for the registry-wide sweep."""
-    edges = knn_graph(spark, sf_dir).select("src", "dst")
-    nodes = _embeddings(spark, sf_dir).select("vec_id")
-    hub0 = nodes.select("vec_id", F.lit(1.0).alias("hub"))
-    return [_hits_half(edges, nodes, hub0, "hub", "src", "dst", "auth")]
 
 
 def _hits_sql() -> str:

@@ -8,16 +8,10 @@ hash-threshold plan with a full oracle, and the seeded-RNG
 
 ORDER MATTERS: the correctness driver samples the FIRST 50 entries
 in insertion order, so the prefix is kept 100% oracle-backed and is
-rotated each round (changed-first, then oldest-evidence-next —
-VERDICT r5 #6). The cumulative round-driver union r1-r9 covers all
-269 carried-over entries, none failing its latest check (VERDICT
-r9). The r10 prefix leads with the 8 NEW r10 entries, then the 6
-queries whose plan code changed this round, then ALL 15
-oracle-backed streaming queries (plans/speed.py was refactored to
-expose static audit twins), then the oldest-evidence r4-vintage
-fill. See the inline comments at the list, which are the
-authoritative description. Nothing about a query's semantics
-depends on its position.
+rotated each round: rewritten plans first, then entries that have
+never been in a driver sample, then the oldest driver evidence. The
+comments at the list say what the prefix holds now. Nothing about a
+query's semantics depends on its position.
 
 Every oracle-backed query has ALSO been verified locally by
 tools/driver_check.py full sweeps (plain stock session) at sf0.01;
@@ -37,41 +31,39 @@ from . import advanced, llm, speed, swa, tpch, tpch2
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 #: (name, callable, oracle SQL | None), in driver-sample order.
+#: Positions 1-6 are the ``*_build`` twins, prepended from
+#: SERVE_ONCE_TWINS below; 7-31 are the 25 entries listed first here.
 _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
-    # -- r10 prefix. ORDER (changed-first, then
-    #    oldest-evidence-next — the house rotation): positions 1-8
-    #    are the eight NEW r10 entries (never driver-sampled);
-    #    9-21 are the queries whose plan code changed this round
-    #    (unigram_logprob exact-BIGINT ln fold, cuped_abtest
-    #    nullif/greatest guards, weighted_sample_es ln(0) clamp,
-    #    pareto_user_concentration via the size-gated
-    #    two_pass_ranks fast path, events_near_pairs(+_capped)
-    #    re-planned onto the merge-count kernel, and — optimization
-    #    sessions — dedup_corpus_final/keep_best/eval_pr served from
-    #    the once-per-corpus "dedup_cc" serve-once verdict table
-    #    plus user_id_normalization/normalized_events/
-    #    uniques_over_time_normalized/cross_device_sessions served
-    #    from the "equiv_map" entry); 22-36 are ALL 15 oracle-backed
-    #    streaming queries (plans/speed.py was refactored this round
-    #    to expose static audit twins through the same builder code —
-    #    changed-first applies), ordered by oldest last-green round;
-    #    37-50 are the first 14 of the 26 remaining r4-vintage
-    #    entries (the cache-changed dedup_cluster_stats and
-    #    dedup_weighted_sample already sit at 37 and 2). The prefix
-    #    growth pushes 13 entries past the 50-entry driver window:
-    #    11 r4-vintage (ann_recall_eval, tfidf_cosine_pairs,
-    #    bm25_search, pca_power_iteration, dp_noisy_counts,
-    #    build_term_index, table_profile_events,
-    #    multimodal_phash_dedup, skew_salted_quantity,
-    #    lang_id_confusion, zorder_layout_keys, at 51-61) and 2
-    #    r5-vintage (top_users_by_event_type,
-    #    lambda_merged_uniques_hll, at 62-63) — they keep their
-    #    old driver evidence plus this session's full local sweep,
-    #    and MUST lead the r11 prefix (changed-first permitting).
-    #    Nothing about a query's semantics depends on its position.
-    #    Positions 1-6, the r11 `*_build` twins, are prepended from
-    #    SERVE_ONCE_TWINS below.
-    # -- NEW r10 (never sampled)
+    # -- 7-9: rewritten in r11, never in a driver sample
+    ("doremi_mixture_weights", llm.doremi_mixture_weights, llm.DOREMI_MIXTURE_WEIGHTS_SQL),
+    ("quality_logit_train", llm.quality_logit_train, llm.QUALITY_LOGIT_TRAIN_SQL),
+    ("quality_logit_holdout_eval", llm.quality_logit_holdout_eval, llm.QUALITY_LOGIT_HOLDOUT_EVAL_SQL),
+    # -- 10-22: pushed past the 50-entry window by the r10 prefix
+    ("ann_recall_eval", llm.ann_recall_eval, llm.ANN_RECALL_EVAL_SQL),
+    ("tfidf_cosine_pairs", llm.tfidf_cosine_pairs, llm.TFIDF_COSINE_PAIRS_SQL),
+    ("bm25_search", llm.bm25_search, llm.BM25_SEARCH_SQL),
+    ("pca_power_iteration", llm.pca_power_iteration, llm.PCA_POWER_ITERATION_SQL),
+    ("dp_noisy_counts", llm.dp_noisy_counts, llm.DP_NOISY_COUNTS_SQL),
+    ("build_term_index", llm.build_term_index, llm.BUILD_TERM_INDEX_SQL),
+    ("table_profile_events", llm.table_profile_events, llm.TABLE_PROFILE_EVENTS_SQL),
+    ("multimodal_phash_dedup", llm.multimodal_phash_dedup, llm.MULTIMODAL_PHASH_DEDUP_SQL),
+    ("skew_salted_quantity", llm.skew_salted_quantity, llm.SKEW_SALTED_QUANTITY_SQL),
+    ("lang_id_confusion", llm.lang_id_confusion, llm.LANG_ID_CONFUSION_SQL),
+    ("zorder_layout_keys", advanced.zorder_layout_keys, advanced.ZORDER_LAYOUT_KEYS_SQL),
+    ("top_users_by_event_type", tpch.top_users_by_event_type, tpch.TOP_USERS_SQL),
+    ("lambda_merged_uniques_hll", speed.lambda_merged_uniques_hll, speed.LAMBDA_MERGED_UNIQUES_SQL),
+    # -- 23-31: the other queries whose materialized frames the
+    #    plan audits now record
+    ("mmr_select", llm.mmr_select, llm.MMR_SELECT_SQL),
+    ("kcenter_select", llm.kcenter_select, llm.KCENTER_SELECT_SQL),
+    ("kcore_knn_graph", llm.kcore_knn_graph, llm.KCORE_KNN_GRAPH_SQL),
+    ("hits_knn_graph", llm.hits_knn_graph, llm.HITS_KNN_GRAPH_SQL),
+    ("markov_attribution", advanced.markov_attribution, advanced.MARKOV_ATTRIBUTION_SQL),
+    ("entity_resolution_clusters", advanced.entity_resolution_clusters, advanced.ENTITY_RESOLUTION_CLUSTERS_SQL),
+    ("dedup_semantic_final", llm.dedup_semantic_final, llm.DEDUP_SEMANTIC_FINAL_SQL),
+    ("training_corpus_final", llm.training_corpus_final, llm.TRAINING_CORPUS_FINAL_SQL),
+    ("user_id_normalization_incremental", swa.user_id_normalization_incremental, swa.USER_ID_NORMALIZATION_INCREMENTAL_SQL),
+    # -- 32+: every other entry, in its prior relative order
     ("holt_backtest_model_select", advanced.holt_backtest_model_select, advanced.HOLT_BACKTEST_MODEL_SELECT_SQL),
     ("dedup_weighted_sample", llm.dedup_weighted_sample, llm.DEDUP_WEIGHTED_SAMPLE_SQL),
     ("streaming_kmv_uniques", speed.streaming_kmv_uniques, speed.STREAMING_KMV_UNIQUES_SQL),
@@ -80,28 +72,19 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("uniques_weekly_kmv_union", llm.uniques_weekly_kmv_union, llm.UNIQUES_WEEKLY_KMV_UNION_SQL),
     ("training_export_roundtrip", llm.training_export_roundtrip, llm.TRAINING_EXPORT_ROUNDTRIP_SQL),
     ("audience_overlap_sketch", llm.audience_overlap_sketch, llm.AUDIENCE_OVERLAP_SKETCH_SQL),
-    # -- r10-changed plan code
     ("unigram_logprob", llm.unigram_logprob, llm.UNIGRAM_LOGPROB_SQL),
     ("cuped_abtest", advanced.cuped_abtest, advanced.CUPED_ABTEST_SQL),
     ("weighted_sample_es", llm.weighted_sample_es, llm.WEIGHTED_SAMPLE_ES_SQL),
     ("pareto_user_concentration", advanced.pareto_user_concentration, advanced.PARETO_USER_CONCENTRATION_SQL),
     ("events_near_pairs", advanced.events_near_pairs, advanced.EVENTS_NEAR_PAIRS_SQL),
     ("events_near_pairs_capped", advanced.events_near_pairs_capped, advanced.EVENTS_NEAR_PAIRS_CAPPED_SQL),
-    # -- changed in the optimization sessions: the LSH→CC verdict
-    #    table is now built once per (session, corpus) and served
-    #    from the "dedup_cc" entry (results bit-identical;
-    #    oracle-proved)
     ("dedup_corpus_final", llm.dedup_corpus_final, llm.DEDUP_CORPUS_FINAL_SQL),
     ("dedup_keep_best", llm.dedup_keep_best, llm.DEDUP_KEEP_BEST_SQL),
     ("dedup_eval_pr", llm.dedup_eval_pr, llm.DEDUP_EVAL_PR_SQL),
-    #    ...and the equiv-graph user-ID mapping, likewise served
-    #    from the "equiv_map" entry (results bit-identical;
-    #    oracle-proved)
     ("user_id_normalization", swa.user_id_normalization, swa.USER_ID_NORMALIZATION_SQL),
     ("normalized_events", swa.normalized_events, swa.NORMALIZED_EVENTS_SQL),
     ("uniques_over_time_normalized", swa.uniques_over_time_normalized, swa.UNIQUES_NORMALIZED_SQL),
     ("cross_device_sessions", advanced.cross_device_sessions, advanced.CROSS_DEVICE_SESSIONS_SQL),
-    # -- all oracle-backed streaming queries (speed.py refactor), oldest first
     ("streaming_top_pages_hourly", speed.streaming_top_pages_hourly, speed.STREAMING_TOP_PAGES_SQL),
     ("streaming_ingest_dedup", speed.streaming_ingest_dedup, llm.DEDUP_INCREMENTAL_SQL),
     ("streaming_bounce_rate_native", speed.streaming_bounce_rate_native, speed.STREAMING_BOUNCE_RATE_NATIVE_SQL),
@@ -117,10 +100,8 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("streaming_ngram_novelty", speed.streaming_ngram_novelty, llm.STREAMING_NGRAM_NOVELTY_SQL),
     ("streaming_cusum_monitor", speed.streaming_cusum_monitor, speed.STREAMING_CUSUM_MONITOR_SQL),
     ("streaming_psi_monitor", speed.streaming_psi_monitor, speed.STREAMING_PSI_MONITOR_SQL),
-    # -- oldest-evidence fill: the 26 remaining r4-vintage entries
     ("dedup_cluster_stats", llm.dedup_cluster_stats, llm.DEDUP_CLUSTER_STATS_SQL),
     ("bigram_logprob", llm.bigram_logprob, llm.BIGRAM_LOGPROB_SQL),
-    ("dedup_semantic_final", llm.dedup_semantic_final, llm.DEDUP_SEMANTIC_FINAL_SQL),
     ("keyvalue_export_hll", swa.keyvalue_export_hll, swa.KEYVALUE_EXPORT_HLL_SQL),
     ("temperature_mix", llm.temperature_mix, llm.TEMPERATURE_MIX_SQL),
     ("tokenizer_fertility", llm.tokenizer_fertility, llm.TOKENIZER_FERTILITY_SQL),
@@ -132,23 +113,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("gopher_repetition_rules", llm.gopher_repetition_rules, llm.GOPHER_REPETITION_RULES_SQL),
     ("char_entropy", llm.char_entropy, llm.CHAR_ENTROPY_SQL),
     ("heavy_hitters_cms", llm.heavy_hitters_cms, llm.HEAVY_HITTERS_CMS_SQL),
-    ("ann_recall_eval", llm.ann_recall_eval, llm.ANN_RECALL_EVAL_SQL),
-    ("tfidf_cosine_pairs", llm.tfidf_cosine_pairs, llm.TFIDF_COSINE_PAIRS_SQL),
-    ("bm25_search", llm.bm25_search, llm.BM25_SEARCH_SQL),
-    ("pca_power_iteration", llm.pca_power_iteration, llm.PCA_POWER_ITERATION_SQL),
-    ("dp_noisy_counts", llm.dp_noisy_counts, llm.DP_NOISY_COUNTS_SQL),
-    ("build_term_index", llm.build_term_index, llm.BUILD_TERM_INDEX_SQL),
-    ("table_profile_events", llm.table_profile_events, llm.TABLE_PROFILE_EVENTS_SQL),
-    ("multimodal_phash_dedup", llm.multimodal_phash_dedup, llm.MULTIMODAL_PHASH_DEDUP_SQL),
-    ("skew_salted_quantity", llm.skew_salted_quantity, llm.SKEW_SALTED_QUANTITY_SQL),
-    ("lang_id_confusion", llm.lang_id_confusion, llm.LANG_ID_CONFUSION_SQL),
-    ("zorder_layout_keys", advanced.zorder_layout_keys, advanced.ZORDER_LAYOUT_KEYS_SQL),
-    # -- oldest r5-vintage
-    ("top_users_by_event_type", tpch.top_users_by_event_type, tpch.TOP_USERS_SQL),
-    ("lambda_merged_uniques_hll", speed.lambda_merged_uniques_hll, speed.LAMBDA_MERGED_UNIQUES_SQL),
-    # -- 51+: remaining entries, prior relative order; after the
-    #    r10 prefix lands, cumulative round-driver union = all 271
-    #    entries with the OLDEST last-green evidence being r5.
     ("cusum_changepoint", advanced.cusum_changepoint, advanced.CUSUM_CHANGEPOINT_SQL),
     ("zipf_slope_fit", llm.zipf_slope_fit, llm.ZIPF_SLOPE_FIT_SQL),
     ("boilerplate_ngrams", llm.boilerplate_ngrams, llm.BOILERPLATE_NGRAMS_SQL),
@@ -157,11 +121,9 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("mrr_eval", llm.mrr_eval, llm.MRR_EVAL_SQL),
     ("ppr_knn_graph", llm.ppr_knn_graph, llm.PPR_KNN_GRAPH_SQL),
     ("orc_roundtrip_counts", llm.orc_roundtrip_counts, llm.ORC_ROUNDTRIP_COUNTS_SQL),
-    ("user_id_normalization_incremental", swa.user_id_normalization_incremental, swa.USER_ID_NORMALIZATION_INCREMENTAL_SQL),
     ("csv_ingest_quarantine", llm.csv_ingest_quarantine, llm.CSV_INGEST_QUARANTINE_SQL),
     ("ewma_backtest_mape", advanced.ewma_backtest_mape, advanced.EWMA_BACKTEST_MAPE_SQL),
     ("kfold_assign", llm.kfold_assign, llm.KFOLD_ASSIGN_SQL),
-    ("quality_logit_holdout_eval", llm.quality_logit_holdout_eval, llm.QUALITY_LOGIT_HOLDOUT_EVAL_SQL),
     ("order_value_quantiles_exact", advanced.order_value_quantiles_exact, advanced.ORDER_VALUE_QUANTILES_EXACT_SQL),
     ("gini_user_concentration", advanced.gini_user_concentration, advanced.GINI_USER_CONCENTRATION_SQL),
     ("hill_tail_index", advanced.hill_tail_index, advanced.HILL_TAIL_INDEX_SQL),
@@ -208,8 +170,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("market_basket_lift", advanced.market_basket_lift, advanced.MARKET_BASKET_LIFT_SQL),
     ("rfm_segments", advanced.rfm_segments, advanced.RFM_SEGMENTS_SQL),
     ("value_mad_outliers", advanced.value_mad_outliers, advanced.VALUE_MAD_OUTLIERS_SQL),
-    ("mmr_select", llm.mmr_select, llm.MMR_SELECT_SQL),
-    ("kcenter_select", llm.kcenter_select, llm.KCENTER_SELECT_SQL),
     ("knn_label_agreement", llm.knn_label_agreement, llm.KNN_LABEL_AGREEMENT_SQL),
     ("sessionize_incremental", advanced.sessionize_incremental, advanced.SESSIONIZE_INCREMENTAL_SQL),
     ("shipping_latency_percentiles", advanced.shipping_latency_percentiles, advanced.SHIPPING_LATENCY_SQL),
@@ -223,15 +183,11 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("seasonal_hourly_anomalies", advanced.seasonal_hourly_anomalies, advanced.SEASONAL_HOURLY_ANOMALIES_SQL),
     ("psi_value_drift", advanced.psi_value_drift, advanced.PSI_VALUE_DRIFT_SQL),
     ("rrf_hybrid_search", llm.rrf_hybrid_search, llm.RRF_HYBRID_SEARCH_SQL),
-    ("markov_attribution", advanced.markov_attribution, advanced.MARKOV_ATTRIBUTION_SQL),
     ("churn_weekly", advanced.churn_weekly, advanced.CHURN_WEEKLY_SQL),
     ("new_vs_returning_daily", advanced.new_vs_returning_daily, advanced.NEW_VS_RETURNING_DAILY_SQL),
     ("wow_growth", advanced.wow_growth, advanced.WOW_GROWTH_SQL),
     ("ewma_daily_forecast", advanced.ewma_daily_forecast, advanced.EWMA_DAILY_FORECAST_SQL),
     ("audio_energy_windows", llm.audio_energy_windows, llm.AUDIO_ENERGY_WINDOWS_SQL),
-    ("entity_resolution_clusters", advanced.entity_resolution_clusters, advanced.ENTITY_RESOLUTION_CLUSTERS_SQL),
-    ("kcore_knn_graph", llm.kcore_knn_graph, llm.KCORE_KNN_GRAPH_SQL),
-    ("hits_knn_graph", llm.hits_knn_graph, llm.HITS_KNN_GRAPH_SQL),
     ("ndcg_retrieval_eval", llm.ndcg_retrieval_eval, llm.NDCG_RETRIEVAL_EVAL_SQL),
     ("ks_source_drift", advanced.ks_source_drift, advanced.KS_SOURCE_DRIFT_SQL),
     ("benford_digit_audit", advanced.benford_digit_audit, advanced.BENFORD_DIGIT_AUDIT_SQL),
@@ -245,7 +201,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("vocab_coverage", llm.vocab_coverage, llm.VOCAB_COVERAGE_SQL),
     ("corpus_shuffle", llm.corpus_shuffle, llm.CORPUS_SHUFFLE_SQL),
     ("bpe_pair_stats", llm.bpe_pair_stats, llm.BPE_PAIR_STATS_SQL),
-    ("quality_logit_train", llm.quality_logit_train, llm.QUALITY_LOGIT_TRAIN_SQL),
     ("ann_cosine_topk", llm.ann_cosine_topk, llm.ANN_COSINE_TOPK_SQL),
     ("knn_graph", llm.knn_graph, llm.KNN_GRAPH_SQL),
     ("packing_efficiency", llm.packing_efficiency, llm.PACKING_EFFICIENCY_SQL),
@@ -274,7 +229,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("simhash_dup_pairs", llm.simhash_dup_pairs, llm.SIMHASH_DUP_PAIRS_SQL),
     ("chunk_dedup", llm.chunk_dedup, llm.CHUNK_DEDUP_SQL),
     ("doc_chunking", llm.doc_chunking, llm.DOC_CHUNKING_SQL),
-    ("doremi_mixture_weights", llm.doremi_mixture_weights, llm.DOREMI_MIXTURE_WEIGHTS_SQL),
     ("semdedup_incremental", llm.semdedup_incremental, llm.SEMDEDUP_INCREMENTAL_SQL),
     ("contrastive_pairs", llm.contrastive_pairs, llm.CONTRASTIVE_PAIRS_SQL),
     ("minhash_band_sweep", llm.minhash_band_sweep, llm.MINHASH_BAND_SWEEP_SQL),
@@ -353,7 +307,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("keyvalue_export", swa.keyvalue_export, swa.KEYVALUE_EXPORT_SQL),
     ("multimodal_metadata", llm.multimodal_metadata, llm.MULTIMODAL_METADATA_SQL),
     ("dedup_incremental", llm.dedup_incremental, llm.DEDUP_INCREMENTAL_SQL),
-    ("training_corpus_final", llm.training_corpus_final, llm.TRAINING_CORPUS_FINAL_SQL),
     ("props_json_extract", advanced.props_json_extract, advanced.PROPS_JSON_EXTRACT_SQL),
     ("asof_last_event_value", advanced.asof_last_event_value, advanced.ASOF_LAST_EVENT_VALUE_SQL),
     ("value_percentiles", advanced.value_percentiles, advanced.VALUE_PERCENTILES_SQL),
@@ -368,9 +321,9 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
 #: served query → its `cacheutil.serve_once` entry. Each gets a
 #: registered ``<query>_build`` twin (VERDICT r10 #1 — the bench must
 #: charge serve-once builds): the same rows and oracle, built on
-#: every call because the twin bypasses that one entry. Twins of
-#: DataFrame entries return the lazy build plan, which keeps it
-#: under the registry-wide plan audits.
+#: every call because the twin bypasses that one entry. The twins
+#: keep the builds under the registry-wide plan audits, which record
+#: what a bypassed build materializes (`cacheutil.recording`).
 SERVE_ONCE_TWINS: dict[str, str] = {
     "dedup_corpus_final": "dedup_cc",
     "user_id_normalization": "equiv_map",
@@ -396,39 +349,6 @@ _ENTRIES[:0] = [
 ]
 
 QUERIES: dict[str, QueryFn] = {name: fn for name, fn, _ in _ENTRIES}
-
-#: name → callable returning the UNEXECUTED per-round plan frames of
-#: iterative operators whose registered frame is a union of
-#: localCheckpoint-ed results (so the registry-wide scale audit in
-#: `tests/test_tpch.py` would otherwise inspect a plan whose real
-#: per-round work already executed and vanished — VERDICT r5 #3).
-#: Every iterative/checkpoint-built operator MUST register here.
-AUDIT_PLAN_HOOKS: dict[str, Callable[[SparkSession, str], list[DataFrame]]] = {
-    "quality_logit_train": llm.quality_logit_train_audit_plans,
-    "doremi_mixture_weights": llm.doremi_mixture_weights_audit_plans,
-    "mmr_select": llm.mmr_select_audit_plans,
-    "kcenter_select": llm.kcenter_select_audit_plans,
-    "markov_attribution": advanced.markov_attribution_audit_plans,
-    "kcore_knn_graph": llm.kcore_knn_graph_audit_plans,
-    "hits_knn_graph": llm.hits_knn_graph_audit_plans,
-    "quality_logit_holdout_eval": llm.quality_logit_holdout_eval_audit_plans,
-    # r10 (optimization): the dedup verdict table and the equiv-graph
-    # user-ID mapping are now served from once-per-corpus caches
-    # (localCheckpoint scans), so their build plans — the banded-LSH
-    # pair join / equiv-edge derivation + one CC round each — are
-    # exposed unexecuted here.
-    "dedup_corpus_final": llm.dedup_corpus_final_audit_plans,
-    "user_id_normalization": swa.user_id_normalization_audit_plans,
-    # r11: the kNN build twin's registered frame is a checkpoint scan
-    # (the build checkpoints itself), so its banded-LSH build plan is
-    # exposed unexecuted here; the other twins return lazy builds.
-    "knn_graph_build": llm.knn_graph_build_audit_plans,
-    # r10 (VERDICT r9 #1): static audit twins for EVERY streaming
-    # query — the streamed transformation chains rebuilt over the
-    # static tables through the same plan-builder code, unexecuted,
-    # so the registry-wide plan audits sweep them like batch plans.
-    **speed.STREAMING_AUDIT_PLANS,
-}
 
 #: name → DuckDB SQL; None ⇒ not SQL-expressible / approximate →
 #: the driver records a rows-only check.

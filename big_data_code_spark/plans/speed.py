@@ -21,6 +21,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cacheutil import materialize
 from ..functions.timebuckets import epoch_us, us_to_ts
 from ..sources.tables import load_table, staging_dir
 from ..streaming import speed_layer as sl
@@ -785,7 +786,7 @@ def streaming_ingest_dedup(
     # callers can hold it as long as they like (ADVICE r3: a later
     # invocation's pruning used to vanish an earlier caller's
     # unread result).
-    result = spark.read.parquet(sink).localCheckpoint(eager=True)
+    result = materialize(spark.read.parquet(sink))
     shutil.rmtree(sink, ignore_errors=True)
     return result
 
@@ -926,11 +927,10 @@ def streaming_heavy_hitters_cms(
     )
     q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
     q.awaitTermination()
-    cells = (
+    cells = materialize(
         spark.read.parquet(sink)
         .groupBy("i", "bucket")
         .agg(F.sum("cell").cast("long").alias("cell"))
-        .localCheckpoint(eager=True)
     )
     shutil.rmtree(sink, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
@@ -1056,7 +1056,7 @@ def streaming_scd2_customers(
     )
     q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
     q.awaitTermination()
-    result = read_store(spark, store).localCheckpoint(eager=True)
+    result = materialize(read_store(spark, store))
     shutil.rmtree(store, ignore_errors=True)
     return result
 
@@ -1280,7 +1280,7 @@ def streaming_ngram_novelty(
         .start()
     )
     q.awaitTermination()
-    result = spark.read.parquet(sink).localCheckpoint(eager=True)
+    result = materialize(spark.read.parquet(sink))
     shutil.rmtree(sink, ignore_errors=True)
     return result
 
@@ -1396,9 +1396,7 @@ def streaming_psi_monitor(
         # checkpoint the sink before the grid self-join (memory-sink
         # views share attribute ids — a direct self-join fails
         # analysis)
-        counts = sl.run_stream_to_table(
-            monitored_agg(stream), "complete"
-        ).localCheckpoint(eager=True)
+        counts = materialize(sl.run_stream_to_table(monitored_agg(stream), "complete"))
     days = counts.select("day").distinct()
     bins = spark.range(EV_PSI_N_BINS).select(F.col("id").cast("long").alias("bin"))
     grid = days.crossJoin(F.broadcast(bins))
@@ -1537,9 +1535,7 @@ def streaming_cusum_monitor(
         counts = monitored_agg(_static_events(spark, sf_dir))
     else:
         stream = sl.events_file_stream(spark, _events_src(sf_dir))
-        counts = sl.run_stream_to_table(
-            monitored_agg(stream), "complete"
-        ).localCheckpoint(eager=True)
+        counts = materialize(sl.run_stream_to_table(monitored_agg(stream), "complete"))
     z = (
         "(n_events - s1 / CAST(n_days AS DOUBLE))"
         " / nullif(sqrt(s2 / CAST(n_days AS DOUBLE)"
@@ -1750,7 +1746,7 @@ def streaming_kmv_uniques(
     stream = sl.events_file_stream(spark, src, max_files_per_trigger=1)
     q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
     q.awaitTermination()
-    partials = spark.read.parquet(sink).localCheckpoint(eager=True)
+    partials = materialize(spark.read.parquet(sink))
     shutil.rmtree(sink, ignore_errors=True)
     return _kmv_serve(spark, partials, exact)
 
@@ -1799,10 +1795,10 @@ STREAMING_KMV_UNIQUES_SQL = _streaming_kmv_sql()
 #: branches above), and returns it UNEXECUTED so the registry-wide
 #: plan audits in `tests/test_tpch.py` sweep the streamed frames'
 #: shapes — cartesian/row-UDF/corpus-grain-sort regressions inside a
-#: streaming plan now fail CI like any batch plan. `registry.py`
-#: merges this into AUDIT_PLAN_HOOKS; the audit tests additionally
-#: assert every `streaming_*` registry entry appears here, so a new
-#: streaming query cannot ship unaudited.
+#: streaming plan now fail CI like any batch plan. The audit tests
+#: sweep these in place of the streaming entries and assert every
+#: `streaming_*` registry entry appears here, so a new streaming
+#: query cannot ship unaudited.
 def _static_twin(fn):
     def hook(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
         return [fn(spark, sf_dir, _static=True)]

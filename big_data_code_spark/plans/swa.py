@@ -543,18 +543,6 @@ def user_id_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     return serve_once(spark, "equiv_map", sf_dir, ("events",), build)
 
 
-def user_id_normalization_audit_plans(spark: SparkSession, sf_dir: str):
-    """Audit hook (`dedup_corpus_final_audit_plans` convention): the
-    registered frame is a localCheckpoint scan and the CC fixed point
-    executes-and-vanishes at build time, so expose the UNEXECUTED
-    equiv-edge derivation and one representative CC propagate+jump
-    round over un-checkpointed inputs."""
-    from ..operators.graph import cc_audit_plans
-
-    edges = _equiv_edges(spark, sf_dir)
-    return [edges, *cc_audit_plans(edges, "src", "dst")]
-
-
 USER_ID_NORMALIZATION_SQL = (
     "WITH RECURSIVE " + EQUIV_EDGES_CTE + "SELECT user_id, canonical_id FROM mapping"
 )

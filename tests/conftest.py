@@ -45,6 +45,22 @@ def sf_copy(dst, table: str, keep) -> str:
     return str(dst)
 
 
+def recorded_plans(spark, name: str, sf_dir: str = SF_SMOKE) -> list[str]:
+    """Physical plans registry entry ``name`` materializes while it
+    runs (`cacheutil.recording`)."""
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans.registry import QUERIES
+
+    with cacheutil.recording() as plans:
+        QUERIES[name](spark, sf_dir)
+    return plans
+
+
+def has_cc_round(plans: list[str]) -> bool:
+    """One of ``plans`` is a `graph._cc_round` propagate+jump round."""
+    return any("nmin#" in p and "old_label#" in p for p in plans)
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

@@ -618,6 +618,61 @@ def test_registry_prefix_and_oracle_invariants():
     assert all(ORACLES[n] for n in names[:50])
 
 
+def test_materialize_records_only_inside_recording(spark):
+    """`cacheutil.materialize` appends exactly one pre-execution plan
+    per call inside `recording()`, keeps nothing outside it, resets
+    the recorder when the block raises, and a non-bypassed
+    serve-once miss records nothing while its bypassed twin records
+    the build."""
+    from big_data_code_spark import cacheutil
+
+    frame = spark.range(40).groupBy((F.col("id") % 4).alias("k")).count()
+    with cacheutil.recording() as plans:
+        out = cacheutil.materialize(frame)
+    assert len(plans) == 1 and "HashAggregate" in plans[0]
+    assert "isFinalPlan=false" in plans[0]  # recorded before it ran
+    assert "Scan ExistingRDD" in out._jdf.queryExecution().executedPlan().toString()
+
+    cacheutil.materialize(frame)
+    assert cacheutil._RECORDED is None and len(plans) == 1
+    with pytest.raises(RuntimeError), cacheutil.recording():
+        raise RuntimeError
+    assert cacheutil._RECORDED is None
+
+    def build():
+        return cacheutil.materialize(frame)
+
+    name = "recorder_probe"
+    try:
+        with cacheutil.recording() as served:
+            cacheutil.serve_once(spark, name, SF_SMOKE, ("region",), build)
+        assert served == [] and cacheutil.STATS[name]["misses"] == 1
+        with cacheutil.recording() as twin, cacheutil.bypass(name):
+            cacheutil.serve_once(spark, name, SF_SMOKE, ("region",), build)
+        assert len(twin) == 1 and "HashAggregate" in twin[0]
+    finally:
+        for k in [k for k in cacheutil._STORE if k[1] == name]:
+            del cacheutil._STORE[k]
+        cacheutil.STATS.pop(name, None)
+
+
+def test_materialize_is_the_only_checkpoint():
+    """Every eager checkpoint in the package goes through
+    `cacheutil.materialize`, so the plan audits record all of them."""
+    import pathlib
+
+    import big_data_code_spark
+
+    root = pathlib.Path(big_data_code_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line
+    ]
+    assert len(hits) == 1 and hits[0].startswith("cacheutil.py:"), hits
+
+
 def test_bench_covers_every_registry_query():
     """The bench rows are the registry minus written exclusions
     (VERDICT r4 #5): every exclusion names a registered query and

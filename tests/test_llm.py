@@ -661,13 +661,16 @@ def test_dedup_cc_cache_serves_identical_verdicts(spark):
     """The `dedup_cc` serve-once entry: repeat calls serve the SAME
     checkpoint-truncated frame (one LSH+CC build per corpus and
     session), the cached rows are bit-identical to a fresh un-cached
-    build, and the truncated plan keeps its LSH+CC build under the
-    CI scale audits through the registered hook."""
+    build, and the build twin keeps the LSH+CC build under the CI
+    scale audits: its recorded plans hold the banded-LSH pair join
+    and a CC round."""
+    import re
+
     from big_data_code_spark.plans.llm import (
         _dedup_corpus_final_build,
         dedup_corpus_final,
     )
-    from big_data_code_spark.plans.registry import AUDIT_PLAN_HOOKS
+    from tests.conftest import has_cc_round, recorded_plans
 
     first = dedup_corpus_final(spark, SF_SMOKE)
     assert dedup_corpus_final(spark, SF_SMOKE) is first
@@ -678,7 +681,9 @@ def test_dedup_cc_cache_serves_identical_verdicts(spark):
         key=lambda r: r["doc_id"],
     )
     assert cached == fresh
-    assert "dedup_corpus_final" in AUDIT_PLAN_HOOKS
+    plans = recorded_plans(spark, "dedup_corpus_final_build")
+    assert any(re.search(r"Join \[bk#\d+\], \[bk#\d+\]", p) for p in plans)
+    assert has_cc_round(plans)
 
 
 def test_build_twins_bypass_result_caches(spark):
@@ -711,19 +716,17 @@ def test_serve_once_families(spark):
     same rows; a second served call is a hit (for a DataFrame entry
     it starts no Spark job and is the stored checkpoint scan; for an
     index entry it starts fewer jobs than the twin, which skips the
-    store); the audit hooks that expose the checkpointed builds stay
-    registered."""
+    store). The kNN build twin's recorded plans keep its symmetric
+    top-k window under the CI scale audits."""
     import copy
     import os
+    import re
 
     from pyspark.sql import DataFrame
 
     from big_data_code_spark import cacheutil
-    from big_data_code_spark.plans.registry import (
-        AUDIT_PLAN_HOOKS,
-        QUERIES,
-        SERVE_ONCE_TWINS,
-    )
+    from big_data_code_spark.plans.registry import QUERIES, SERVE_ONCE_TWINS
+    from tests.conftest import recorded_plans
 
     st = spark.sparkContext.statusTracker()
 
@@ -759,9 +762,8 @@ def test_serve_once_families(spark):
             assert "Scan ExistingRDD" in physical_plan(again)
         else:
             assert jobs < twin_jobs, (served, jobs, twin_jobs)
-    assert {"dedup_corpus_final", "user_id_normalization", "knn_graph_build"} <= set(
-        AUDIT_PLAN_HOOKS
-    )
+    topk = r"Window \[row_number\(\) windowspecdefinition\(src#\d+L?, cos#\d+ DESC"
+    assert any(re.search(topk, p) for p in recorded_plans(spark, "knn_graph_build"))
 
 
 def test_serve_once_misses_after_source_rewrite(spark, tmp_path):

@@ -160,12 +160,11 @@ def test_equiv_map_cache_serves_identical_mapping(spark):
     """The `equiv_map` serve-once entry: repeat calls serve the SAME
     checkpoint-truncated frame (one CC per events corpus and
     session), the cached rows are bit-identical to a fresh un-cached
-    CC over the same edges, and the build stays under the CI scale
-    audits through the registered hook."""
-    from tests.conftest import SF_SMOKE
+    CC over the same edges, and the build twin keeps the CC under
+    the CI scale audits: its recorded plans hold a CC round."""
+    from tests.conftest import SF_SMOKE, has_cc_round, recorded_plans
 
     from big_data_code_spark.operators.graph import connected_components
-    from big_data_code_spark.plans.registry import AUDIT_PLAN_HOOKS
     from big_data_code_spark.plans.swa import _equiv_edges, user_id_normalization
 
     first = user_id_normalization(spark, SF_SMOKE)
@@ -182,7 +181,7 @@ def test_equiv_map_cache_serves_identical_mapping(spark):
         key=lambda r: r["user_id"],
     )
     assert cached == fresh
-    assert "user_id_normalization" in AUDIT_PLAN_HOOKS
+    assert has_cc_round(recorded_plans(spark, "user_id_normalization_build"))
 
 
 def test_user_id_normalization_incremental_equals_full_rebuild(spark):

@@ -176,17 +176,17 @@ BNLJ_ALLOWED = {
                                  # broadcast — insert re-keying so
                                  # inserted keys stay disjoint at
                                  # every SF
-    "quality_logit_train",       # r6 audit hook: one-row weight
-                                 # vector broadcast per GD round —
-                                 # the pre-checkpoint round-step plan
-                                 # exposed via AUDIT_PLAN_HOOKS
+    "quality_logit_train",       # r6: one-row weight vector
+                                 # broadcast per GD round — the
+                                 # recorded pre-checkpoint round-step
+                                 # plan
     "dsir_importance_sample",    # r6 w2: single-row (N_raw, N_target)
                                  # LM normalizing-constants broadcast
                                  # (the unigram_logprob shape)
     "doremi_mixture_weights",    # r7 w2: one-row vocab/z/normalizer
                                  # scalars broadcast per EG round —
-                                 # the pre-checkpoint round-step plan
-                                 # exposed via AUDIT_PLAN_HOOKS
+                                 # the recorded pre-checkpoint
+                                 # round-step plan
     "quality_ablation_report",   # r7 w2: one-row doc-count total
                                  # broadcast for the rate columns
     "chunk_bm25_search",         # r7 w2: single-row (n_chunks,
@@ -203,8 +203,7 @@ BNLJ_ALLOWED = {
                                  # replacement for a global NTILE
     "mmr_select",                # r7 w3: one-row anchor vector +
                                  # one-row per-round pick broadcasts
-                                 # (pre-checkpoint plans exposed via
-                                 # AUDIT_PLAN_HOOKS)
+                                 # (recorded pre-checkpoint plans)
     "kcenter_select",            # r7 w3: same greedy-selection
                                  # shape as mmr_select
     "term_pmi_pairs",            # r7 w3: one-row (n_tok, n_pairs)
@@ -291,17 +290,34 @@ BNLJ_ALLOWED = {
 }
 
 
-def test_no_unintended_scale_red_flags_in_any_plan(spark):
-    """Sweep EVERY batch registry plan for operators that do not
-    survive 100 TB: cartesian products, nested-loop joins outside
-    the allowlist, and Python row UDFs anywhere.
+def _audited_plans(spark):
+    """(name, physical plans) for every registry entry. A batch entry
+    is audited as the plan it returns plus every plan it materialized
+    while it ran (`cacheutil.recording`): an iterative operator's
+    rounds execute and vanish behind checkpoints before the returned
+    frame exists. Calling a streaming entry would EXECUTE its stream,
+    so it is audited through its static twin in
+    `speed.STREAMING_AUDIT_PLANS`, which every streaming entry MUST
+    have."""
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans.registry import QUERIES
+    from big_data_code_spark.plans.speed import STREAMING_AUDIT_PLANS
 
-    r6: iterative operators that return unions of localCheckpoint-ed
-    results (whose real per-round plans execute and vanish before
-    this audit sees the returned frame) expose their UNEXECUTED
-    round-step plans via `AUDIT_PLAN_HOOKS` — swept here with the
-    same rules, so no executed plan shape escapes the audit."""
-    from big_data_code_spark.plans.registry import AUDIT_PLAN_HOOKS, QUERIES
+    for name, fn in QUERIES.items():
+        if name.startswith("streaming_"):
+            assert name in STREAMING_AUDIT_PLANS, f"{name}: no audit twin"
+            frames = STREAMING_AUDIT_PLANS[name](spark, SF_SMOKE)
+            yield name, [physical_plan(df) for df in frames]
+            continue
+        with cacheutil.recording() as recorded:
+            df = fn(spark, SF_SMOKE)
+        yield name, [physical_plan(df), *recorded]
+
+
+def test_no_unintended_scale_red_flags_in_any_plan(spark):
+    """Sweep EVERY registry plan for operators that do not survive
+    100 TB: cartesian products, nested-loop joins outside the
+    allowlist, and Python row UDFs anywhere."""
 
     def flags(name, plan):
         bad = []
@@ -314,24 +330,11 @@ def test_no_unintended_scale_red_flags_in_any_plan(spark):
         return bad
 
     offenders = {}
-    for name, fn in QUERIES.items():
-        if name.startswith("streaming_"):
-            # calling a streaming query EXECUTES its stream; its
-            # transformation surface is audited via the static twin
-            # in AUDIT_PLAN_HOOKS below — and every streaming entry
-            # MUST have one (r10: no unaudited streaming plans).
-            assert name in AUDIT_PLAN_HOOKS, f"{name}: no audit twin"
-            continue
-        plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        bad = flags(name, plan)
-        if bad:
-            offenders[name] = bad
-    for name, hook in AUDIT_PLAN_HOOKS.items():
-        for i, df in enumerate(hook(spark, SF_SMOKE)):
-            plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, plans in _audited_plans(spark):
+        for i, plan in enumerate(plans):
             bad = flags(name, plan)
             if bad:
-                offenders[f"{name}#hook{i}"] = bad
+                offenders[f"{name}#plan{i}"] = bad
     assert not offenders, offenders
 
 
@@ -453,29 +456,16 @@ def _window_flags(plan: str) -> list[str]:
 
 
 def test_no_corpus_grain_window_sorts(spark):
-    """Sweep every batch registry plan (+ the iterative operators'
-    unexecuted round plans) for corpus-grain window sorts; offenders
-    must be two-pass-rank rewrites or justified in
-    WINDOW_SORT_ALLOWED — and the allowlist must stay exact."""
-    from big_data_code_spark.plans.registry import AUDIT_PLAN_HOOKS, QUERIES
-
+    """Sweep every registry plan (`_audited_plans`) for corpus-grain
+    window sorts; offenders must be two-pass-rank rewrites or
+    justified in WINDOW_SORT_ALLOWED — and the allowlist must stay
+    exact."""
     offenders: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
-        if name.startswith("streaming_"):
-            # audited via the static twin in AUDIT_PLAN_HOOKS (r10)
-            assert name in AUDIT_PLAN_HOOKS, f"{name}: no audit twin"
-            continue
-        plan = physical_plan(fn(spark, SF_SMOKE))
-        bad = _window_flags(plan)
-        if bad:
-            offenders[name] = bad
-    for name, hook in AUDIT_PLAN_HOOKS.items():
-        for i, df in enumerate(hook(spark, SF_SMOKE)):
-            bad = _window_flags(physical_plan(df))
+    for name, plans in _audited_plans(spark):
+        for i, plan in enumerate(plans):
+            bad = _window_flags(plan)
             if bad:
-                offenders.setdefault(name, []).extend(
-                    f"hook{i}:{b}" for b in bad
-                )
+                offenders.setdefault(name, []).extend(f"plan{i}:{b}" for b in bad)
     unexplained = {
         k: v for k, v in offenders.items() if k not in WINDOW_SORT_ALLOWED
     }

@@ -141,7 +141,7 @@ def main() -> None:
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
-    from big_data_code_spark.cacheutil import release_persisted
+    from big_data_code_spark.cacheutil import STATS, release_persisted
 
     n_pass = n_fail = n_noracle = 0
     for name in names:
@@ -168,6 +168,8 @@ def main() -> None:
             print(f"ERROR     {name}:")
             traceback.print_exc()
     print(f"\n{n_pass} pass / {n_fail} fail / {n_noracle} no-oracle of {len(names)}")
+    for entry, st in sorted(STATS.items()):
+        print(f"serve-once {entry}: hits={st['hits']} misses={st['misses']} build_s={st['build_s']:.1f}")
     sys.exit(1 if n_fail else 0)
 
 
