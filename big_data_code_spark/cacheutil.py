@@ -33,18 +33,29 @@ changes — the batch layer's rule. `serve_once` is the one store:
 it without reading or writing the entry or `STATS` — the registry's
 ``*_build`` twins, which charge the build to every call.
 
-Materialized frames. `materialize(df)` is the package's one eager
-local checkpoint: an iterative operator's round, a de-duplicated
-edge list, a serve-once value. A checkpoint truncates the frame's
+Recorded plans. `materialize(df)` is the package's one eager local
+checkpoint: an iterative operator's round, a de-duplicated edge
+list, a serve-once value. A checkpoint truncates the frame's
 lineage, so the plan a query returns no longer shows the work that
-built it. Inside a `recording()` block (the registry-wide
-plan audits in the tests) `materialize` first appends the frame's
-pre-execution physical plan, the same lazily-planned value the
-checkpoint then executes, so a query is audited as its returned plan
-plus every plan it materialized on the way. A non-bypassed
-`serve_once` miss builds with recording paused, so what a query
-records never depends on what the store already held; each
-serve-once build is audited through its ``*_build`` twin instead.
+built it, and a stream's plan never shows in the frame it returns.
+Inside a `recording()` block (the registry-wide plan audits in the
+tests) `record` appends a physical plan at the three places work
+runs out of sight:
+
+- `materialize` appends the frame's pre-execution plan, the same
+  lazily-planned value the checkpoint then executes;
+- `streaming.speed_layer.run_stream_to_table` appends the stream's
+  last executed plan, stateful operators included, after the
+  stream has run;
+- `streaming.speed_layer.run_foreach_batch` appends each
+  micro-batch's frame before writing it.
+
+So a query is audited as its returned plan plus every plan it
+recorded on the way. Outside `recording()` the cost is one ``is
+None`` check. A non-bypassed `serve_once` miss builds with
+recording paused, so what a query records never depends on what the
+store already held; each serve-once build is audited through its
+``*_build`` twin instead.
 """
 
 from __future__ import annotations
@@ -85,11 +96,18 @@ def release_persisted() -> int:
     return n
 
 
+def record(plan: Callable[[], object]) -> None:
+    """Inside `recording()`, append the string of the JVM physical
+    plan ``plan()`` returns (None: nothing ran, nothing is kept);
+    outside, ``plan`` is never called."""
+    if _RECORDED is not None and (p := plan()) is not None:
+        _RECORDED.append(p.toString())
+
+
 def materialize(df: DataFrame) -> DataFrame:
     """``df`` executed once and truncated to a scan of its rows (see
     the module docstring)."""
-    if _RECORDED is not None:
-        _RECORDED.append(df._jdf.queryExecution().executedPlan().toString())
+    record(lambda: df._jdf.queryExecution().executedPlan())
     return df.localCheckpoint(eager=True)
 
 
@@ -104,8 +122,8 @@ def _record_into(plans: list[str] | None) -> Iterator[list[str] | None]:
 
 
 def recording() -> AbstractContextManager[list[str]]:
-    """Within the block, every `materialize` call appends the
-    physical plan it is about to execute to the yielded list."""
+    """Within the block, every `record` call (see the module
+    docstring) appends its physical plan to the yielded list."""
     return _record_into([])
 
 

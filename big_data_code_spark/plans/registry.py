@@ -32,13 +32,20 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 #: (name, callable, oracle SQL | None), in driver-sample order.
 #: Positions 1-6 are the ``*_build`` twins, prepended from
-#: SERVE_ONCE_TWINS below; 7-31 are the 25 entries listed first here.
+#: SERVE_ONCE_TWINS below; 7-36 are the 30 entries listed first here.
 _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
-    # -- 7-9: rewritten in r11, never in a driver sample
+    # -- 7-11: the foreachBatch streams, rewritten onto
+    #    `speed_layer.run_foreach_batch`
+    ("streaming_kmv_uniques", speed.streaming_kmv_uniques, speed.STREAMING_KMV_UNIQUES_SQL),
+    ("streaming_ingest_dedup", speed.streaming_ingest_dedup, llm.DEDUP_INCREMENTAL_SQL),
+    ("streaming_scd2_customers", speed.streaming_scd2_customers, speed.STREAMING_SCD2_CUSTOMERS_SQL),
+    ("streaming_heavy_hitters_cms", speed.streaming_heavy_hitters_cms, llm.HEAVY_HITTERS_CMS_SQL),
+    ("streaming_ngram_novelty", speed.streaming_ngram_novelty, llm.STREAMING_NGRAM_NOVELTY_SQL),
+    # -- 12-14: rewritten in r11, never in a driver sample
     ("doremi_mixture_weights", llm.doremi_mixture_weights, llm.DOREMI_MIXTURE_WEIGHTS_SQL),
     ("quality_logit_train", llm.quality_logit_train, llm.QUALITY_LOGIT_TRAIN_SQL),
     ("quality_logit_holdout_eval", llm.quality_logit_holdout_eval, llm.QUALITY_LOGIT_HOLDOUT_EVAL_SQL),
-    # -- 10-22: pushed past the 50-entry window by the r10 prefix
+    # -- 15-27: pushed past the 50-entry window by the r10 prefix
     ("ann_recall_eval", llm.ann_recall_eval, llm.ANN_RECALL_EVAL_SQL),
     ("tfidf_cosine_pairs", llm.tfidf_cosine_pairs, llm.TFIDF_COSINE_PAIRS_SQL),
     ("bm25_search", llm.bm25_search, llm.BM25_SEARCH_SQL),
@@ -52,7 +59,7 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("zorder_layout_keys", advanced.zorder_layout_keys, advanced.ZORDER_LAYOUT_KEYS_SQL),
     ("top_users_by_event_type", tpch.top_users_by_event_type, tpch.TOP_USERS_SQL),
     ("lambda_merged_uniques_hll", speed.lambda_merged_uniques_hll, speed.LAMBDA_MERGED_UNIQUES_SQL),
-    # -- 23-31: the other queries whose materialized frames the
+    # -- 28-36: the other queries whose materialized frames the
     #    plan audits now record
     ("mmr_select", llm.mmr_select, llm.MMR_SELECT_SQL),
     ("kcenter_select", llm.kcenter_select, llm.KCENTER_SELECT_SQL),
@@ -63,10 +70,9 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("dedup_semantic_final", llm.dedup_semantic_final, llm.DEDUP_SEMANTIC_FINAL_SQL),
     ("training_corpus_final", llm.training_corpus_final, llm.TRAINING_CORPUS_FINAL_SQL),
     ("user_id_normalization_incremental", swa.user_id_normalization_incremental, swa.USER_ID_NORMALIZATION_INCREMENTAL_SQL),
-    # -- 32+: every other entry, in its prior relative order
+    # -- 37+: every other entry, in its prior relative order
     ("holt_backtest_model_select", advanced.holt_backtest_model_select, advanced.HOLT_BACKTEST_MODEL_SELECT_SQL),
     ("dedup_weighted_sample", llm.dedup_weighted_sample, llm.DEDUP_WEIGHTED_SAMPLE_SQL),
-    ("streaming_kmv_uniques", speed.streaming_kmv_uniques, speed.STREAMING_KMV_UNIQUES_SQL),
     ("perplexity_band_prune", llm.perplexity_band_prune, llm.PERPLEXITY_BAND_PRUNE_SQL),
     ("survival_km_ship_lag", advanced.survival_km_ship_lag, advanced.SURVIVAL_KM_SHIP_LAG_SQL),
     ("uniques_weekly_kmv_union", llm.uniques_weekly_kmv_union, llm.UNIQUES_WEEKLY_KMV_UNION_SQL),
@@ -86,18 +92,14 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("uniques_over_time_normalized", swa.uniques_over_time_normalized, swa.UNIQUES_NORMALIZED_SQL),
     ("cross_device_sessions", advanced.cross_device_sessions, advanced.CROSS_DEVICE_SESSIONS_SQL),
     ("streaming_top_pages_hourly", speed.streaming_top_pages_hourly, speed.STREAMING_TOP_PAGES_SQL),
-    ("streaming_ingest_dedup", speed.streaming_ingest_dedup, llm.DEDUP_INCREMENTAL_SQL),
     ("streaming_bounce_rate_native", speed.streaming_bounce_rate_native, speed.STREAMING_BOUNCE_RATE_NATIVE_SQL),
     ("streaming_funnel_hourly", speed.streaming_funnel_hourly, speed.STREAMING_FUNNEL_HOURLY_SQL),
-    ("streaming_scd2_customers", speed.streaming_scd2_customers, speed.STREAMING_SCD2_CUSTOMERS_SQL),
-    ("streaming_heavy_hitters_cms", speed.streaming_heavy_hitters_cms, llm.HEAVY_HITTERS_CMS_SQL),
     ("streaming_pageviews_hourly", speed.streaming_pageviews_hourly, speed.STREAMING_PAGEVIEWS_HOURLY_SQL),
     ("streaming_sessions", speed.streaming_sessions, speed.STREAMING_SESSIONS_SQL),
     ("streaming_view_attribution", speed.streaming_view_attribution, speed.STREAMING_VIEW_ATTRIBUTION_SQL),
     ("streaming_enriched_counts", speed.streaming_enriched_counts, speed.STREAMING_ENRICHED_COUNTS_SQL),
     ("streaming_uniques_hourly_hll", speed.streaming_uniques_hourly_hll, speed.STREAMING_UNIQUES_HLL_SQL),
     ("streaming_bounce_rate", speed.streaming_bounce_rate, speed.STREAMING_BOUNCE_RATE_SQL),
-    ("streaming_ngram_novelty", speed.streaming_ngram_novelty, llm.STREAMING_NGRAM_NOVELTY_SQL),
     ("streaming_cusum_monitor", speed.streaming_cusum_monitor, speed.STREAMING_CUSUM_MONITOR_SQL),
     ("streaming_psi_monitor", speed.streaming_psi_monitor, speed.STREAMING_PSI_MONITOR_SQL),
     ("dedup_cluster_stats", llm.dedup_cluster_stats, llm.DEDUP_CLUSTER_STATS_SQL),

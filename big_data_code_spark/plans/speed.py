@@ -8,13 +8,18 @@ complete-mode windowed count over a bounded stream must equal the
 batch hourly aggregation. The HLL and stateful-session jobs are
 approximate / timeout-dependent → rows-only checks, with exact
 semantics asserted in `tests/test_streaming.py`.
+
+Plan audits call these queries like any other: every stream runs
+through `sl.run_stream_to_table` or `sl.run_foreach_batch`, which
+record what they executed into `cacheutil.recording()` (the
+stream's last plan with its stateful operators; each micro-batch's
+written frame), so the audited plans are the ones the streams run.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 from collections.abc import Callable, Iterable
 
@@ -25,23 +30,6 @@ from ..cacheutil import materialize
 from ..functions.timebuckets import epoch_us, us_to_ts
 from ..sources.tables import load_table, staging_dir
 from ..streaming import speed_layer as sl
-
-
-def _static_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Static twin of `sl.events_file_stream`'s output frame: same
-    4 columns, same LTZ timestamp (the stream applies ntz_to_ltz;
-    session tz is UTC, so a plain cast is the identical value).
-    Feeding this through the SAME transform functions the streaming
-    queries use yields their batch-equivalent plans — what the
-    registry-wide CI plan audits sweep via `STREAMING_AUDIT_PLANS`
-    (watermarks are no-ops in batch; every stream op here except
-    `applyInPandasWithState` is batch-executable, verified r10)."""
-    return load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        "user_id",
-        "event_type",
-    )
 
 
 def _events_src(sf_dir: str) -> str:
@@ -90,21 +78,12 @@ def _staged_chunks(
     return out_dir
 
 
-def streaming_pageviews_hourly(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_pageviews_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream → 1h event-time window count, complete mode.
 
     ≙ `TridentSpeedLayer.pageviewsOverTime`; equals the batch
     hourly rollup on a bounded stream.
-
-    ``_static=True`` (audit mode, r10): build the SAME transform
-    over `_static_events` and return it unexecuted — the CI plan
-    audits sweep this twin so the streamed frame's shape can never
-    regress unseen.
     """
-    if _static:
-        return sl.pageviews_over_time_stream(_static_events(spark, sf_dir))
     stream = sl.events_file_stream(spark, _events_src(sf_dir))
     agg = sl.pageviews_over_time_stream(stream)
     return sl.run_stream_to_table(agg, "complete")
@@ -119,9 +98,7 @@ GROUP BY 1, 2
 """
 
 
-def streaming_uniques_hourly_hll(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_uniques_hourly_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream → 1h window HLL-sketch uniques (lgK=14), made
     oracle-checkable via a tolerance contract: the streamed
     estimates are joined to the exact batch distinct counts and the
@@ -129,14 +106,9 @@ def streaming_uniques_hourly_hll(
     computed in-plan; the oracle restates the exact count and
     asserts ``true``. The serving path is the streamed sketch alone
     (`sl.uniques_over_time_stream`); this query is its accuracy
-    contract. ``_static=True``: the same sketch agg + contract join
-    over `_static_events`, unexecuted, for the CI plan audits."""
-    if _static:
-        est = sl.uniques_over_time_stream(_static_events(spark, sf_dir))
-    else:
-        stream = sl.events_file_stream(spark, _events_src(sf_dir))
-        agg = sl.uniques_over_time_stream(stream)
-        est = sl.run_stream_to_table(agg, "complete")
+    contract."""
+    stream = sl.events_file_stream(spark, _events_src(sf_dir))
+    est = sl.run_stream_to_table(sl.uniques_over_time_stream(stream), "complete")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(
@@ -220,9 +192,7 @@ def _chunked_events_dir(
     return _staged_chunks(sf_dir, "events", f"swa_stream_{n_chunks}{suffix}", frames)
 
 
-def streaming_bounce_rate(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful visit tracking with 30-min event-time timeout over
     deterministic micro-batches, then count+sum per domain.
 
@@ -236,30 +206,7 @@ def streaming_bounce_rate(
     strictly passed last+30 min; visits never split while data keeps
     arriving in adjacent batches). Exact timeout semantics are also
     unit-tested in `tests/test_streaming.py`.
-
-    ``_static=True``: `applyInPandasWithState` cannot execute in a
-    batch query, so the audit twin is the kernel's batch-equivalent
-    — 30-min gap sessionization mapped onto the visit schema — fed
-    through the SAME `sl.bounce_counts` aggregation the streamed
-    path serves from, so both the state-adjacent frames and the
-    kernel's semantics-equivalent plan are swept by CI.
     """
-    if _static:
-        sessions = sl.sessionize_stream(
-            _static_events(spark, sf_dir), gap="30 minutes"
-        )
-        visits = sessions.select(
-            F.col("event_type").alias("domain"),
-            "user_id",
-            F.col("n_events").cast("long").alias("n_views"),
-            (F.col("session_start_us") == F.col("session_last_us")).alias(
-                "is_bounce"
-            ),
-            us_to_ts(F.col("session_start_us"))
-            .cast("timestamp_ntz")
-            .alias("visit_start"),
-        )
-        return sl.bounce_counts(visits)
     src = _chunked_events_dir(spark, sf_dir, flush=True)
     stream = sl.events_file_stream(spark, src, max_files_per_trigger=1)
     visits = sl.visits_stream(stream)
@@ -320,9 +267,7 @@ GROUP BY 1
 """
 
 
-def streaming_bounce_rate_native(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_bounce_rate_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JVM-native streaming bounce rate (r4) — the HEADLINE bounce
     query: native ``session_window`` with the reference's 30-min
     visit gap, bounce ⇔ visit start == last (`AnalyzeVisits`,
@@ -335,17 +280,11 @@ def streaming_bounce_rate_native(
     THIS is the plan a 100 TB deployment runs.
 
     Complete mode on a bounded stream ≡ batch 30-min gap-islands →
-    exact oracle. ``_static=True``: the same session_window chain
-    over `_static_events`, unexecuted, for the CI plan audits.
+    exact oracle.
     """
-    if _static:
-        table = sl.sessionize_stream(
-            _static_events(spark, sf_dir), gap="30 minutes"
-        )
-    else:
-        stream = sl.events_file_stream(spark, _events_src(sf_dir))
-        sessions = sl.sessionize_stream(stream, gap="30 minutes")
-        table = sl.run_stream_to_table(sessions, "complete")
+    stream = sl.events_file_stream(spark, _events_src(sf_dir))
+    sessions = sl.sessionize_stream(stream, gap="30 minutes")
+    table = sl.run_stream_to_table(sessions, "complete")
     return table.groupBy(F.col("event_type").alias("domain")).agg(
         F.count(F.lit(1)).alias("num_visits"),
         F.sum(
@@ -379,9 +318,7 @@ GROUP BY 1
 """
 
 
-def streaming_sessions(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream → native ``session_window`` sessionization
     (15-min gap) per event_type × user. Complete mode on a bounded
     stream ≡ batch gap-islands sessionization → exact oracle.
@@ -389,11 +326,8 @@ def streaming_sessions(
     ≙ the gap rule of `AnalyzeVisits` (`TridentSpeedLayer.java:
     143-235`) without the custom state loop — the built-in operator
     covers the simple case; `streaming_bounce_rate` keeps the
-    custom-timeout variant. ``_static=True``: same chain over
-    `_static_events`, unexecuted, for the CI plan audits.
+    custom-timeout variant.
     """
-    if _static:
-        return sl.sessionize_stream(_static_events(spark, sf_dir))
     stream = sl.events_file_stream(spark, _events_src(sf_dir))
     return sl.run_stream_to_table(sl.sessionize_stream(stream), "complete")
 
@@ -420,17 +354,11 @@ GROUP BY event_type, user_id, sid
 """
 
 
-def streaming_view_attribution(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_view_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join (purchase ⋈ prior views ≤1h, same
     user) in append mode; bounded input ≡ batch interval join →
     exact oracle. State on both sides is watermark-bounded — the
-    100 TB posture for streaming attribution. ``_static=True``:
-    same join chain over `_static_events`, unexecuted, for the CI
-    plan audits."""
-    if _static:
-        return sl.view_purchase_join_stream(_static_events(spark, sf_dir))
+    100 TB posture for streaming attribution."""
     stream = sl.events_file_stream(spark, _events_src(sf_dir))
     return sl.run_stream_to_table(sl.view_purchase_join_stream(stream), "append")
 
@@ -449,9 +377,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'view') v
 """
 
 
-def streaming_funnel_hourly(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_funnel_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hourly view→purchase funnel (r4): the
     three-stateful-operator append chain (interval join →
     watermark-evicted dedup → hourly window agg,
@@ -464,11 +390,8 @@ def streaming_funnel_hourly(
     Scale posture: all three state stores are watermark-bounded
     (join buffers by the interval predicate, dedup keys by p_ts,
     windows close as the watermark passes) — no unbounded state at
-    100 TB/day event rates. ``_static=True``: the same three-stage
-    chain over `_static_events`, unexecuted, for the CI plan audits.
+    100 TB/day event rates.
     """
-    if _static:
-        return sl.funnel_hourly_stream(_static_events(spark, sf_dir))
     # r11 (VERDICT r10 #3): ONE data chunk + the two flush sentinels
     # (3 micro-batches instead of 5). Unlike streaming_bounce_rate —
     # whose oracle restates the 3-chunk split protocol because the
@@ -585,21 +508,14 @@ CATEGORY_MAP = (
 )
 
 
-def streaming_enriched_counts(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast join (event stream ⋈ event_type→
     category dimension) + windowed count per category×hour. On a
     bounded stream the complete-mode result equals the batch join +
-    rollup → exact oracle. ``_static=True``: same join + rollup over
-    `_static_events`, unexecuted, for the CI plan audits."""
+    rollup → exact oracle."""
     categories = spark.createDataFrame(
         list(CATEGORY_MAP), "event_type string, category string"
     )
-    if _static:
-        return sl.enrich_with_static_stream(
-            _static_events(spark, sf_dir), categories
-        )
     stream = sl.events_file_stream(spark, _events_src(sf_dir))
     return sl.run_stream_to_table(
         sl.enrich_with_static_stream(stream, categories), "complete"
@@ -638,24 +554,14 @@ def _chunked_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> st
     return _staged_chunks(sf_dir, "documents", f"swa_docs_stream_{n_chunks}", frames)
 
 
-def _prune_stale_sinks(prefix: str) -> None:
-    """Prune hour-old ephemeral foreachBatch sinks left by DEAD
-    processes (1 h leaves any live concurrent run untouched). The
-    getmtime is guarded: a concurrent run can legally rmtree a dir
-    between our listdir and the stat (TOCTOU — flagged r7 review).
-    """
-    import time as _time
-
-    for d in os.listdir(tempfile.gettempdir()):
-        if not d.startswith(prefix):
-            continue
-        p = os.path.join(tempfile.gettempdir(), d)
-        try:
-            stale = _time.time() - os.path.getmtime(p) > 3600
-        except FileNotFoundError:
-            continue
-        if stale:
-            shutil.rmtree(p, ignore_errors=True)
+def _docs_stream(spark: SparkSession, src: str) -> DataFrame:
+    """(doc_id, text) file stream over a staged chunk dir, one chunk
+    per micro-batch."""
+    return (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 def _ingest_dedup_verdicts(
@@ -664,10 +570,9 @@ def _ingest_dedup_verdicts(
     master_hashes: DataFrame,
     master_sigs: DataFrame,
 ) -> DataFrame:
-    """The per-micro-batch verdict frame of `streaming_ingest_dedup`
-    — module-level so the foreachBatch body and the CI audit twin
-    run the IDENTICAL plan builder (exact md5 semi-join + banded
-    cross-corpus LSH against the precomputed master signatures)."""
+    """The per-micro-batch verdict frame of `streaming_ingest_dedup`:
+    exact md5 semi-join + banded cross-corpus LSH against the
+    precomputed master signatures."""
     from ..operators import dedup as dd
     from .llm import MINHASH_LSH_THRESHOLD
 
@@ -701,9 +606,7 @@ def _ingest_dedup_verdicts(
     )
 
 
-def streaming_ingest_dedup(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming corpus-ingest dedup (r3): documents arrive as
     micro-batches (file stream, 1 file/trigger) and `foreachBatch`
     flags each batch against the STATIC master with the same
@@ -720,8 +623,6 @@ def streaming_ingest_dedup(
     batch-at-once `dedup_incremental`, and its oracle
     (`DEDUP_INCREMENTAL_SQL`) checks this stream hash-exactly.
     """
-    import uuid as _uuid
-
     from pyspark import StorageLevel
 
     from ..cacheutil import track_persisted
@@ -729,21 +630,6 @@ def streaming_ingest_dedup(
     from .llm import _corpus
 
     master = _corpus(spark, sf_dir).where(F.col("doc_id") < 1_000_000)
-    master_hashes = master.select(F.md5("text").alias("h")).distinct()
-    if _static:
-        # audit twin: the IDENTICAL verdict builder applied to the
-        # full static batch side in one shot (per-batch ≡ union of
-        # batches — verdicts depend only on (doc, master)), with the
-        # signature table unpersisted so the hook stays lazy.
-        batch = _corpus(spark, sf_dir).where(F.col("doc_id") >= 1_000_000)
-        return _ingest_dedup_verdicts(
-            batch, master, master_hashes, dd.minhash_signatures(master)
-        )
-    # the sink is ephemeral staging, deleted before this call
-    # returns (the result is localCheckpoint-ed off it — see below),
-    # so no sink list is needed.
-    _prune_stale_sinks("ingest_dedup_")
-
     src = _chunked_docs_dir(spark, sf_dir)
     # "read the master's stored signature table" — computed once,
     # shared by every micro-batch.
@@ -754,61 +640,37 @@ def streaming_ingest_dedup(
     # un-persisted, every micro-batch re-ran the master scan + md5 +
     # distinct shuffle behind the semi-join.
     master_hashes = track_persisted(
-        master_hashes.persist(StorageLevel.MEMORY_AND_DISK)
+        master.select(F.md5("text").alias("h"))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sink = os.path.join(tempfile.gettempdir(), f"ingest_dedup_{_uuid.uuid4().hex[:10]}")
-    # seed the sink with a zero-row file of the verdict schema so
-    # the final read succeeds even if every micro-batch is empty
-    # (ADVICE r3: an all-filtered source wrote no parquet at all).
-    spark.createDataFrame(
-        [], "doc_id long, is_exact_dup boolean, is_near_dup boolean, verdict string"
-    ).write.mode("overwrite").parquet(sink)
-
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        _ingest_dedup_verdicts(
+    return sl.run_foreach_batch(
+        _docs_stream(spark, src),
+        "ingest_dedup_",
+        spark.createDataFrame(
+            [], "doc_id long, is_exact_dup boolean, is_near_dup boolean, verdict string"
+        ),
+        lambda batch_df, _i, _dir: _ingest_dedup_verdicts(
             batch_df, master, master_hashes, master_sigs
-        ).write.mode("append").parquet(sink)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        ),
     )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # snapshot the verdicts OFF the staging dir (eager
-    # localCheckpoint → executor block storage), then delete it:
-    # the returned DataFrame no longer references the sink path, so
-    # callers can hold it as long as they like (ADVICE r3: a later
-    # invocation's pruning used to vanish an earlier caller's
-    # unread result).
-    result = materialize(spark.read.parquet(sink))
-    shutil.rmtree(sink, ignore_errors=True)
-    return result
 
 
-def streaming_top_pages_hourly(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_top_pages_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-hour top-3 pages from the speed layer (r3) — the classic
     Storm/Trident rolling top-N serving view: the complete-mode
     hourly windowed counts (same stream as
     `streaming_pageviews_hourly`) ranked per hour on the bounded
     sink, ties broken on page id. On a bounded stream this equals
-    the batch rank over the hourly rollup → exact oracle.
-    ``_static=True``: the same rank over the static hourly agg,
-    unexecuted, for the CI plan audits (the window partitions by
-    hour_bucket — calendar-bounded keys, never corpus-grain).
+    the batch rank over the hourly rollup → exact oracle. The
+    window partitions by hour_bucket — calendar-bounded keys, never
+    corpus-grain.
 
     Returns (hour_bucket, rank, event_type, n_views).
     """
     from pyspark.sql.window import Window
 
-    table = streaming_pageviews_hourly(spark, sf_dir, _static=_static)
+    table = streaming_pageviews_hourly(spark, sf_dir)
     w = Window.partitionBy("hour_bucket").orderBy(
         F.desc("n_views"), "event_type"
     )
@@ -854,9 +716,7 @@ def _chunked_all_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -
 
 def _cms_partial_cells(batch_df: DataFrame) -> DataFrame:
     """Per-micro-batch partial CMS (4×256 cell sums) of
-    `streaming_heavy_hitters_cms` — module-level so the
-    foreachBatch body and the CI audit twin run the IDENTICAL plan
-    builder."""
+    `streaming_heavy_hitters_cms`."""
     from ..functions.text import tokenize
     from .llm import _cms_explode
 
@@ -868,9 +728,7 @@ def _cms_partial_cells(batch_df: DataFrame) -> DataFrame:
     return _cms_explode(tf).groupBy("i", "bucket").agg(F.sum("n").alias("cell"))
 
 
-def streaming_heavy_hitters_cms(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming count-min sketch (r4): every micro-batch folds its
     term counts into a partial 4×256 sketch appended to the sink;
     the serve step MERGES the partials (cell-wise sum — CMS is a
@@ -887,52 +745,18 @@ def streaming_heavy_hitters_cms(
     Returns (term, est, true_cnt, overcount) — identical contract
     to `heavy_hitters_cms`.
     """
-    import uuid as _uuid
-
     from ..functions.text import tokenize
-    from ..sources.tables import load_table
     from .llm import _cms_explode, _cms_topk
 
-    if _static:
-        # audit twin: the IDENTICAL per-batch sketch builder over
-        # the full static corpus (cell sums are exact BIGINT adds,
-        # so one batch ≡ merged partials) feeding the IDENTICAL
-        # serve step — both plan shapes swept lazily by CI.
-        docs = load_table(spark, sf_dir, "documents")
-        cells = _cms_partial_cells(docs).select(
-            "i", "bucket", F.col("cell").cast("long").alias("cell")
-        )
-        tf_all = (
-            docs.select(F.explode(tokenize(F.col("text"))).alias("term"))
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return _cms_topk(_cms_explode(tf_all), cells)
-
-    src = _chunked_all_docs_dir(spark, sf_dir)
-    sink = os.path.join(
-        tempfile.gettempdir(), f"cms_stream_{_uuid.uuid4().hex[:10]}"
+    partials = sl.run_foreach_batch(
+        _docs_stream(spark, _chunked_all_docs_dir(spark, sf_dir)),
+        "cms_stream_",
+        spark.createDataFrame([], "i int, bucket long, cell long"),
+        lambda batch_df, _i, _dir: _cms_partial_cells(batch_df),
     )
-    spark.createDataFrame([], "i int, bucket long, cell long").write.mode(
-        "overwrite"
-    ).parquet(sink)
-
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        _cms_partial_cells(batch_df).write.mode("append").parquet(sink)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    cells = partials.groupBy("i", "bucket").agg(
+        F.sum("cell").cast("long").alias("cell")
     )
-    q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
-    q.awaitTermination()
-    cells = materialize(
-        spark.read.parquet(sink)
-        .groupBy("i", "bucket")
-        .agg(F.sum("cell").cast("long").alias("cell"))
-    )
-    shutil.rmtree(sink, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     tf_all = (
         docs.select(F.explode(tokenize(F.col("text"))).alias("term"))
@@ -967,9 +791,7 @@ def _chunked_scd2_updates_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def streaming_scd2_customers(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_scd2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING SCD2 dimension maintenance (r4): CDC update
     batches arrive as micro-batches and `foreachBatch` folds each
     into the versioned dimension store with the batch operator
@@ -989,38 +811,13 @@ def streaming_scd2_customers(
     Returns the full dimension: (c_custkey, acctbal, valid_from,
     valid_to, is_current).
     """
-    import uuid as _uuid
-
     from ..operators.cdc import scd2_apply
-    from ..sources.tables import load_table
-    from ..streaming.speed_layer import read_store
 
-    if _static:
-        # audit twin: the IDENTICAL foreachBatch fold (scd2_apply of
-        # one CDC round onto the base dimension), unexecuted — the
-        # plan CI must sweep is the per-batch MERGE, not the store
-        # I/O around it.
-        cust = load_table(spark, sf_dir, "customer")
-        base = cust.select(
-            "c_custkey",
-            F.round("c_acctbal", 2).alias("acctbal"),
-            F.lit(0).cast("long").alias("valid_from"),
-            F.lit(None).cast("long").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-        batch1 = cust.where(F.col("c_custkey") % 5 == 0).select(
-            "c_custkey",
-            F.round(F.col("c_acctbal") + 100.0, 2).alias("acctbal"),
-        )
-        return scd2_apply(
-            base, batch1, "c_custkey", ["acctbal"], SCD2_STREAM_TS0 + 1
-        )
-
-    src = _chunked_scd2_updates_dir(spark, sf_dir)
-    store = os.path.join(
-        tempfile.gettempdir(), f"scd2_store_{_uuid.uuid4().hex[:10]}"
+    stream = (
+        spark.readStream.schema("c_custkey long, acctbal double, batch_ts long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_chunked_scd2_updates_dir(spark, sf_dir))
     )
-    os.makedirs(store)
     base = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.round("c_acctbal", 2).alias("acctbal"),
@@ -1028,37 +825,19 @@ def streaming_scd2_customers(
         F.lit(None).cast("long").alias("valid_to"),
         F.lit(True).alias("is_current"),
     )
-    base.write.mode("overwrite").parquet(os.path.join(store, "v_init"))
-    with open(os.path.join(store, "_CURRENT"), "w") as f:
-        f.write("v_init")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        current = read_store(sp, store)
-        new_dim = scd2_apply(
-            current,
+    return sl.run_foreach_batch(
+        stream,
+        "scd2_store_",
+        base,
+        lambda batch_df, batch_id, store: scd2_apply(
+            sl.read_store(batch_df.sparkSession, store),
             batch_df.select("c_custkey", "acctbal"),
             "c_custkey",
             ["acctbal"],
             SCD2_STREAM_TS0 + batch_id + 1,
-        )
-        vname = f"v_{batch_id:08d}"
-        new_dim.write.mode("overwrite").parquet(os.path.join(store, vname))
-        ptr_tmp = os.path.join(store, "._CURRENT.tmp")
-        with open(ptr_tmp, "w") as f:
-            f.write(vname)
-        os.replace(ptr_tmp, os.path.join(store, "_CURRENT"))
-
-    stream = (
-        spark.readStream.schema("c_custkey long, acctbal double, batch_ts long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        ),
+        versioned=True,
     )
-    q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
-    q.awaitTermination()
-    result = materialize(read_store(spark, store))
-    shutil.rmtree(store, ignore_errors=True)
-    return result
 
 
 def _scd2_stream_sql() -> str:
@@ -1174,10 +953,9 @@ GROUP BY 1, 2
 
 
 def _novelty_scores(batch_df: DataFrame, master_sh: DataFrame) -> DataFrame:
-    """Per-micro-batch novelty frame of `streaming_ngram_novelty` —
-    module-level so the foreachBatch body and the CI audit twin run
-    the IDENTICAL plan builder (shingle explode → anti-join against
-    the master shingle set → per-doc novelty share)."""
+    """Per-micro-batch novelty frame of `streaming_ngram_novelty`:
+    shingle explode → anti-join against the master shingle set →
+    per-doc novelty share."""
     from ..operators.dedup import _shingle_table
 
     ex = _shingle_table(batch_df, "doc_id", "text", 3)
@@ -1205,9 +983,7 @@ def _novelty_scores(batch_df: DataFrame, master_sh: DataFrame) -> DataFrame:
     )
 
 
-def streaming_ngram_novelty(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming novelty scoring on ingest (r7 w2) — the streaming
     member of the novelty family (`ngram_novelty` is the batch
     profile): the seeded copies arrive as file micro-batches and
@@ -1229,8 +1005,6 @@ def streaming_ngram_novelty(
     Returns (doc_id, n_shingles, n_novel, novelty) for the streamed
     docs — `ngram_novelty`'s schema with master-only reference.
     """
-    import uuid as _uuid
-
     from pyspark import StorageLevel
 
     from ..cacheutil import track_persisted
@@ -1238,19 +1012,6 @@ def streaming_ngram_novelty(
     from .llm import DUP_SEED_OFFSET, _corpus
 
     master = _corpus(spark, sf_dir).where(F.col("doc_id") < DUP_SEED_OFFSET)
-    if _static:
-        # audit twin: the IDENTICAL scorer applied to the full
-        # static batch side (verdicts depend only on (doc, master)),
-        # master shingle set unpersisted so the hook stays lazy.
-        batch = _corpus(spark, sf_dir).where(
-            F.col("doc_id") >= DUP_SEED_OFFSET
-        )
-        return _novelty_scores(
-            batch, _shingle_table(master, "doc_id", "text", 3).select("sh").distinct()
-        )
-
-    _prune_stale_sinks("ingest_novelty_")
-
     src = _chunked_docs_dir(spark, sf_dir)
     master_sh = track_persisted(
         _shingle_table(master, "doc_id", "text", 3)
@@ -1259,30 +1020,14 @@ def streaming_ngram_novelty(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     master_sh.count()
-    sink = os.path.join(
-        tempfile.gettempdir(), f"ingest_novelty_{_uuid.uuid4().hex[:10]}"
+    return sl.run_foreach_batch(
+        _docs_stream(spark, src),
+        "ingest_novelty_",
+        spark.createDataFrame(
+            [], "doc_id long, n_shingles long, n_novel long, novelty double"
+        ),
+        lambda batch_df, _i, _dir: _novelty_scores(batch_df, master_sh),
     )
-    spark.createDataFrame(
-        [], "doc_id long, n_shingles long, n_novel long, novelty double"
-    ).write.mode("overwrite").parquet(sink)
-
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        _novelty_scores(batch_df, master_sh).write.mode("append").parquet(sink)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = materialize(spark.read.parquet(sink))
-    shutil.rmtree(sink, ignore_errors=True)
-    return result
 
 
 # ------------------------------------------ streaming drift monitor
@@ -1297,9 +1042,7 @@ EV_PSI_SPLIT_DAY = 19738
 EV_PSI_N_BINS = 10
 
 
-def streaming_psi_monitor(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming drift monitor — `psi_value_drift`'s production
     shape: event VALUES streaming in are binned against the
     reference period's histogram (batch-computed bounds + bin
@@ -1354,49 +1097,28 @@ def streaming_psi_monitor(
     )
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    def monitored_agg(frame: DataFrame) -> DataFrame:
-        # shared by the streamed path and the static audit twin —
-        # the windowless (day, bin) count whose state is one row per
-        # day×bin regardless of event volume
-        return (
-            frame.select(
-                F.floor(F.unix_timestamp("ts") / 86400)
-                .cast("long")
-                .alias("day"),
-                "value",
-                F.lit(1).alias("k"),
-            )
-            .where(F.col("day") >= EV_PSI_SPLIT_DAY)
-            .join(
-                F.broadcast(scal.withColumnRenamed("k", "k2")),
-                F.expr("k = k2"),
-            )
-            .select("day", bin_expr)
-            .groupBy("day", "bin")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_day"))
+    # a NEW StructType — .add() would mutate the shared schema
+    wide = StructType(
+        list(sl.EVENTS_STREAM_SCHEMA.fields) + [StructField("value", DoubleType())]
+    )
+    stream = sl.events_file_stream(spark, _events_src(sf_dir), schema=wide)
+    # the windowless (day, bin) count: state is one row per day×bin
+    # regardless of event volume
+    monitored = (
+        stream.select(
+            F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
+            "value",
+            F.lit(1).alias("k"),
         )
-
-    if _static:
-        # audit twin: the IDENTICAL pre-sink agg + post-sink PSI
-        # grid over the static table, one lazy frame end-to-end
-        # (static lineages don't share sink attribute ids, so the
-        # self-join analyzes without the checkpoint).
-        counts = monitored_agg(
-            ev.select("ts", "value").withColumn(
-                "ts", F.col("ts").cast("timestamp")
-            )
-        )
-    else:
-        # a NEW StructType — .add() would mutate the shared schema
-        wide = StructType(
-            list(sl.EVENTS_STREAM_SCHEMA.fields)
-            + [StructField("value", DoubleType())]
-        )
-        stream = sl.events_file_stream(spark, _events_src(sf_dir), schema=wide)
-        # checkpoint the sink before the grid self-join (memory-sink
-        # views share attribute ids — a direct self-join fails
-        # analysis)
-        counts = materialize(sl.run_stream_to_table(monitored_agg(stream), "complete"))
+        .where(F.col("day") >= EV_PSI_SPLIT_DAY)
+        .join(F.broadcast(scal.withColumnRenamed("k", "k2")), F.expr("k = k2"))
+        .select("day", bin_expr)
+        .groupBy("day", "bin")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_day"))
+    )
+    # checkpoint the sink before the grid self-join (memory-sink
+    # views share attribute ids — a direct self-join fails analysis)
+    counts = materialize(sl.run_stream_to_table(monitored, "complete"))
     days = counts.select("day").distinct()
     bins = spark.range(EV_PSI_N_BINS).select(F.col("id").cast("long").alias("bin"))
     grid = days.crossJoin(F.broadcast(bins))
@@ -1476,9 +1198,7 @@ CROSS JOIN scal s
 """
 
 
-def streaming_cusum_monitor(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CUSUM drift monitor (r9) — `cusum_changepoint`'s
     production speed-layer twin, completing the lambda pair the way
     `streaming_psi_monitor` twins `psi_value_drift`: per-type daily
@@ -1515,27 +1235,17 @@ def streaming_cusum_monitor(
             F.sum(F.col("n") * F.col("n")).cast("long").alias("s2"),
         )
     )
-    def monitored_agg(frame: DataFrame) -> DataFrame:
-        # shared by the streamed path and the static audit twin
-        return (
-            frame.select(
-                "event_type",
-                F.floor(F.unix_timestamp("ts") / 86400)
-                .cast("long")
-                .alias("day_id"),
-            )
-            .where(F.col("day_id") >= EV_PSI_SPLIT_DAY)
-            .groupBy("event_type", "day_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+    stream = sl.events_file_stream(spark, _events_src(sf_dir))
+    monitored = (
+        stream.select(
+            "event_type",
+            F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day_id"),
         )
-
-    if _static:
-        # audit twin: IDENTICAL pre-sink agg + post-sink CUSUM
-        # recursion over the static table, one lazy frame
-        counts = monitored_agg(_static_events(spark, sf_dir))
-    else:
-        stream = sl.events_file_stream(spark, _events_src(sf_dir))
-        counts = materialize(sl.run_stream_to_table(monitored_agg(stream), "complete"))
+        .where(F.col("day_id") >= EV_PSI_SPLIT_DAY)
+        .groupBy("event_type", "day_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+    )
+    counts = materialize(sl.run_stream_to_table(monitored, "complete"))
     z = (
         "(n_events - s1 / CAST(n_days AS DOUBLE))"
         " / nullif(sqrt(s2 / CAST(n_days AS DOUBLE)"
@@ -1694,9 +1404,7 @@ def _kmv_serve(spark: SparkSession, partials: DataFrame, exact: DataFrame) -> Da
     )
 
 
-def streaming_kmv_uniques(
-    spark: SparkSession, sf_dir: str, _static: bool = False
-) -> DataFrame:
+def streaming_kmv_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KMV uniques sketch (r10) — the mergeable
     MERGEABLE-INTERSECTION path of the speed layer: each micro-batch
     folds its events into a K-smallest-hash partial appended to the
@@ -1715,39 +1423,21 @@ def streaming_kmv_uniques(
     ≙ the reference's Trident uniques state
     (`TridentSpeedLayer.java:64-80`), upgraded from opaque counts
     to a mergeable signature.
-
-    ``_static=True``: one batch ≡ merged partials (exact
-    mergeability), so the audit twin is the IDENTICAL partial
-    builder over `_static_events` fed through the IDENTICAL serve
-    step — every streamed frame shape swept by CI.
     """
-    import uuid as _uuid
-
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.count_distinct("user_id").cast("long").alias("exact_uniques"))
     )
-    if _static:
-        return _kmv_serve(
-            spark, _kmv_partial(_static_events(spark, sf_dir)), exact
-        )
-    src = _chunked_events_dir(spark, sf_dir)
-    sink = os.path.join(
-        tempfile.gettempdir(), f"kmv_stream_{_uuid.uuid4().hex[:10]}"
+    stream = sl.events_file_stream(
+        spark, _chunked_events_dir(spark, sf_dir), max_files_per_trigger=1
     )
-    spark.createDataFrame([], "event_type string, u long").write.mode(
-        "overwrite"
-    ).parquet(sink)
-
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        _kmv_partial(batch_df).write.mode("append").parquet(sink)
-
-    stream = sl.events_file_stream(spark, src, max_files_per_trigger=1)
-    q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
-    q.awaitTermination()
-    partials = materialize(spark.read.parquet(sink))
-    shutil.rmtree(sink, ignore_errors=True)
+    partials = sl.run_foreach_batch(
+        stream,
+        "kmv_stream_",
+        spark.createDataFrame([], "event_type string, u long"),
+        lambda batch_df, _i, _dir: _kmv_partial(batch_df),
+    )
     return _kmv_serve(spark, partials, exact)
 
 
@@ -1784,46 +1474,3 @@ FROM est
 
 
 STREAMING_KMV_UNIQUES_SQL = _streaming_kmv_sql()
-
-
-# ----------------------------------------- CI plan-audit twins (r10)
-
-#: Static audit twins for EVERY streaming registry query (VERDICT
-#: r8 #3 / r9 #1 — the last systematic CI blind spot): each hook
-#: rebuilds the query's transformation chain over the static tables
-#: THROUGH THE SAME plan-builder code the stream runs (`_static=True`
-#: branches above), and returns it UNEXECUTED so the registry-wide
-#: plan audits in `tests/test_tpch.py` sweep the streamed frames'
-#: shapes — cartesian/row-UDF/corpus-grain-sort regressions inside a
-#: streaming plan now fail CI like any batch plan. The audit tests
-#: sweep these in place of the streaming entries and assert every
-#: `streaming_*` registry entry appears here, so a new streaming
-#: query cannot ship unaudited.
-def _static_twin(fn):
-    def hook(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
-        return [fn(spark, sf_dir, _static=True)]
-
-    return hook
-
-
-STREAMING_AUDIT_PLANS: dict = {
-    name: _static_twin(fn)
-    for name, fn in (
-        ("streaming_pageviews_hourly", streaming_pageviews_hourly),
-        ("streaming_uniques_hourly_hll", streaming_uniques_hourly_hll),
-        ("streaming_bounce_rate", streaming_bounce_rate),
-        ("streaming_bounce_rate_native", streaming_bounce_rate_native),
-        ("streaming_sessions", streaming_sessions),
-        ("streaming_view_attribution", streaming_view_attribution),
-        ("streaming_funnel_hourly", streaming_funnel_hourly),
-        ("streaming_enriched_counts", streaming_enriched_counts),
-        ("streaming_top_pages_hourly", streaming_top_pages_hourly),
-        ("streaming_ingest_dedup", streaming_ingest_dedup),
-        ("streaming_ngram_novelty", streaming_ngram_novelty),
-        ("streaming_heavy_hitters_cms", streaming_heavy_hitters_cms),
-        ("streaming_scd2_customers", streaming_scd2_customers),
-        ("streaming_psi_monitor", streaming_psi_monitor),
-        ("streaming_cusum_monitor", streaming_cusum_monitor),
-        ("streaming_kmv_uniques", streaming_kmv_uniques),
-    )
-}

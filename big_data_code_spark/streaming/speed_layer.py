@@ -22,12 +22,22 @@ Reference topologies (`TridentSpeedLayer.java`, `UniquesOverTime.java`,
 
 All operators take/return unbounded DataFrames and never collect;
 at scale the same code runs against Kafka by swapping the source.
+
+A stream runs in one of two ways: `run_stream_to_table` (a memory
+sink) or `run_foreach_batch` (a foreachBatch body writing a private
+dir). Both record what they executed into `cacheutil.recording()`,
+which is how the plan audits see a stream's stateful operators and
+per-batch frames.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import time
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -42,6 +52,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from .. import cacheutil
 from ..functions.timebuckets import ntz_to_ltz
 
 #: at-rest schema of the pageview stream. events.parquet stores ts
@@ -332,7 +343,99 @@ def run_stream_to_table(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    cacheutil.record(lambda: _last_executed_plan(q))
     return spark.table(name)
+
+
+def _last_executed_plan(q: Any) -> Any:
+    """The physical plan of ``q``'s last micro-batch, None if no
+    batch ran."""
+    last = q._jsq.streamingQuery().lastExecution()
+    return None if last is None else last.executedPlan()
+
+
+def _prune_stale_dirs(prefix: str) -> None:
+    """Remove ``<prefix>*`` dirs under the temp dir that are over an
+    hour old: left by dead processes, never by a live concurrent
+    run. A concurrent run may remove a dir between the listdir and
+    the stat, so a vanished dir is skipped."""
+    root = tempfile.gettempdir()
+    for d in os.listdir(root):
+        if not d.startswith(prefix):
+            continue
+        p = os.path.join(root, d)
+        try:
+            stale = time.time() - os.path.getmtime(p) > 3600
+        except FileNotFoundError:
+            continue
+        if stale:
+            shutil.rmtree(p, ignore_errors=True)
+
+
+def _commit_version(df: DataFrame, store_dir: str, vname: str) -> None:
+    """Write ``df`` as version ``vname`` of a versioned store, then
+    atomically flip its ``_CURRENT`` pointer to it (write-temp +
+    `os.replace`): a crash mid-write leaves the previous version
+    live."""
+    df.write.mode("overwrite").parquet(os.path.join(store_dir, vname))
+    ptr_tmp = os.path.join(store_dir, "._CURRENT.tmp")
+    with open(ptr_tmp, "w") as f:
+        f.write(vname)
+    os.replace(ptr_tmp, os.path.join(store_dir, "_CURRENT"))
+
+
+def run_foreach_batch(
+    stream_df: DataFrame,
+    prefix: str,
+    seed: DataFrame,
+    batch_frame: Callable[[DataFrame, int, str], DataFrame],
+    versioned: bool = False,
+) -> DataFrame:
+    """Drive ``stream_df`` with Trigger.AvailableNow through a
+    `foreachBatch` body that writes a private dir, and return the
+    dir's final contents materialized off it (`cacheutil.
+    materialize`), so the caller may hold the result after the dir
+    is gone.
+
+    - The dir is ``<tempdir>/<prefix><random hex>``. Hour-old dirs
+      with ``prefix`` (left by dead processes) are pruned first; this
+      run's dir is removed when the call returns or raises.
+    - ``seed`` (usually zero rows of the written schema) is written
+      first, so the final read succeeds even if every micro-batch is
+      empty.
+    - Micro-batch ``i`` writes ``batch_frame(batch_df, i, dir)``;
+      inside `cacheutil.recording()` that frame's physical plan is
+      recorded before it is written.
+    - ``versioned=False``: every write appends parquet parts to the
+      dir, read back as one table. ``versioned=True``: every write
+      is a full new version ``v_<i>`` of a versioned store
+      (`_commit_version`, the seed is ``v_init``) and the live
+      version is read back (`read_store`).
+    """
+    spark = stream_df.sparkSession
+    _prune_stale_dirs(prefix)
+    sink = os.path.join(tempfile.gettempdir(), f"{prefix}{uuid.uuid4().hex[:10]}")
+
+    def write(frame: DataFrame, vname: str) -> None:
+        if versioned:
+            _commit_version(frame, sink, vname)
+        else:
+            frame.write.mode("append").parquet(sink)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        frame = batch_frame(batch_df, batch_id, sink)
+        cacheutil.record(lambda: frame._jdf.queryExecution().executedPlan())
+        write(frame, f"v_{batch_id:08d}")
+
+    try:
+        write(seed, "v_init")
+        q = stream_df.writeStream.foreachBatch(process).trigger(availableNow=True).start()
+        q.awaitTermination()
+        return cacheutil.materialize(
+            read_store(spark, sink) if versioned else spark.read.parquet(sink)
+        )
+    finally:
+        shutil.rmtree(sink, ignore_errors=True)
 
 
 def sessionize_stream(events: DataFrame, gap: str = "15 minutes") -> DataFrame:
@@ -475,8 +578,6 @@ def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 def _resolve_store_version(store_dir: str) -> str | None:
     """Path of the live version dir of a versioned serving store,
     or None if the store has no committed version yet."""
-    import os
-
     ptr = os.path.join(store_dir, "_CURRENT")
     if not os.path.isfile(ptr):
         return None
@@ -523,9 +624,6 @@ def upsert_to_keyvalue_sink(
     domain version is shipped wholesale and swapped in. Readers go
     through ``read_store``.
     """
-    import os
-
-    from pyspark.sql import functions as F  # noqa: F401
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -540,13 +638,7 @@ def upsert_to_keyvalue_sink(
                 merged = keep.unionByName(new)
             else:
                 merged = new
-            vname = f"v_{batch_id:08d}"
-            merged.write.mode("overwrite").parquet(os.path.join(store_dir, vname))
-            # atomic pointer flip: write-temp + rename
-            ptr_tmp = os.path.join(store_dir, "._CURRENT.tmp")
-            with open(ptr_tmp, "w") as f:
-                f.write(vname)
-            os.replace(ptr_tmp, os.path.join(store_dir, "_CURRENT"))
+            _commit_version(merged, store_dir, f"v_{batch_id:08d}")
             # prune superseded versions, RETAINING the most recent
             # prior one: a reader that resolved _CURRENT just before
             # the flip may still be mid-scan on it (the ElephantDB
@@ -556,8 +648,6 @@ def upsert_to_keyvalue_sink(
                 d for d in os.listdir(store_dir) if d.startswith("v_")
             )
             for d in versions[:-2]:
-                import shutil
-
                 shutil.rmtree(os.path.join(store_dir, d), ignore_errors=True)
         finally:
             new.unpersist()

@@ -673,6 +673,31 @@ def test_materialize_is_the_only_checkpoint():
     assert len(hits) == 1 and hits[0].startswith("cacheutil.py:"), hits
 
 
+def test_streams_run_only_through_speed_layer():
+    """`foreachBatch(` appears only in `streaming/speed_layer.py`
+    (whose runners record what a stream executes), and no registry
+    builder takes a hidden audit-mode parameter."""
+    import inspect
+    import pathlib
+
+    import big_data_code_spark
+    from big_data_code_spark.plans.registry import QUERIES
+
+    root = pathlib.Path(big_data_code_spark.__file__).parent
+    hits = sorted(
+        str(path.relative_to(root))
+        for path in root.rglob("*.py")
+        if "foreachBatch(" in path.read_text()
+    )
+    assert hits == ["streaming/speed_layer.py"], hits
+    hidden = [
+        name
+        for name, fn in QUERIES.items()
+        if "_static" in inspect.signature(fn).parameters
+    ]
+    assert not hidden, hidden
+
+
 def test_bench_covers_every_registry_query():
     """The bench rows are the registry minus written exclusions
     (VERDICT r4 #5): every exclusion names a registered query and

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -741,22 +742,31 @@ def test_streaming_kmv_uniques_oracle_merge_and_recompute(spark):
     """Oracle parity at both SFs; the streamed merged sketch must
     equal the batch sketch computed in one pass over raw events
     (hashlib recompute — KMV merge across micro-batches is exact),
-    and the static audit twin must produce the identical rows."""
+    and one partial over all static events, served, must produce
+    the identical rows."""
     import hashlib
 
+    from big_data_code_spark.plans import speed
     from big_data_code_spark.plans.llm import AUDIENCE_KMV_K
-    from big_data_code_spark.plans.speed import streaming_kmv_uniques
+    from big_data_code_spark.sources.tables import load_table
     from tests.conftest import SF_CORRECT
 
     assert_matches_oracle(spark, "streaming_kmv_uniques", SF_SMOKE)
     assert_matches_oracle(spark, "streaming_kmv_uniques", SF_CORRECT)
 
-    rows = {r["event_type"]: r for r in streaming_kmv_uniques(spark, SF_SMOKE).collect()}
+    rows = {
+        r["event_type"]: r
+        for r in speed.streaming_kmv_uniques(spark, SF_SMOKE).collect()
+    }
+    events = load_table(spark, SF_SMOKE, "events")
+    exact = events.groupBy("event_type").agg(
+        F.count_distinct("user_id").cast("long").alias("exact_uniques")
+    )
     static_rows = {
         r["event_type"]: r
-        for r in streaming_kmv_uniques(spark, SF_SMOKE, _static=True).collect()
+        for r in speed._kmv_serve(spark, speed._kmv_partial(events), exact).collect()
     }
-    assert sorted(rows) == sorted(static_rows)
+    assert rows == static_rows
 
     by_type: dict[str, set] = {}
     for r in (
@@ -775,3 +785,51 @@ def test_streaming_kmv_uniques_oracle_merge_and_recompute(spark):
             assert got["u_k"] == hs[-1]
             assert got["exact_uniques"] == len(users)
             assert got["within_005"]
+
+
+def test_streams_record_the_plans_they_run(spark):
+    """Inside `cacheutil.recording()` a memory-sink stream records
+    its executed stateful plan and a foreachBatch stream records one
+    written frame per micro-batch; outside it nothing is kept."""
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans import speed
+
+    with cacheutil.recording() as plans:
+        speed.streaming_view_attribution(spark, SF_SMOKE)
+    assert any("StreamingSymmetricHashJoin" in p for p in plans), plans
+
+    src = speed._chunked_events_dir(spark, SF_SMOKE)
+    n_batches = sum(f.endswith(".parquet") for f in os.listdir(src))
+    with cacheutil.recording() as plans:
+        speed.streaming_kmv_uniques(spark, SF_SMOKE)
+    *per_batch, sink_read = plans  # one partial per batch, then the serve read
+    assert n_batches == 3 and len(per_batch) == n_batches, plans
+    assert "kmv_stream_" in sink_read
+    assert all("kmv_stream_" not in p and "HashAggregate" in p for p in per_batch)
+
+    speed.streaming_kmv_uniques(spark, SF_SMOKE)
+    assert cacheutil._RECORDED is None
+
+
+def test_foreach_batch_failure_propagates_and_removes_its_dir(spark):
+    """A micro-batch body that raises fails the call, and the
+    helper's private dir is gone afterwards (no leak on failure)."""
+    import tempfile
+    import uuid
+
+    from pyspark.errors import StreamingQueryException
+
+    from big_data_code_spark.plans import speed
+    from big_data_code_spark.streaming import speed_layer as sl
+
+    def boom(batch_df, batch_id, sink):
+        raise RuntimeError("micro-batch build failed")
+
+    prefix = f"fail_probe_{uuid.uuid4().hex[:6]}_"
+    stream = sl.events_file_stream(
+        spark, speed._chunked_events_dir(spark, SF_SMOKE), max_files_per_trigger=1
+    )
+    seed = spark.createDataFrame([], "event_type string, u long")
+    with pytest.raises(StreamingQueryException, match="micro-batch build failed"):
+        sl.run_foreach_batch(stream, prefix, seed, boom)
+    assert not [d for d in os.listdir(tempfile.gettempdir()) if d.startswith(prefix)]

@@ -263,10 +263,11 @@ BNLJ_ALLOWED = {
                                  # total broadcast (the share
                                  # divisor - market_basket_lift's
                                  # shape)
-    "streaming_psi_monitor",     # r10 static twin: one-row
-                                 # (vmin, vmax, n_ref_tot) reference
-                                 # scalar broadcasts + the 10-row
-                                 # bin-grid dim broadcast (the
+    "streaming_psi_monitor",     # r10: one-row (vmin, vmax,
+                                 # n_ref_tot) reference scalar
+                                 # broadcasts + the 10-row bin-grid
+                                 # dim broadcast, in the stream's
+                                 # plan and after its sink (the
                                  # psi_value_drift shape)
     "bootstrap_ci_order_value",  # r7 w8: one-row CI frame (the
                                  # 64-replicate rollup) broadcast
@@ -290,31 +291,27 @@ BNLJ_ALLOWED = {
 }
 
 
-def _audited_plans(spark):
-    """(name, physical plans) for every registry entry. A batch entry
-    is audited as the plan it returns plus every plan it materialized
-    while it ran (`cacheutil.recording`): an iterative operator's
-    rounds execute and vanish behind checkpoints before the returned
-    frame exists. Calling a streaming entry would EXECUTE its stream,
-    so it is audited through its static twin in
-    `speed.STREAMING_AUDIT_PLANS`, which every streaming entry MUST
-    have."""
+@pytest.fixture(scope="module")
+def audited_plans(spark):
+    """[(name, physical plans)] for every registry entry, swept once
+    for both registry-wide audits. An entry is audited as the plan it
+    returns plus every plan it recorded while it ran
+    (`cacheutil.recording`): an iterative operator's rounds execute
+    and vanish behind checkpoints before the returned frame exists,
+    and a stream's stateful plan and per-batch frames run before its
+    sink is read."""
     from big_data_code_spark import cacheutil
     from big_data_code_spark.plans.registry import QUERIES
-    from big_data_code_spark.plans.speed import STREAMING_AUDIT_PLANS
 
+    swept = []
     for name, fn in QUERIES.items():
-        if name.startswith("streaming_"):
-            assert name in STREAMING_AUDIT_PLANS, f"{name}: no audit twin"
-            frames = STREAMING_AUDIT_PLANS[name](spark, SF_SMOKE)
-            yield name, [physical_plan(df) for df in frames]
-            continue
         with cacheutil.recording() as recorded:
             df = fn(spark, SF_SMOKE)
-        yield name, [physical_plan(df), *recorded]
+        swept.append((name, [physical_plan(df), *recorded]))
+    return swept
 
 
-def test_no_unintended_scale_red_flags_in_any_plan(spark):
+def test_no_unintended_scale_red_flags_in_any_plan(audited_plans):
     """Sweep EVERY registry plan for operators that do not survive
     100 TB: cartesian products, nested-loop joins outside the
     allowlist, and Python row UDFs anywhere."""
@@ -330,7 +327,7 @@ def test_no_unintended_scale_red_flags_in_any_plan(spark):
         return bad
 
     offenders = {}
-    for name, plans in _audited_plans(spark):
+    for name, plans in audited_plans:
         for i, plan in enumerate(plans):
             bad = flags(name, plan)
             if bad:
@@ -375,7 +372,7 @@ WINDOW_SORT_ALLOWED = {
     "open_orders_over_time": "running net over the calendar-day rollup",
     "survival_km_ship_lag": "KM product over the ship-lag-day rollup (calendar-bounded)",
     "cusum_changepoint": "running-extrema windows over the calendar-day rollup",
-    "streaming_cusum_monitor": "running-extrema windows over the calendar-day rollup (static twin)",
+    "streaming_cusum_monitor": "running-extrema windows over the streamed calendar-day rollup",
     "revenue_pattern_match": "pattern windows over the calendar-day rollup",
     "lang_id_confusion": "row-share over the |lang|^2 confusion cells",
     "ks_source_drift": "CDF windows over the bounded value grid per source",
@@ -455,13 +452,13 @@ def _window_flags(plan: str) -> list[str]:
     return bad
 
 
-def test_no_corpus_grain_window_sorts(spark):
-    """Sweep every registry plan (`_audited_plans`) for corpus-grain
+def test_no_corpus_grain_window_sorts(audited_plans):
+    """Sweep every registry plan (`audited_plans`) for corpus-grain
     window sorts; offenders must be two-pass-rank rewrites or
     justified in WINDOW_SORT_ALLOWED — and the allowlist must stay
     exact."""
     offenders: dict[str, list[str]] = {}
-    for name, plans in _audited_plans(spark):
+    for name, plans in audited_plans:
         for i, plan in enumerate(plans):
             bad = _window_flags(plan)
             if bad:
