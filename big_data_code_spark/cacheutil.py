@@ -7,10 +7,12 @@ signature table) that several branches of the returned — still lazy
 materializes the plan, so Spark's CacheManager would otherwise hold
 the blocks for the session lifetime. Harness loops that run many
 queries in one session (bench.py, tools/driver_check.py) call
-`release_persisted()` after materializing each query; long-lived
-services can do the same at their own batch boundaries. A plan
-re-run after release simply recomputes (and re-registers) its cache
-— correctness never depends on the cache being present.
+`release_persisted()` after materializing each query; code with its
+own batch boundaries wraps each batch in `releasing()`, as
+`streaming.speed_layer.run_foreach_batch` does for every
+micro-batch once its frame is written. A plan re-run after release
+simply recomputes (and re-registers) its cache — correctness never
+depends on the cache being present.
 
 Serve-once entries. A view that is a pure function of one version
 of its input tables is built once and served until that version
@@ -28,6 +30,11 @@ changes — the batch layer's rule. `serve_once` is the one store:
   materialized rows, not the build lineage. Entries are not
   release-tracked: they are the index;
 - `STATS[name]` counts hits, misses and build seconds.
+
+Parquet schemas are not a serve-once entry: every read needs one,
+the master dataset's and key/value domains' too, which have no
+``sf_dir``/table, so `sources.tables.read_parquet` (below this
+module) keeps them in its own per-path memo.
 
 `bypass(name)` runs `serve_once(..., name, ...)`'s build and returns
 it without reading or writing the entry or `STATS` — the registry's
@@ -67,7 +74,7 @@ from contextlib import AbstractContextManager, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.tables import fingerprint
+from .sources.tables import fingerprint, table_path
 
 _PERSISTED: list[DataFrame] = []
 
@@ -83,10 +90,11 @@ def track_persisted(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_persisted() -> int:
-    """Unpersist every tracked DataFrame; returns how many."""
+def release_persisted(since: int = 0) -> int:
+    """Unpersist every tracked DataFrame from position ``since`` of
+    the tracking list on (default: all); returns how many."""
     n = 0
-    while _PERSISTED:
+    while len(_PERSISTED) > since:
         df = _PERSISTED.pop()
         try:
             df.unpersist()
@@ -94,6 +102,17 @@ def release_persisted() -> int:
         except Exception:
             pass  # session already stopped — nothing to release
     return n
+
+
+@contextmanager
+def releasing() -> Iterator[None]:
+    """Within the block, DataFrames passed to `track_persisted` are
+    released when the block exits; those tracked before it stay."""
+    since = len(_PERSISTED)
+    try:
+        yield
+    finally:
+        release_persisted(since)
 
 
 def record(plan: Callable[[], object]) -> None:
@@ -143,7 +162,7 @@ def serve_once(
     if name in _BYPASSED:
         return build()
     scope = (spark.sparkContext.applicationId, name, os.path.abspath(sf_dir))
-    key = (*scope, tuple(fingerprint(sf_dir, t) for t in tables))
+    key = (*scope, tuple(fingerprint(table_path(sf_dir, t)) for t in tables))
     stats = STATS.setdefault(name, {"hits": 0, "misses": 0, "build_s": 0.0})
     if key in _STORE:
         stats["hits"] += 1

@@ -147,9 +147,9 @@ def narrow_for_iteration(
     inode."""
     import math
 
-    from ..sources.tables import fingerprint
+    from ..sources.tables import fingerprint, table_path
 
-    size = fingerprint(sf_dir, table)[2]
+    size = fingerprint(table_path(sf_dir, table))[2]
     if not size:
         return df
     n = max(1, math.ceil(size / target_bytes))

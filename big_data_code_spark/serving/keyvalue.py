@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_parquet
+
 N_SHARDS_DEFAULT = 32
 
 
@@ -124,10 +126,11 @@ def export_key_value(
 def lookup(spark: SparkSession, path: str, key_value: str, shard_of_key) -> DataFrame:
     """Point lookup: compute the key's shard, scan only that shard
     directory. ``shard_of_key`` is a fn str -> int mirroring the
-    sharding scheme used at export time."""
+    sharding scheme used at export time. The domain's schema is
+    inferred once per export (`sources.tables.read_parquet`)."""
     shard = shard_of_key(key_value)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .where(F.col("shard") == shard)
         .where(F.col("key") == key_value)
     )

@@ -30,6 +30,14 @@ Spark-native restatement:
 
 All metadata (snapshots) is plain JSON beside the data so any
 engine can read it; no driver-side loops over data rows anywhere.
+
+Reads go through `sources.tables.read_parquet`, whose schema memo
+stands in for ``pail.meta`` (the file a Pail keeps its format in):
+`read` infers the data dir's schema once per `sources.tables.
+fingerprint` of the dir, so an `ingest` (new files) or `consolidate`
+re-infers, and `read_snapshot` once per snapshot manifest, whose
+file list never changes. Every later read passes the memoized schema
+and launches no footer-reading job.
 """
 
 from __future__ import annotations
@@ -41,6 +49,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .tables import read_parquet
 
 DEFAULT_UNIT_COL = "unit"
 
@@ -109,7 +119,7 @@ class MasterDataset:
     # ------------------------------------------------------------ read
 
     def read(self, spark: SparkSession, unit: str | None = None) -> DataFrame:
-        df = spark.read.parquet(self.data_dir)
+        df = read_parquet(spark, self.data_dir)
         if unit is not None:
             # partition filter — prunes every other unit's files
             df = df.where(F.col(self.unit_col) == unit)
@@ -134,13 +144,17 @@ class MasterDataset:
         return name
 
     def read_snapshot(self, spark: SparkSession, name: str) -> DataFrame:
-        with open(os.path.join(self.snap_dir, f"{name}.json")) as fh:
-            manifest = json.load(fh)
-        if not manifest["files"]:
+        path = os.path.join(self.snap_dir, f"{name}.json")
+        with open(path) as fh:
+            files = json.load(fh)["files"]
+        if not files:
             raise ValueError(f"snapshot {name} is empty")
-        # basePath keeps the partition column derivable from paths
-        return spark.read.option("basePath", self.data_dir).parquet(
-            *manifest["files"]
+        # the file list is the version: a snapshot deleted and re-taken
+        # under the same name re-infers. basePath keeps the partition
+        # column derivable from the paths.
+        return read_parquet(
+            spark, path, tuple(files),
+            lambda reader: reader.option("basePath", self.data_dir).parquet(*files),
         )
 
     def delete_snapshot(self, name: str) -> None:

@@ -405,7 +405,10 @@ def run_foreach_batch(
       empty.
     - Micro-batch ``i`` writes ``batch_frame(batch_df, i, dir)``;
       inside `cacheutil.recording()` that frame's physical plan is
-      recorded before it is written.
+      recorded before it is written. Frames the body tracks with
+      `cacheutil.track_persisted` are released once the batch is
+      written (`cacheutil.releasing`), so a long stream holds no
+      cached blocks per trigger.
     - ``versioned=False``: every write appends parquet parts to the
       dir, read back as one table. ``versioned=True``: every write
       is a full new version ``v_<i>`` of a versioned store
@@ -423,9 +426,10 @@ def run_foreach_batch(
             frame.write.mode("append").parquet(sink)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        frame = batch_frame(batch_df, batch_id, sink)
-        cacheutil.record(lambda: frame._jdf.queryExecution().executedPlan())
-        write(frame, f"v_{batch_id:08d}")
+        with cacheutil.releasing():
+            frame = batch_frame(batch_df, batch_id, sink)
+            cacheutil.record(lambda: frame._jdf.queryExecution().executedPlan())
+            write(frame, f"v_{batch_id:08d}")
 
     try:
         write(seed, "v_init")

@@ -728,7 +728,7 @@ def test_part_file_directory_input_is_sized_by_its_files(spark, tmp_path):
     parts = [p for p in table_dir.iterdir() if not p.name.startswith(("_", "."))]
     data_bytes = sum(p.stat().st_size for p in parts)
 
-    path, _, size = fingerprint(str(tmp_path), "events")
+    path, _, size = fingerprint(str(table_dir))
     assert path == str(table_dir)
     assert size == data_bytes != table_dir.stat().st_size
 
@@ -747,10 +747,106 @@ def test_part_file_directory_input_is_sized_by_its_files(spark, tmp_path):
 
     assert serve() == 1 and serve() == 1
     shutil.copy(parts[0], table_dir / "part-99999-added.snappy.parquet")
-    assert fingerprint(str(tmp_path), "events")[2] == data_bytes + parts[0].stat().st_size
+    assert fingerprint(str(table_dir))[2] == data_bytes + parts[0].stat().st_size
     assert serve() == 2
     scope = (spark.sparkContext.applicationId, "part_dir_test", str(tmp_path))
     assert len([k for k in cacheutil._STORE if k[:3] == scope]) == 1
+
+
+def _jobs_run(spark, fn):
+    """(fn(), Spark jobs started while it ran)."""
+    sc = spark.sparkContext._jsc.sc()
+    lo = sc.dagScheduler().numTotalJobs()
+    out = fn()
+    return out, sc.dagScheduler().numTotalJobs() - lo
+
+
+def test_load_table_infers_each_table_version_once(spark, tmp_path):
+    """The schema memo: a second `load_table` of an unchanged table
+    starts no Spark job; a rewritten table (new fingerprint) is
+    re-inferred and shows its new schema; two reads stay two
+    relations, so a self-join resolves like two plain reads."""
+    import shutil
+
+    import pyarrow as pa
+
+    from big_data_code_spark.sources.tables import load_table
+    from tests.conftest import sf_copy
+
+    load_table(spark, SF_SMOKE, "orders")
+    again, jobs = _jobs_run(spark, lambda: load_table(spark, SF_SMOKE, "orders"))
+    assert jobs == 0
+    assert again.count() == spark.read.parquet(f"{SF_SMOKE}/orders.parquet").count()
+
+    sf = sf_copy(tmp_path / "sf", "region", lambda t: t)
+    before = load_table(spark, sf, "region").columns
+    shutil.rmtree(sf)
+    sf_copy(tmp_path / "sf", "region", lambda t: t.append_column("r_extra", pa.array([7] * len(t))))
+    after, jobs = _jobs_run(spark, lambda: load_table(spark, sf, "region"))
+    assert jobs == 1 and after.columns == before + ["r_extra"]
+    assert {r["r_extra"] for r in after.collect()} == {7}
+
+    a, b = load_table(spark, SF_SMOKE, "events"), load_table(spark, SF_SMOKE, "events")
+    ra = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    rb = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+
+    def pairs(x, y):
+        return sorted(
+            tuple(r) for r in x.join(y, x.user_id == y.user_id)
+            .select(x.event_id, y.event_id).collect()
+        )
+
+    assert pairs(a, b) == pairs(ra, rb)
+
+
+def test_master_dataset_reads_infer_once_per_version(spark, tmp_path):
+    """A second `read_snapshot` of one snapshot starts no job before
+    its action; an `ingest` that adds a column invalidates `read`'s
+    memo, so the next read shows the column."""
+    from big_data_code_spark.sources.master_dataset import MasterDataset
+
+    md = MasterDataset(str(tmp_path / "master"))
+    md.ingest(_unit_batch(spark, 10, 5))
+    snap = md.snapshot()
+    md.read_snapshot(spark, snap)
+    df, jobs = _jobs_run(spark, lambda: md.read_snapshot(spark, snap))
+    assert jobs == 0 and df.count() == 15
+
+    assert md.read(spark).columns == ["fact_id", "unit"]
+    # unit "audit" sorts before the others: without merging schemas
+    # Spark infers from the first data file by path
+    extra = spark.range(3).select(
+        F.col("id").alias("fact_id"), F.lit(1).alias("extra"), F.lit("audit").alias("unit")
+    )
+    md.ingest(extra)
+    df = md.read(spark)
+    assert df.columns == ["fact_id", "extra", "unit"]
+    assert df.where(F.col("extra") == 1).count() == 3 and df.count() == 18
+    assert md.read_snapshot(spark, snap).count() == 15
+
+
+def test_keyvalue_lookup_infers_the_domain_once_per_export(spark, tmp_path):
+    """A lookup costs the shard hash, the inference of the domain's
+    schema and the scan: 3 jobs. Later lookups of the same export
+    skip the inference (one job fewer); a re-export pays it again."""
+    from big_data_code_spark.serving import keyvalue as kv
+
+    view = spark.createDataFrame([(f"k{i}", i) for i in range(20)], "k string, v long")
+    path = str(tmp_path / "domain")
+
+    def export():
+        kv.export_key_value(view, path, F.col("k"), ["v"], kv.hash_mod_shard(F.col("k"), 4))
+
+    def lookup(key):
+        shard = lambda k: kv.python_hash_mod(k, 4, spark)  # noqa: E731
+        return _jobs_run(spark, lambda: kv.lookup(spark, path, key, shard).collect())
+
+    export()
+    (first, first_jobs), (second, second_jobs) = lookup("k3"), lookup("k11")
+    assert [r["v"] for r in first] == [3] and [r["v"] for r in second] == [11]
+    assert (first_jobs, second_jobs) == (3, 2)
+    export()
+    assert lookup("k5")[1] == 3
 
 
 #: DuckDB result type → the Spark simpleString(s) that land on the

@@ -811,6 +811,37 @@ def test_streams_record_the_plans_they_run(spark):
     assert cacheutil._RECORDED is None
 
 
+def test_foreach_batch_releases_what_its_micro_batches_persist(spark, monkeypatch):
+    """Each micro-batch's KMV partial persists two-pass-rank frames
+    (`cacheutil.track_persisted`); `run_foreach_batch` releases them
+    once the batch is written, so after the query only the serve
+    step's tracked frames remain."""
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans import speed
+
+    tracked: dict[str, list] = {"batch": [], "serve": []}
+
+    def spy(step, fn):
+        def wrapped(*args):
+            since = len(cacheutil._PERSISTED)
+            out = fn(*args)
+            tracked[step] += cacheutil._PERSISTED[since:]
+            return out
+
+        return wrapped
+
+    monkeypatch.setattr(speed, "_kmv_partial", spy("batch", speed._kmv_partial))
+    monkeypatch.setattr(speed, "_kmv_serve", spy("serve", speed._kmv_serve))
+    cacheutil.release_persisted()
+    speed.streaming_kmv_uniques(spark, SF_SMOKE).collect()
+    try:
+        assert tracked["batch"] and tracked["serve"]
+        assert [id(d) for d in cacheutil._PERSISTED] == [id(d) for d in tracked["serve"]]
+        assert not any(d.is_cached for d in tracked["batch"])
+    finally:
+        cacheutil.release_persisted()
+
+
 def test_foreach_batch_failure_propagates_and_removes_its_dir(spark):
     """A micro-batch body that raises fails the call, and the
     helper's private dir is gone afterwards (no leak on failure)."""
