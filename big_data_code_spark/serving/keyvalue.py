@@ -137,10 +137,14 @@ def lookup(spark: SparkSession, path: str, key_value: str, shard_of_key) -> Data
 
 
 def python_hash_mod(key_value: str, n_shards: int, spark: SparkSession) -> int:
-    """Driver-side shard computation for lookups: one tiny Spark
-    expression evaluation so the hash is bit-identical to the
-    export's ``xxhash64`` (no reimplementation drift)."""
-    row = spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(key_value)), F.lit(n_shards)).cast("int").alias("s")
-    ).collect()
-    return row[0]["s"]
+    """Driver-side shard computation for lookups: the JVM's `XXH64`
+    with seed 42 over the key's UTF-8 bytes, which is what the
+    export's ``xxhash64`` column computes, so the shard is
+    bit-identical to the export's and no Spark job starts."""
+    data = key_value.encode("utf-8")
+    jvm = spark._jvm
+    # the instance method: py4j cannot pick the static overload
+    h = jvm.org.apache.spark.sql.catalyst.expressions.XXH64(42).hashUnsafeBytes(
+        data, jvm.org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len(data)
+    )
+    return h % n_shards  # Python's % is Spark's pmod for n_shards > 0

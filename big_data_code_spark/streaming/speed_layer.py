@@ -303,11 +303,18 @@ def bounce_counts(visits: DataFrame) -> DataFrame:
 
 #: state-store partition count for bounded local runs. Streaming
 #: aggs pin one state store per shuffle partition and AQE cannot
-#: coalesce them — at 32 partitions the per-store open/commit cost
-#: dominates a bounded run (measured 2.5-10s vs a stable 1.5s at 8
-#: for the same query at sf0.1). Production sizes this to key
-#: cardinality via spark.sql.shuffle.partitions BEFORE first start
-#: (it is frozen into the checkpoint).
+#: coalesce them, so every trigger commits every store, empty or
+#: not. On the no-fork local filesystem (`session.get_spark`) a
+#: commit costs ~8-10 ms of task time per store, ~90 ms when each
+#: spawned chmod/readlink processes: `streaming_pageviews_hourly`,
+#: sf0.1, 4 cores, one trigger over 3600 state rows, summed commit
+#: 5 / 64 / 313 ms at 1 / 8 / 32 stores (54 / 765 / 2915 ms on the
+#: stock filesystem), trigger 313 / 378 / 856 ms. 8 keeps the
+#: stateful stage parallel on a local run's cores for ~65 ms of
+#: commits per trigger over 1 store; 32 already doubles the
+#: trigger. Production sizes this to key cardinality via
+#: spark.sql.shuffle.partitions BEFORE first start (it is frozen
+#: into the checkpoint).
 STREAM_SHUFFLE_PARTITIONS = 8
 
 #: ...EXCEPT for `applyInPandasWithState` streams, which pay a

@@ -826,9 +826,10 @@ def test_master_dataset_reads_infer_once_per_version(spark, tmp_path):
 
 
 def test_keyvalue_lookup_infers_the_domain_once_per_export(spark, tmp_path):
-    """A lookup costs the shard hash, the inference of the domain's
-    schema and the scan: 3 jobs. Later lookups of the same export
-    skip the inference (one job fewer); a re-export pays it again."""
+    """A lookup costs the inference of the domain's schema and the
+    scan: 2 jobs (the shard hash runs in the JVM, no job). Later
+    lookups of the same export skip the inference (one job fewer); a
+    re-export pays it again."""
     from big_data_code_spark.serving import keyvalue as kv
 
     view = spark.createDataFrame([(f"k{i}", i) for i in range(20)], "k string, v long")
@@ -844,9 +845,204 @@ def test_keyvalue_lookup_infers_the_domain_once_per_export(spark, tmp_path):
     export()
     (first, first_jobs), (second, second_jobs) = lookup("k3"), lookup("k11")
     assert [r["v"] for r in first] == [3] and [r["v"] for r in second] == [11]
-    assert (first_jobs, second_jobs) == (3, 2)
+    assert (first_jobs, second_jobs) == (2, 1)
     export()
-    assert lookup("k5")[1] == 3
+    assert lookup("k5")[1] == 2
+
+
+def test_python_hash_mod_matches_the_export_hash(spark):
+    """The lookup's in-JVM shard hash equals the export's
+    ``pmod(xxhash64(key), n)`` on empty, ASCII, non-ASCII and long keys."""
+    from big_data_code_spark.serving import keyvalue as kv
+
+    keys = ["", "a", "/index.html/hour-1700000000", "páge/ünï-ß", "页面/日-💡", "x" * 1000]
+    frame = spark.createDataFrame([(k,) for k in keys], "k string")
+    for n in (1, 4, 32):
+        shards = frame.select("k", kv.hash_mod_shard(F.col("k"), n).alias("s")).collect()
+        want = {r["k"]: r["s"] for r in shards}
+        got, jobs = _jobs_run(spark, lambda: {k: kv.python_hash_mod(k, n, spark) for k in keys})
+        assert got == want and jobs == 0
+
+
+def _fs_effects(spark, fs, base: str) -> dict:
+    """What ``fs`` leaves on disk and reports, paths relative to
+    ``base``: for each of 4 modes, a directory made with it and a file
+    created and then set to it, in a directory set to it last; the
+    ``os.stat`` modes and the tree's file names (``.crc`` siblings
+    included); `getFileLinkStatus` of a file, a directory, a symlink
+    and a scheme-less path to the symlink; the errors of
+    `getFileLinkStatus` and `setPermission` on a missing path."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    Path, Perm = jvm.org.apache.hadoop.fs.Path, jvm.org.apache.hadoop.fs.permission.FsPermission
+    out: dict = {}
+    for mode in (0o755, 0o644, 0o700, 0o1777):
+        made, d = os.path.join(base, f"made{mode:o}"), os.path.join(base, f"set{mode:o}")
+        fs.mkdirs(Path(made), Perm(mode))
+        fs.mkdirs(Path(d))
+        stream = fs.create(Path(os.path.join(d, "part-0")), True)
+        stream.write(b"abc")
+        stream.close()
+        fs.setPermission(Path(os.path.join(d, "part-0")), Perm(mode))
+    out["tree"] = sorted(
+        (os.path.relpath(os.path.join(r, n), base), os.lstat(os.path.join(r, n)).st_mode)
+        for r, dirs, names in os.walk(base) for n in dirs + names
+    )
+    for mode in (0o755, 0o644, 0o700, 0o1777):
+        fs.setPermission(Path(os.path.join(base, f"set{mode:o}")), Perm(mode))
+        out[mode] = os.stat(os.path.join(base, f"set{mode:o}")).st_mode
+    f = os.path.join(base, "made755", "f")
+    open(f, "wb").close()
+    link = os.path.join(base, "link")
+    os.symlink(f, link)
+
+    def status(p):
+        st = fs.getFileLinkStatus(Path(p))
+        target = st.getSymlink().toString().replace(base, "<base>") if st.isSymlink() else None
+        return st.isSymlink(), st.isDirectory(), st.getLen(), target
+
+    out["status"] = [status(p) for p in ("file:" + f, "file:" + base, "file:" + link, link)]
+    missing = Path("file:" + os.path.join(base, "missing"))
+    out["missing"] = []
+    for call in (lambda: fs.getFileLinkStatus(missing), lambda: fs.setPermission(missing, Perm(0o644))):
+        with pytest.raises(Py4JJavaError) as err:
+            call()
+        exc = err.value.java_exception
+        out["missing"].append((exc.getClass().getName(), exc.getMessage().replace(base, "<base>")))
+    return out
+
+
+def _fc_rename_effects(spark, abstract_fs: str, base: str) -> tuple:
+    """With ``abstract_fs`` bound to ``file:``, FileContext renames in
+    ``base`` as a streaming checkpoint does them: onto a new name, onto
+    an existing one (the error) and with OVERWRITE. Returns the error
+    class, the files and modes left and the renamed file's bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    os.makedirs(base)
+    jvm = spark._jvm
+    fsys, gw = jvm.org.apache.hadoop.fs, spark.sparkContext._gateway
+    conf = jvm.org.apache.hadoop.conf.Configuration(spark.sparkContext._jsc.hadoopConfiguration())
+    conf.set("fs.AbstractFileSystem.file.impl", abstract_fs)
+    fc = fsys.FileContext.getFileContext(jvm.java.net.URI("file:///"), conf)
+    assert fc.getDefaultFileSystem().getClass().getName() == abstract_fs
+
+    def create(name):
+        flags = jvm.java.util.EnumSet.of(fsys.CreateFlag.CREATE)
+        out = fc.create(fsys.Path(os.path.join(base, name)), flags, gw.new_array(fsys.Options.CreateOpts, 0))
+        out.write(name.encode())
+        out.close()
+
+    def rename(src, dst, *opts):
+        arr = gw.new_array(fsys.Options.Rename, len(opts))
+        for i, o in enumerate(opts):
+            arr[i] = o
+        fc.rename(fsys.Path(os.path.join(base, src)), fsys.Path(os.path.join(base, dst)), arr)
+
+    create("a")
+    rename("a", "b")
+    create("c")
+    with pytest.raises(Py4JJavaError) as clash:
+        rename("c", "b")
+    rename("c", "b", fsys.Options.Rename.OVERWRITE)
+    left = sorted((n, os.stat(os.path.join(base, n)).st_mode) for n in os.listdir(base))
+    with open(os.path.join(base, "b"), "rb") as fh:
+        return clash.value.java_exception.getClass().getName(), left, fh.read()
+
+
+def test_nofork_filesystem_matches_the_stock_local_filesystem(spark, tmp_path):
+    """`NoForkLocalFileSystem` (checksummed and raw) leaves the same
+    permission bits and ``.crc`` files as Hadoop's `LocalFileSystem`
+    / `RawLocalFileSystem` and reports the same link statuses and
+    missing-path error; its FileContext binding renames the same as
+    Hadoop's `LocalFs`."""
+    jvm = spark._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    for level, pick in (("checksummed", lambda fs: fs), ("raw", lambda fs: fs.getRaw())):
+        # fresh instances, outside the FileSystem cache
+        stock = jvm.org.apache.hadoop.fs.LocalFileSystem()
+        nofork = jvm.big_data_code_spark.jvm.NoForkLocalFileSystem()
+        for fs in (stock, nofork):
+            fs.initialize(jvm.java.net.URI("file:///"), conf)
+        stock, nofork = pick(stock), pick(nofork)
+        want = _fs_effects(spark, stock, str(tmp_path / level / "stock"))
+        assert _fs_effects(spark, nofork, str(tmp_path / level / "nofork")) == want
+        assert ("set755/.part-0.crc" in dict(want["tree"])) == (level == "checksummed")
+        assert [s[0] for s in want["status"]] == [False, False, False, True]
+
+    want = _fc_rename_effects(spark, "org.apache.hadoop.fs.local.LocalFs", str(tmp_path / "fc_stock"))
+    assert [n for n, _ in want[1]] == [".b.crc", "b"] and want[2] == b"c"
+    nofork_fs = "big_data_code_spark.jvm.NoForkLocalFileSystem$Fs"
+    assert _fc_rename_effects(spark, nofork_fs, str(tmp_path / "fc_nofork")) == want
+
+
+def test_nofork_jar_is_built_from_its_source(spark, tmp_path):
+    """The committed ``nofork.jar`` holds exactly the classes javac
+    makes from ``NoForkLocalFileSystem.java`` (rebuild command in the
+    source header)."""
+    import subprocess
+    import zipfile
+
+    from big_data_code_spark import session
+
+    system = spark._jvm.System
+    javac = os.path.join(system.getProperty("java.home"), "bin", "javac")
+    if not os.path.exists(javac):
+        pytest.skip(f"no javac beside the session JVM ({javac})")
+    jvm_dir = os.path.dirname(session._NOFORK_JAR)
+    subprocess.run(
+        [javac, "--release", "17", "-cp", system.getProperty("java.class.path"),
+         "-d", str(tmp_path), os.path.join(jvm_dir, "NoForkLocalFileSystem.java")],
+        check=True,
+    )
+    built = {p.relative_to(tmp_path).as_posix(): p.read_bytes() for p in tmp_path.rglob("*.class")}
+    with zipfile.ZipFile(session._NOFORK_JAR) as jar:
+        committed = {n: jar.read(n) for n in jar.namelist() if n.endswith(".class")}
+    assert committed == built
+
+
+def test_local_writes_and_streaming_commits_fork_no_process(spark, tmp_path):
+    """A JFR recording (``jdk.ProcessStart``) of a master-dataset
+    ingest + consolidate, a 4-shard key/value export and
+    `streaming_pageviews_hourly` sees no ``chmod`` or ``readlink``
+    process; with Hadoop's stock local filesystem it sees hundreds.
+    ``jcmd``/``jfr`` come from the session JVM's ``java.home``."""
+    import re
+    import subprocess
+
+    from big_data_code_spark.plans.registry import QUERIES
+    from big_data_code_spark.serving import keyvalue as kv
+    from big_data_code_spark.sources.master_dataset import MasterDataset
+
+    jvm = spark._jvm
+    bin_dir = os.path.join(jvm.System.getProperty("java.home"), "bin")
+    pid = str(jvm.ProcessHandle.current().pid())
+    rec = str(tmp_path / "forks.jfr")
+
+    def jcmd(*args):
+        subprocess.run([os.path.join(bin_dir, "jcmd"), pid, *args], check=True, capture_output=True)
+
+    jcmd("JFR.start", "name=nofork_test", "settings=default")
+    try:
+        md = MasterDataset(str(tmp_path / "master"))
+        md.ingest(_unit_batch(spark, 10, 5), shred_partitions=4)
+        md.ingest(_unit_batch(spark, 7, 3))
+        md.consolidate(spark)
+        view = spark.createDataFrame([(f"k{i}", i) for i in range(20)], "k string, v long")
+        shard = kv.hash_mod_shard(F.col("k"), 4)
+        kv.export_key_value(view, str(tmp_path / "domain"), F.col("k"), ["v"], shard)
+        QUERIES["streaming_pageviews_hourly"](spark, SF_SMOKE).collect()
+        jvm.java.lang.Runtime.getRuntime().exec("true").waitFor()  # the recording sees forks
+    finally:
+        jcmd("JFR.stop", "name=nofork_test", f"filename={rec}")
+    printed = subprocess.run(
+        [os.path.join(bin_dir, "jfr"), "print", "--events", "jdk.ProcessStart", rec],
+        check=True, capture_output=True, text=True,
+    ).stdout
+    commands = re.findall(r'command = "([^"]*)"', printed)
+    assert "true" in commands
+    assert [c for c in commands if c.split(" ")[0] in ("chmod", "readlink")] == []
 
 
 #: DuckDB result type → the Spark simpleString(s) that land on the
