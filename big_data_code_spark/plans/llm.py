@@ -34,7 +34,7 @@ from ..functions.text import (
 )
 from ..cacheutil import materialize, serve_once
 from ..operators import ann, dedup
-from ..sources.tables import load_table, staging_dir
+from ..sources.tables import load_table, staged
 
 # ---------------------------------------------------------------- corpus
 
@@ -3986,7 +3986,7 @@ def exact_substring_dedup(
     # counts do, so the oracle contract is untouched), and the
     # 32-char string keys quadrupled the h-shuffle volume and
     # dominated the sort at sf10 (84s → 54s measured on the
-    # shuffle-side legs; `tools/probe_sf10.py`).
+    # shuffle-side legs of an sf10 probe).
     win = track_persisted(
         corpus.select(
             "doc_id",
@@ -12105,46 +12105,26 @@ def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     gone and any open string stays open), so the quarantine set is
     exactly the seeded ids — which is what the oracle restates from
     the parquet side. Staging is a one-time per-corpus tmp write
-    (`staging_dir`); the read is one schema-enforced
+    (`staged`); the read is one schema-enforced
     scan + a combinable rollup.
 
     Returns (source, n_rows, n_chars_sum) per source, plus one
     ('__quarantine__', torn-line count, 0) row.
     """
-    import os
-    import uuid
-
     from ..sources import ingest
 
     docs = load_table(spark, sf_dir, "documents")
-    out_dir = staging_dir(sf_dir, "documents", "jsonl_ingest")
-    if not os.path.exists(out_dir):
-        line = F.to_json(
-            F.struct("doc_id", "lang", "source", "n_chars", "text")
-        )
-        torn = F.when(
-            F.col("doc_id") % JSONL_CORRUPT_MOD == 0,
-            F.expr(
-                "substring(j, 1, CAST(floor(length(j) / 2) AS INT))"
-            ),
-        ).otherwise(F.col("j"))
-        # build under a unique temp name, then one atomic rename —
-        # a concurrent reader can never see a half-committed drop
-        # (the master_roundtrip_counts staging contract; r7 advice
-        # #1 flagged the old exists-check + mode('ignore') write)
-        build = f"{out_dir}_build_{uuid.uuid4().hex[:8]}"
-        docs.select("doc_id", line.alias("j")).select(
-            torn.alias("value")
-        ).write.mode("overwrite").text(build)
-        try:
-            os.rename(build, out_dir)
-        except OSError:
-            # lost the race to a concurrent builder — theirs wins,
-            # but reap our build dir (r9, ADVICE: a full text copy
-            # of the corpus would otherwise leak per collision)
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
+    line = F.to_json(F.struct("doc_id", "lang", "source", "n_chars", "text"))
+    torn = F.when(
+        F.col("doc_id") % JSONL_CORRUPT_MOD == 0,
+        F.expr("substring(j, 1, CAST(floor(length(j) / 2) AS INT))"),
+    ).otherwise(F.col("j"))
+    out_dir = staged(
+        sf_dir,
+        "documents",
+        "jsonl_ingest",
+        docs.select("doc_id", line.alias("j")).select(torn.alias("value")).write.text,
+    )
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -12496,34 +12476,16 @@ def master_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (unit, key, n_facts): one row per (page_view, url) plus
     one ('equiv', 'ALL') row.
     """
-    import os
-    import uuid
-
     from ..schema import equiv_facts, pageview_facts
     from ..sources.master_dataset import MasterDataset
     from .swa import _equiv_edges
 
-    out = staging_dir(sf_dir, "events", "master")
-    if not os.path.exists(out):
-        build = f"{out}_build_{uuid.uuid4().hex[:8]}"
-        md = MasterDataset(build)
-        events = load_table(spark, sf_dir, "events")
-        md.ingest(pageview_facts(events))
-        md.ingest(
-            equiv_facts(
-                _equiv_edges(spark, sf_dir), "src", "dst", F.lit(0)
-            )
-        )
-        try:
-            os.rename(build, out)
-        except OSError:
-            # lost the race to a concurrent builder — theirs wins,
-            # but reap our build dir (r9, ADVICE: the staged copy
-            # would otherwise leak per collision/rerun)
-            import shutil
+    def build(private: str) -> None:
+        md = MasterDataset(private)
+        md.ingest(pageview_facts(load_table(spark, sf_dir, "events")))
+        md.ingest(equiv_facts(_equiv_edges(spark, sf_dir), "src", "dst", F.lit(0)))
 
-            shutil.rmtree(build, ignore_errors=True)
-    store = MasterDataset(out)
+    store = MasterDataset(staged(sf_dir, "events", "master", build))
     facts = store.read(spark)
     return facts.groupBy(
         "unit",
@@ -12571,21 +12533,14 @@ def training_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side read-back agg; min/max/count catch loss/duplication,
     the row_index identity catches ordering regressions.
     """
-    import os
-    import uuid
-
     from ..sources.training_export import export_training_shards
 
-    out = staging_dir(sf_dir, "documents", "train_export")
-    if not os.path.exists(out):
-        build = f"{out}_build_{uuid.uuid4().hex[:8]}"
-        export_training_shards(corpus_shuffle(spark, sf_dir), build)
-        try:
-            os.rename(build, out)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
+    out = staged(
+        sf_dir,
+        "documents",
+        "train_export",
+        lambda private: export_training_shards(corpus_shuffle(spark, sf_dir), private),
+    )
     back = spark.read.parquet(out).select(
         F.col("shard").cast("int").alias("shard"),
         "pos",
@@ -13296,23 +13251,9 @@ def orc_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown intact — ORC is a native vectorized source) + one
     combinable rollup. Returns (source, n_rows, n_chars_sum).
     """
-    import os
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents")
-    out = staging_dir(sf_dir, "documents", "orc_rt")
-    if not os.path.exists(out):
-        build = f"{out}_build_{uuid.uuid4().hex[:8]}"
-        docs.write.mode("overwrite").option(
-            "compression", "zstd"
-        ).orc(build)
-        try:
-            os.rename(build, out)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
-    back = spark.read.orc(out)
+    write = docs.write.option("compression", "zstd").orc
+    back = spark.read.orc(staged(sf_dir, "documents", "orc_rt", write))
     return back.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("n_chars").cast("long").alias("n_chars_sum"),
@@ -13355,30 +13296,20 @@ def csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (source, n_rows, n_chars_sum) per source plus one
     ('__quarantine__', mangled-row count, 0) row.
     """
-    import os
-    import uuid
-
     from ..sources import ingest
 
     docs = load_table(spark, sf_dir, "documents")
-    out_dir = staging_dir(sf_dir, "documents", "csv_ingest")
-    if not os.path.exists(out_dir):
-        key = F.when(
-            F.col("doc_id") % CSV_CORRUPT_MOD == 0,
-            F.concat(F.lit("X"), F.col("doc_id").cast("string")),
-        ).otherwise(F.col("doc_id").cast("string"))
-        line = F.concat_ws(
-            ",", key, F.col("lang"), F.col("source"),
-            F.col("n_chars").cast("string"), F.col("text"),
-        )
-        build = f"{out_dir}_build_{uuid.uuid4().hex[:8]}"
-        docs.select(line.alias("value")).write.mode("overwrite").text(build)
-        try:
-            os.rename(build, out_dir)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
+    key = F.when(
+        F.col("doc_id") % CSV_CORRUPT_MOD == 0,
+        F.concat(F.lit("X"), F.col("doc_id").cast("string")),
+    ).otherwise(F.col("doc_id").cast("string"))
+    line = F.concat_ws(
+        ",", key, F.col("lang"), F.col("source"),
+        F.col("n_chars").cast("string"), F.col("text"),
+    )
+    out_dir = staged(
+        sf_dir, "documents", "csv_ingest", docs.select(line.alias("value")).write.text
+    )
     from pyspark.sql.types import (
         LongType,
         StringType,

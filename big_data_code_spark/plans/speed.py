@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,54 +27,44 @@ from pyspark.sql import functions as F
 
 from ..cacheutil import materialize
 from ..functions.timebuckets import epoch_us, us_to_ts
-from ..sources.tables import load_table, staging_dir
+from ..sources.tables import load_table, staged, table_path
 from ..streaming import speed_layer as sl
 
 
 def _events_src(sf_dir: str) -> str:
     """FileStreamSource needs a *directory*; stage the events
     parquet into one via symlink (falling back to copy)."""
-    out_dir = staging_dir(sf_dir, "events", "swa_stream_src")
-    link = os.path.join(out_dir, "00.parquet")
-    if not os.path.lexists(link):
-        os.makedirs(out_dir, exist_ok=True)
-        src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+
+    def build(private: str) -> None:
+        os.makedirs(private)
+        src = os.path.abspath(table_path(sf_dir, "events"))
+        link = os.path.join(private, "00.parquet")
         try:
             os.symlink(src, link)
         except OSError:
             shutil.copyfile(src, link)
-    return out_dir
+
+    return staged(sf_dir, "events", "swa_stream_src", build)
 
 
 def _staged_chunks(
     sf_dir: str, table: str, prefix: str, frames: Callable[[], Iterable[DataFrame]]
 ) -> str:
     """Write ``frames()`` as one parquet file each, in stream order,
-    into a `staging_dir` of ``table`` — strictly increasing mtimes
+    into a `staged` dir of ``table`` — strictly increasing mtimes
     fix the file-stream batch order, so ``maxFilesPerTrigger=1``
     reads one chunk per micro-batch. Staged once per version of
-    ``table``: a hit costs the fingerprint stat and one ``isdir``,
-    and ``frames`` runs only on a miss. The chunks are written to a
-    private dir renamed into place, so a concurrent reader never
-    sees a partial staging."""
-    out_dir = staging_dir(sf_dir, table, prefix)
-    if os.path.isdir(out_dir):
-        return out_dir
-    tmp_dir = f"{out_dir}.tmp-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp_dir)
-    for i, df in enumerate(frames()):
-        tmp = os.path.join(tmp_dir, f"_tmp_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        chunk = os.path.join(tmp_dir, f"{i:02d}.parquet")
-        os.replace(os.path.join(tmp, part), chunk)
-        shutil.rmtree(tmp)
-        os.utime(chunk, (1_700_000_000 + i, 1_700_000_000 + i))
-    try:
-        os.rename(tmp_dir, out_dir)
-    except OSError:  # a concurrent staging of the same version won
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-    return out_dir
+    ``table``; ``frames`` runs only on a miss."""
+
+    def build(private: str) -> None:
+        for i, df in enumerate(frames()):
+            df.coalesce(1).write.mode("append").parquet(private)
+            part = next(f for f in os.listdir(private) if f.startswith("part-"))
+            chunk = os.path.join(private, f"{i:02d}.parquet")
+            os.replace(os.path.join(private, part), chunk)
+            os.utime(chunk, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    return staged(sf_dir, table, prefix, build)
 
 
 def streaming_pageviews_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,11 +461,11 @@ def lambda_merged_pageviews(
     )
 
     recent = events.where(F.col("ts") > cutoff)
-    speed_src = staging_dir(sf_dir, "events", "swa_speed_recent")
-    (
-        recent.select("event_id", "ts", "user_id", "event_type")
-        .write.mode("overwrite")
-        .parquet(speed_src)
+    speed_src = staged(
+        sf_dir,
+        "events",
+        f"swa_speed_recent_{cutoff_us}",
+        recent.select("event_id", "ts", "user_id", "event_type").write.parquet,
     )
     stream = sl.events_file_stream(spark, speed_src)
     speed_part = sl.run_stream_to_table(
@@ -910,11 +899,11 @@ def lambda_merged_uniques_hll(
         )
     )
     recent = events.where(F.col("ts") > cutoff)
-    speed_src = staging_dir(sf_dir, "events", "swa_speed_uniq")
-    (
-        recent.select("event_id", "ts", "user_id", "event_type")
-        .write.mode("overwrite")
-        .parquet(speed_src)
+    speed_src = staged(
+        sf_dir,
+        "events",
+        f"swa_speed_uniq_{cutoff_us}",
+        recent.select("event_id", "ts", "user_id", "event_type").write.parquet,
     )
     stream = sl.events_file_stream(spark, speed_src)
     speed_sketches = sl.run_stream_to_table(

@@ -14,14 +14,36 @@ manifest), so a rewritten file or part-file directory re-infers, and
 a newer version replaces the entry for its path. Only the schema is
 kept, never a DataFrame: each read still builds a fresh relation with
 fresh attribute ids, so self-joins of two reads stay unambiguous.
+
+Staging. Data derived from one version of an input table (a JSONL
+drop, a chunked stream source, a master dataset) is staged once under
+the temp dir by `staged`, the package's only way to create a
+`staging_dir`. A reader never sees a half-built dir (≙ a Pail's
+atomic ``absorb``, ElephantDB's whole-version swap):
+
+- hit: the dir exists; the cost is the fingerprint stat plus one
+  ``isdir``, and nothing is built;
+- miss: ``build(private)`` fills a private sibling path that does not
+  exist yet (``<prefix>_build_<hex>``), which is then renamed into
+  place in one ``os.rename``;
+- lost race: if another process committed the dir first, the rename
+  fails, the private dir is removed and the winner's dir returned;
+  any other rename failure is raised;
+- failed build: the private dir is removed and the error raised;
+- prune: a miss first removes the prefix's private dirs over an hour
+  old (`prune_stale_dirs`), which only a dead process leaves behind.
 """
 
 from __future__ import annotations
 
+import errno
 import hashlib
 import os
+import shutil
 import stat
 import tempfile
+import time
+import uuid
 from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
@@ -137,11 +159,50 @@ def fingerprint(path: str) -> tuple[str, int, int]:
 
 
 def staging_dir(sf_dir: str, table: str, prefix: str) -> str:
-    """Scratch dir for data staged from one version of ``table``: the
-    name carries a hash of the absolute ``sf_dir`` and the table's
+    """Name of the dir `staged` commits for one version of ``table``:
+    it carries a hash of the absolute ``sf_dir`` and the table's
     `fingerprint`, so a rewritten table gets a fresh dir and two
     inputs sharing a basename never collide. Finding it costs the
     fingerprint's stat and no read of the table."""
     _, mtime_ns, size = fingerprint(table_path(sf_dir, table))
     h = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"{prefix}_v2_{h}_{mtime_ns}_{size}")
+
+
+def prune_stale_dirs(prefix: str) -> None:
+    """Remove ``<prefix>*`` dirs under the temp dir that are over an
+    hour old: left by dead processes, never by a live concurrent
+    run. A concurrent run may remove a dir between the listdir and
+    the stat, so a vanished dir is skipped."""
+    root = tempfile.gettempdir()
+    for d in os.listdir(root):
+        if not d.startswith(prefix):
+            continue
+        p = os.path.join(root, d)
+        try:
+            stale = time.time() - os.path.getmtime(p) > 3600
+        except FileNotFoundError:
+            continue
+        if stale:
+            shutil.rmtree(p, ignore_errors=True)
+
+
+def staged(sf_dir: str, table: str, prefix: str, build: Callable[[str], object]) -> str:
+    """The `staging_dir` of ``table`` under ``prefix``, built by
+    ``build(private)`` on a miss and committed with one rename (see
+    "Staging" in the module docstring)."""
+    out = staging_dir(sf_dir, table, prefix)
+    if os.path.isdir(out):
+        return out
+    prune_stale_dirs(f"{prefix}_build_")
+    private = os.path.join(tempfile.gettempdir(), f"{prefix}_build_{uuid.uuid4().hex[:8]}")
+    try:
+        build(private)
+        try:
+            os.rename(private, out)
+        except OSError as e:  # lost the race unless ``out`` is still missing
+            if e.errno not in (errno.EEXIST, errno.ENOTEMPTY) or not os.path.isdir(out):
+                raise
+    finally:
+        shutil.rmtree(private, ignore_errors=True)  # gone already after a commit
+    return out

@@ -35,7 +35,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import time
 import uuid
 from collections.abc import Callable, Iterator
 from typing import Any
@@ -54,6 +53,7 @@ from pyspark.sql.types import (
 
 from .. import cacheutil
 from ..functions.timebuckets import ntz_to_ltz
+from ..sources.tables import prune_stale_dirs
 
 #: at-rest schema of the pageview stream. events.parquet stores ts
 #: as parquet timestamp[us] with no tz → TIMESTAMP_NTZ (the
@@ -361,24 +361,6 @@ def _last_executed_plan(q: Any) -> Any:
     return None if last is None else last.executedPlan()
 
 
-def _prune_stale_dirs(prefix: str) -> None:
-    """Remove ``<prefix>*`` dirs under the temp dir that are over an
-    hour old: left by dead processes, never by a live concurrent
-    run. A concurrent run may remove a dir between the listdir and
-    the stat, so a vanished dir is skipped."""
-    root = tempfile.gettempdir()
-    for d in os.listdir(root):
-        if not d.startswith(prefix):
-            continue
-        p = os.path.join(root, d)
-        try:
-            stale = time.time() - os.path.getmtime(p) > 3600
-        except FileNotFoundError:
-            continue
-        if stale:
-            shutil.rmtree(p, ignore_errors=True)
-
-
 def _commit_version(df: DataFrame, store_dir: str, vname: str) -> None:
     """Write ``df`` as version ``vname`` of a versioned store, then
     atomically flip its ``_CURRENT`` pointer to it (write-temp +
@@ -423,7 +405,7 @@ def run_foreach_batch(
       version is read back (`read_store`).
     """
     spark = stream_df.sparkSession
-    _prune_stale_dirs(prefix)
+    prune_stale_dirs(prefix)
     sink = os.path.join(tempfile.gettempdir(), f"{prefix}{uuid.uuid4().hex[:10]}")
 
     def write(frame: DataFrame, vname: str) -> None:

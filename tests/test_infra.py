@@ -698,6 +698,160 @@ def test_streams_run_only_through_speed_layer():
     assert not hidden, hidden
 
 
+def test_staged_is_the_only_staging_commit():
+    """`staging_dir(` is called only inside `sources/tables.py` (by
+    `staged`), and no plan module renames or removes a dir itself."""
+    import pathlib
+
+    import big_data_code_spark
+
+    root = pathlib.Path(big_data_code_spark.__file__).parent
+
+    def lines_with(paths, *needles):
+        return [
+            f"{path.relative_to(root)}:{i}"
+            for path in sorted(paths)
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if any(n in line for n in needles)
+        ]
+
+    calls = lines_with(root.rglob("*.py"), "staging_dir(")
+    assert calls and all(c.startswith("sources/tables.py:") for c in calls), calls
+    assert not lines_with((root / "plans").rglob("*.py"), "os.rename(", "rmtree("), "plans"
+
+
+def _private_dirs(prefix: str) -> list[str]:
+    import tempfile
+
+    return [d for d in os.listdir(tempfile.gettempdir()) if d.startswith(f"{prefix}_build_")]
+
+
+def _fresh_prefix() -> str:
+    import uuid
+
+    return f"staged_test_{uuid.uuid4().hex[:8]}"
+
+
+def test_staged_commits_one_of_two_concurrent_builds(tmp_path):
+    """Two threads miss one fresh staging dir and both build (each
+    `build` waits until both are inside): both return the same dir,
+    which holds exactly one build's files, and the loser's private
+    dir is gone."""
+    import shutil
+    import threading
+
+    from big_data_code_spark.sources.tables import staged
+
+    prefix, barrier, results = _fresh_prefix(), threading.Barrier(2), []
+
+    def build(private):
+        os.makedirs(private)
+        open(os.path.join(private, f"built_by_{threading.get_ident()}"), "w").close()
+        barrier.wait(timeout=60)
+
+    def run():
+        results.append(staged(str(tmp_path), "events", prefix, build))
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert len(results) == 2 and results[0] == results[1], results
+        assert len(os.listdir(results[0])) == 1
+        assert not _private_dirs(prefix)
+    finally:
+        shutil.rmtree(results[0], ignore_errors=True)
+
+
+def test_staged_reaps_a_failed_build(tmp_path):
+    """A `build` that raises propagates its error and leaves neither
+    the staging dir nor its private dir."""
+    from big_data_code_spark.sources.tables import staged, staging_dir
+
+    prefix = _fresh_prefix()
+
+    def build(private):
+        os.makedirs(private)
+        open(os.path.join(private, "half"), "w").close()
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        staged(str(tmp_path), "events", prefix, build)
+    assert not os.path.exists(staging_dir(str(tmp_path), "events", prefix))
+    assert not _private_dirs(prefix)
+
+
+def test_staged_hit_never_builds_and_a_miss_prunes_dead_builds(tmp_path):
+    """A miss removes its prefix's hour-old private dirs (a dead
+    process's) and keeps a fresh one (a live build's); a second
+    call is a hit: it neither builds nor prunes."""
+    import shutil
+    import tempfile
+    import time
+
+    from big_data_code_spark.sources.tables import staged
+
+    prefix, calls = _fresh_prefix(), []
+    dead, live, dead_later = (
+        os.path.join(tempfile.gettempdir(), f"{prefix}_build_{n}")
+        for n in ("dead", "live", "deadlater")
+    )
+    old = time.time() - 2 * 3600
+    for d in (dead, live):
+        os.makedirs(d)
+    os.utime(dead, (old, old))
+
+    def build(private):
+        calls.append(private)
+        os.makedirs(private)
+
+    out = staged(str(tmp_path), "events", prefix, build)
+    try:
+        assert not os.path.exists(dead) and os.path.isdir(live)
+        os.makedirs(dead_later)
+        os.utime(dead_later, (old, old))
+        assert staged(str(tmp_path), "events", prefix, build) == out
+        assert len(calls) == 1 and os.path.isdir(dead_later)
+    finally:
+        for d in (out, live, dead_later):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_events_src_loses_a_race_to_another_process(tmp_path, monkeypatch):
+    """Another process commits the events staging after this one's
+    check and before its commit (its link lands first): this one
+    returns the winner's dir instead of failing in the copy
+    fallback, and leaves no private dir."""
+    import shutil
+
+    from big_data_code_spark.plans import speed
+    from big_data_code_spark.sources.tables import staging_dir, table_path
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    os.symlink(table_path(SF_SMOKE, "events"), table_path(sf, "events"))
+    winner = staging_dir(sf, "events", "swa_stream_src")
+    real_symlink = os.symlink
+
+    def winner_first(src, link):
+        monkeypatch.setattr(os, "symlink", real_symlink)
+        os.makedirs(winner, exist_ok=True)
+        real_symlink(src, os.path.join(winner, "00.parquet"))
+        real_symlink(src, link)
+
+    before = set(_private_dirs("swa_stream_src"))
+    monkeypatch.setattr(os, "symlink", winner_first)
+    try:
+        assert speed._events_src(sf) == winner
+        assert os.listdir(winner) == ["00.parquet"]
+        assert set(_private_dirs("swa_stream_src")) <= before
+    finally:
+        shutil.rmtree(winner, ignore_errors=True)
+
+
 def test_bench_covers_every_registry_query():
     """The bench rows are the registry minus written exclusions
     (VERDICT r4 #5): every exclusion names a registered query and

@@ -149,6 +149,51 @@ def test_lambda_merge_equals_full_batch(spark):
     assert_matches_oracle(spark, "lambda_merged_pageviews", SF_SMOKE)
 
 
+def test_lambda_merge_stages_its_recent_part_once_per_cutoff(spark, tmp_path):
+    """The speed view's input is staged once per (events version,
+    cutoff): two cutoffs in one session each merge to the full
+    hourly rollup, and a repeat at one cutoff writes nothing (the
+    staged dir's mtime is unchanged) and starts fewer Spark jobs."""
+    import shutil
+
+    from tests.conftest import duck_con
+
+    from big_data_code_spark.functions.timebuckets import epoch_us
+    from big_data_code_spark.plans.speed import (
+        LAMBDA_MERGED_PAGEVIEWS_SQL,
+        lambda_merged_pageviews,
+    )
+    from big_data_code_spark.sources.tables import load_table, staging_dir, table_path
+
+    sf = str(tmp_path / "sf")  # a fresh sf_dir, so the first calls stage
+    os.makedirs(sf)
+    os.symlink(table_path(SF_SMOKE, "events"), table_path(sf, "events"))
+    lo, hi = load_table(spark, sf, "events").select(
+        F.min(epoch_us("ts")), F.max(epoch_us("ts"))
+    ).first()
+    cutoffs = (lo + (hi - lo) // 2, lo + (hi - lo) * 9 // 10)
+    dirs = [staging_dir(sf, "events", f"swa_speed_recent_{c}") for c in cutoffs]
+    con = duck_con(SF_SMOKE)
+    full = sorted(con.sql(LAMBDA_MERGED_PAGEVIEWS_SQL).fetchall())
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def merge(cutoff):
+        jobs0 = dag.numTotalJobs()
+        rows = sorted(tuple(r) for r in lambda_merged_pageviews(spark, sf, cutoff).collect())
+        return rows, dag.numTotalJobs() - jobs0
+
+    try:
+        (first, _), (second, second_jobs) = merge(cutoffs[0]), merge(cutoffs[1])
+        assert first == full and second == full
+        mtime = os.stat(dirs[1]).st_mtime_ns
+        repeat, repeat_jobs = merge(cutoffs[1])
+        assert repeat == full and os.stat(dirs[1]).st_mtime_ns == mtime
+        assert repeat_jobs < second_jobs, (repeat_jobs, second_jobs)
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     """Duplicate event_ids across micro-batches collapse to one."""
     from big_data_code_spark.streaming import speed_layer as sl
