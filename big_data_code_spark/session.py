@@ -16,6 +16,18 @@ replacement does the same calls in-process: same permission bits,
 same ``.crc`` files, same atomic renames. It is a JVM-start setting,
 so a session built elsewhere and handed to ``__spark_entry__``
 (``tune_session``) keeps the stock filesystem.
+
+The cache of compiled generated classes holds `CODEGEN_CACHE_ENTRIES`
+instead of Spark's 100. A repeated ``batch_views`` benchmark pass
+(SWA views, TPC-H, three key/value exports) generates the same Java
+source every time, 105-119 distinct classes, and Guava splits the
+LRU cache into 4 segments of ~25, so the default evicted and Janino
+recompiled 47-55 of them per pass (~16 ms each, and each fresh class
+runs cold in the JIT); 1000 leaves each segment more than twice the
+working set, and a warm pass compiles none
+(``CodegenMetrics.METRIC_COMPILATION_TIME``). The size is a static
+conf, read once when the JVM builds the cache, so like the
+filesystem binding it cannot be applied to a running session.
 """
 
 from __future__ import annotations
@@ -26,6 +38,8 @@ from pyspark.sql import SparkSession
 
 _NOFORK_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "nofork.jar")
 _NOFORK_FS = "big_data_code_spark.jvm.NoForkLocalFileSystem"
+#: ``spark.sql.codegen.cache.maxEntries``, see the module docstring
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "big-data-code-spark") -> SparkSession:
@@ -46,6 +60,7 @@ def get_spark(app_name: str = "big-data-code-spark") -> SparkSession:
         .config("spark.driver.extraClassPath", _NOFORK_JAR)
         .config("spark.hadoop.fs.file.impl", _NOFORK_FS)
         .config("spark.hadoop.fs.AbstractFileSystem.file.impl", _NOFORK_FS + "$Fs")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()
 
@@ -87,6 +102,9 @@ CLUSTER_PROFILE: dict[str, str] = {
     # don't blow executor memory: bytes/batch ≈ batch × asset size
     "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
     "spark.sql.parquet.compression.codec": "zstd",
+    # a long-lived executor rerunning the batch workflow regenerates
+    # the same classes each cycle; see the module docstring
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
 }
 
 

@@ -31,7 +31,12 @@ atomic ``absorb``, ElephantDB's whole-version swap):
   any other rename failure is raised;
 - failed build: the private dir is removed and the error raised;
 - prune: a miss first removes the prefix's private dirs over an hour
-  old (`prune_stale_dirs`), which only a dead process leaves behind.
+  old (`prune_stale_dirs`), which only a dead process leaves behind;
+  after its commit it removes the hour-old committed dirs of the same
+  prefix and input path, i.e. superseded versions of the input (a
+  prefix stages one table). Dirs of an input path that no longer
+  exists (a deleted sf dir, a pytest ``tmp_path`` copy) are never
+  superseded and stay.
 """
 
 from __future__ import annotations
@@ -169,16 +174,17 @@ def staging_dir(sf_dir: str, table: str, prefix: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"{prefix}_v2_{h}_{mtime_ns}_{size}")
 
 
-def prune_stale_dirs(prefix: str) -> None:
-    """Remove ``<prefix>*`` dirs under the temp dir that are over an
-    hour old: left by dead processes, never by a live concurrent
-    run. A concurrent run may remove a dir between the listdir and
-    the stat, so a vanished dir is skipped."""
+def prune_stale_dirs(prefix: str, keep: str = "") -> None:
+    """Remove ``<prefix>*`` dirs under the temp dir, except ``keep``,
+    that are over an hour old: a dead process's private dir or a
+    superseded version, never one a live concurrent run is building
+    or has just staged. A concurrent run may remove a dir between the
+    listdir and the stat, so a vanished dir is skipped."""
     root = tempfile.gettempdir()
     for d in os.listdir(root):
-        if not d.startswith(prefix):
-            continue
         p = os.path.join(root, d)
+        if not d.startswith(prefix) or p == keep:
+            continue
         try:
             stale = time.time() - os.path.getmtime(p) > 3600
         except FileNotFoundError:
@@ -205,4 +211,6 @@ def staged(sf_dir: str, table: str, prefix: str, build: Callable[[str], object])
                 raise
     finally:
         shutil.rmtree(private, ignore_errors=True)  # gone already after a commit
+    # ``<prefix>_v2_<path hash>_``: every version of this input path
+    prune_stale_dirs(os.path.basename(out).rsplit("_", 2)[0] + "_", keep=out)
     return out

@@ -820,6 +820,40 @@ def test_staged_hit_never_builds_and_a_miss_prunes_dead_builds(tmp_path):
             shutil.rmtree(d, ignore_errors=True)
 
 
+def test_staged_miss_prunes_superseded_versions_of_its_input(tmp_path):
+    """After a miss commits, the hour-old dirs the prefix staged from
+    older versions of the same input path are removed; a fresh one
+    (a concurrent reader's) and an hour-old one of another input path
+    stay, and a hit prunes nothing."""
+    import shutil
+    import time
+
+    from big_data_code_spark.sources.tables import staged, staging_dir
+
+    prefix, sf = _fresh_prefix(), str(tmp_path / "sf")
+    os.makedirs(sf)
+    stem = staging_dir(sf, "events", prefix).rsplit("_", 2)[0]
+    old_version, fresh_version, old_version_later = (f"{stem}_{n}_1" for n in (111, 222, 333))
+    other_path = staging_dir(str(tmp_path), "events", prefix)
+    old = time.time() - 2 * 3600
+    for d in (old_version, fresh_version, other_path):
+        os.makedirs(d)
+    for d in (old_version, other_path):
+        os.utime(d, (old, old))
+
+    out = staged(sf, "events", prefix, os.makedirs)
+    try:
+        assert not os.path.exists(old_version)
+        assert os.path.isdir(out) and os.path.isdir(fresh_version) and os.path.isdir(other_path)
+        os.makedirs(old_version_later)
+        os.utime(old_version_later, (old, old))
+        assert staged(sf, "events", prefix, os.makedirs) == out
+        assert os.path.isdir(old_version_later)
+    finally:
+        for d in (out, fresh_version, other_path, old_version_later):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_events_src_loses_a_race_to_another_process(tmp_path, monkeypatch):
     """Another process commits the events staging after this one's
     check and before its commit (its link lands first): this one
@@ -1197,6 +1231,45 @@ def test_local_writes_and_streaming_commits_fork_no_process(spark, tmp_path):
     commands = re.findall(r'command = "([^"]*)"', printed)
     assert "true" in commands
     assert [c for c in commands if c.split(" ")[0] in ("chmod", "readlink")] == []
+
+
+def test_repeated_batch_pass_compiles_no_generated_class(spark, tmp_path):
+    """A second run of the benchmark's batch pass (two SWA views, two
+    TPC-H queries, the three key/value export domains) generates the
+    same Java source as the first and finds every class in the codegen
+    cache: Janino compiles nothing. With Spark's default of 100
+    entries, the ~100 classes of a pass thrash the cache's segments
+    and a second run recompiles a quarter of them."""
+    from big_data_code_spark import session
+    from big_data_code_spark.cacheutil import release_persisted
+    from big_data_code_spark.plans.registry import QUERIES
+    from big_data_code_spark.serving import keyvalue as kv
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(session.CODEGEN_CACHE_ENTRIES)
+    bucket_key = kv.url_bucketed_key(F.col("event_type"), F.col("granularity"), F.col("bucket"))
+    n = kv.N_SHARDS_DEFAULT
+    exports = {
+        "pageviews": ("pageviews_over_time", bucket_key, ["total_views"],
+                      kv.url_only_shard(F.col("event_type"), n), False),
+        "uniques": ("uniques_over_time", bucket_key, ["unique_visitors"],
+                    kv.hash_mod_shard(bucket_key, n), False),
+        "bounce": ("bounce_rate", F.col("event_type"), ["num_visits", "num_bounces"],
+                   kv.hash_mod_shard(F.col("event_type"), n), True),
+    }
+
+    def batch_pass(run: int):
+        for name in ("pageviews_over_time", "bounce_rate", "q1_pricing_summary", "q21_waiting_supplier"):
+            QUERIES[name](spark, SF_SMOKE).toPandas()
+            release_persisted()
+        for domain, (view, key, values, shard, longs) in exports.items():
+            kv.export_key_value(QUERIES[view](spark, SF_SMOKE), str(tmp_path / f"r{run}" / domain),
+                                key, values, shard, serialize_longs=longs)
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    batch_pass(0)
+    before = compiles.getCount()
+    batch_pass(1)
+    assert compiles.getCount() - before == 0
 
 
 #: DuckDB result type → the Spark simpleString(s) that land on the

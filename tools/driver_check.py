@@ -28,8 +28,12 @@ The previous stringified-tuple comparator was WEAKER than the driver
 and let three broken contracts reach it undetected; do not resurrect
 it.
 
-Each query's line shows its wall time and the Spark jobs it started
-(construction plus collect, ``jobs=N``); the total closes the run.
+Each query's line shows its wall time, the Spark jobs it started
+(construction plus collect, ``jobs=N``) and the generated classes
+Janino compiled meanwhile (``compiles=N``); the totals close the run.
+The plain session keeps Spark's codegen cache of 100 classes (the
+size is a JVM-start setting), so a repeated sweep recompiles what the
+cache evicted; ``session.get_spark`` sizes it to the working set.
 
 Usage::
 
@@ -147,34 +151,38 @@ def main() -> None:
     from big_data_code_spark.cacheutil import STATS, release_persisted
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    n_pass = n_fail = n_noracle = total_jobs = 0
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n_pass = n_fail = n_noracle = total_jobs = total_compiles = 0
     for name in names:
         release_persisted()  # drop plan-internal caches between queries
-        t0, jobs0 = time.perf_counter(), dag.numTotalJobs()
+        t0, jobs0, compiles0 = time.perf_counter(), dag.numTotalJobs(), compiled.getCount()
         try:
             sdf = QUERIES[name](spark, SF_DIR)
             spark_pdf = sdf.toPandas()
-            jobs = dag.numTotalJobs() - jobs0
+            jobs, compiles = dag.numTotalJobs() - jobs0, compiled.getCount() - compiles0
             total_jobs += jobs
+            total_compiles += compiles
+            cost = f"jobs={jobs} compiles={compiles}"
             sql = ORACLES.get(name)
             if sql is None:
                 n_noracle += 1
-                print(f"NO-ORACLE {name}: rows={len(spark_pdf)} ({time.perf_counter()-t0:.1f}s jobs={jobs})")
+                print(f"NO-ORACLE {name}: rows={len(spark_pdf)} ({time.perf_counter()-t0:.1f}s {cost})")
                 continue
             duck_pdf = con.sql(sql).df()
             cols_ok, match, diff = compare(spark_pdf, duck_pdf)
             if match:
                 n_pass += 1
-                print(f"PASS      {name}: rows={len(spark_pdf)} ({time.perf_counter()-t0:.1f}s jobs={jobs})")
+                print(f"PASS      {name}: rows={len(spark_pdf)} ({time.perf_counter()-t0:.1f}s {cost})")
             else:
                 n_fail += 1
-                print(f"FAIL      {name}: cols_ok={cols_ok} rows={len(spark_pdf)}/{len(duck_pdf)} jobs={jobs} diff={diff}")
+                print(f"FAIL      {name}: cols_ok={cols_ok} rows={len(spark_pdf)}/{len(duck_pdf)} {cost} diff={diff}")
         except Exception:
             n_fail += 1
             print(f"ERROR     {name}:")
             traceback.print_exc()
     print(f"\n{n_pass} pass / {n_fail} fail / {n_noracle} no-oracle of {len(names)}")
     print(f"Spark jobs: {total_jobs} (construction + collect, queries that ran to the end)")
+    print(f"Generated classes compiled: {total_compiles} (same queries)")
     for entry, st in sorted(STATS.items()):
         print(f"serve-once {entry}: hits={st['hits']} misses={st['misses']} build_s={st['build_s']:.1f}")
     sys.exit(1 if n_fail else 0)
