@@ -1,18 +1,26 @@
 """Lifetimes of the derived data a plan holds on to.
 
-Persisted intermediates. Operators like
-`operators.dedup.minhash_lsh_pairs` persist an intermediate (the
-signature table) that several branches of the returned — still lazy
-— plan consume. The operator cannot unpersist it before the caller
-materializes the plan, so Spark's CacheManager would otherwise hold
-the blocks for the session lifetime. Harness loops that run many
-queries in one session (bench.py, tools/driver_check.py) call
-`release_persisted()` after materializing each query; code with its
-own batch boundaries wraps each batch in `releasing()`, as
+Persisted intermediates. `persist(df)` is the package's only way to
+cache a frame: an operator that feeds one intermediate to several
+branches of its returned (still lazy) plan persists it there, e.g.
+`operators.dedup.minhash_lsh_pairs`'s signature table, and an
+iterative loop persists the frame every round re-scans. The storage
+level (``MEMORY_AND_DISK``: a block that does not fit in memory
+spills instead of being recomputed) is decided here and nowhere
+else. Every persisted frame is registered for `release_persisted()`
+in the same step. The operator cannot unpersist before the caller
+materializes the plan, so harness loops that run many queries in
+one session (bench.py, tools/driver_check.py) call
+`release_persisted()` after each query, and code with its own batch
+boundaries wraps each batch in `releasing()`, as
 `streaming.speed_layer.run_foreach_batch` does for every
-micro-batch once its frame is written. A plan re-run after release
-simply recomputes (and re-registers) its cache — correctness never
-depends on the cache being present.
+micro-batch once its frame is written. A frame dropped early by its
+own `unpersist()` stays registered (a second unpersist is a no-op),
+so a query that raises before its early drop strands nothing. In
+the batch layer every intermediate is recomputable from the master
+dataset: a plan re-run after release recomputes (and re-registers)
+its cache, and correctness never depends on the cache being
+present.
 
 Serve-once entries. A view that is a pure function of one version
 of its input tables is built once and served until that version
@@ -72,6 +80,7 @@ import time
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import AbstractContextManager, contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from .sources.tables import fingerprint, table_path
@@ -84,9 +93,10 @@ _BYPASSED: set[str] = set()
 _RECORDED: list[str] | None = None
 
 
-def track_persisted(df: DataFrame) -> DataFrame:
-    """Register an already-persisted DataFrame for later release."""
-    _PERSISTED.append(df)
+def persist(df: DataFrame) -> DataFrame:
+    """``df`` persisted and registered for `release_persisted` (see
+    the module docstring)."""
+    _PERSISTED.append(df.persist(StorageLevel.MEMORY_AND_DISK))
     return df
 
 
@@ -106,8 +116,8 @@ def release_persisted(since: int = 0) -> int:
 
 @contextmanager
 def releasing() -> Iterator[None]:
-    """Within the block, DataFrames passed to `track_persisted` are
-    released when the block exits; those tracked before it stay."""
+    """Within the block, frames passed to `persist` are released
+    when the block exits; those persisted before it stay."""
     since = len(_PERSISTED)
     try:
         yield

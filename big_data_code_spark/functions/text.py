@@ -55,12 +55,6 @@ def word_shingles(tokens: Column, n: int = 3, distinct: bool = True) -> Column:
     return F.array_distinct(made) if distinct else made
 
 
-def seeded_md5(seed: int, value: Column) -> Column:
-    """``md5("<seed>:" || value)`` — a family of deterministic,
-    cross-engine-identical hash functions (minhash seeds)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), value))
-
-
 def stopword_hits(tokens: Column, lang: str = "en") -> Column:
     """Number of tokens that are stopwords of ``lang``."""
     stops = STOPWORDS[lang]

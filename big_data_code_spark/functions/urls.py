@@ -1,9 +1,8 @@
 """URL column expressions.
 
-Parity with the reference's NormalizeURL / ExtractDomain
-(`BatchWorkflow.java:183-221,495-505`): a normalized URL is
-``protocol://host/path`` (query string and fragment dropped);
-the "domain" is the URL authority (host[:port]).
+Parity with the reference's NormalizeURL
+(`BatchWorkflow.java:183-221`): a normalized URL is
+``protocol://host/path`` (query string and fragment dropped).
 
 Implemented with ``parse_url`` / regex built-ins — JVM-side, no
 Python UDF in the hot path.
@@ -28,8 +27,3 @@ def normalize_url(url: Column) -> Column:
         (proto != "") & host.isNotNull(),
         F.concat(proto, F.lit("://"), host, path),
     )
-
-
-def extract_domain(url: Column) -> Column:
-    """URL authority (host), NULL when malformed."""
-    return F.parse_url(url, F.lit("HOST"))

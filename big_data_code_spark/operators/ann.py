@@ -19,6 +19,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cacheutil import persist
+
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -135,6 +137,48 @@ def lsh_signature_arrow(planes: list[list[float]]):
     return pandas_udf(_sig, "string")
 
 
+def _lsh_candidates(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_planes: int,
+    n_bands: int,
+) -> DataFrame:
+    """(q_id, ``id_col``, sim) for every distinct (query, corpus
+    vector) pair sharing at least one LSH band: both sides banded by
+    the same md5 hyperplanes, the query side broadcast into a (band,
+    slice) equi-join."""
+    planes = hyperplanes(dim, n_planes)
+    rows = n_planes // n_bands
+    sig = lsh_signature(F.col(vec_col), planes)
+    bands = F.array(
+        *[
+            F.concat(F.lit(f"{b}:"), F.substring(F.col("sig"), b * rows + 1, rows))
+            for b in range(n_bands)
+        ]
+    )
+
+    def banded(df: DataFrame, id_alias: str) -> DataFrame:
+        return (
+            df.select(F.col(id_col).alias(id_alias), F.col(vec_col).alias(f"{id_alias}_vec"), sig.alias("sig"))
+            .select(id_alias, f"{id_alias}_vec", F.explode(bands).alias("bk"))
+        )
+
+    cand = (
+        banded(corpus, "c_id")
+        .join(F.broadcast(banded(queries, "q_id")), "bk")
+        .select("q_id", "q_id_vec", "c_id", "c_id_vec")
+        .distinct()
+    )
+    return cand.select(
+        "q_id",
+        F.col("c_id").alias(id_col),
+        cosine(F.col("c_id_vec"), F.col("q_id_vec")).alias("sim"),
+    )
+
+
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -152,35 +196,9 @@ def lsh_ann_topk(
     Returns (q_id, rank, vec_id, sim) — rank over retrieved
     candidates only.
     """
-    planes = hyperplanes(dim, n_planes)
-    rows = n_planes // n_bands
-    sig = lsh_signature(F.col(vec_col), planes)
-
-    def banded(df: DataFrame, id_alias: str) -> DataFrame:
-        bands = F.array(
-            *[
-                F.concat(F.lit(f"{b}:"), F.substring(F.col("sig"), b * rows + 1, rows))
-                for b in range(n_bands)
-            ]
-        )
-        return (
-            df.select(F.col(id_col).alias(id_alias), F.col(vec_col).alias(f"{id_alias}_vec"), sig.alias("sig"))
-            .select(id_alias, f"{id_alias}_vec", F.explode(bands).alias("bk"))
-        )
-
-    cand = (
-        banded(corpus, "c_id")
-        .join(F.broadcast(banded(queries, "q_id")), "bk")
-        .select("q_id", "q_id_vec", "c_id", "c_id_vec")
-        .distinct()
-    )
-    scored = cand.select(
-        "q_id",
-        F.col("c_id").alias(id_col),
-        cosine(F.col("c_id_vec"), F.col("q_id_vec")).alias("sim"),
-    )
     from pyspark.sql.window import Window
 
+    scored = _lsh_candidates(corpus, queries, id_col, vec_col, dim, n_planes, n_bands)
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.col(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -204,42 +222,14 @@ def lsh_range_search(
     — the similarity-JOIN primitive (threshold dedup, retrieval
     cutoffs, knn-graph edges), where top-k is the wrong contract.
 
-    Identical candidate generation (broadcast banded queries,
-    (band, slice) equi-join, distinct) and the same md5-plane
-    determinism, so the plan is exactly oracle-restatable.
+    Same candidates as `lsh_ann_topk` (`_lsh_candidates`), so the
+    plan is exactly oracle-restatable.
 
     Returns (q_id, vec_id, sim).
     """
-    planes = hyperplanes(dim, n_planes)
-    rows = n_planes // n_bands
-    sig = lsh_signature(F.col(vec_col), planes)
-
-    def banded(df: DataFrame, id_alias: str) -> DataFrame:
-        bands = F.array(
-            *[
-                F.concat(F.lit(f"{b}:"), F.substring(F.col("sig"), b * rows + 1, rows))
-                for b in range(n_bands)
-            ]
-        )
-        return (
-            df.select(F.col(id_col).alias(id_alias), F.col(vec_col).alias(f"{id_alias}_vec"), sig.alias("sig"))
-            .select(id_alias, f"{id_alias}_vec", F.explode(bands).alias("bk"))
-        )
-
-    cand = (
-        banded(corpus, "c_id")
-        .join(F.broadcast(banded(queries, "q_id")), "bk")
-        .select("q_id", "q_id_vec", "c_id", "c_id_vec")
-        .distinct()
-    )
-    return (
-        cand.select(
-            "q_id",
-            F.col("c_id").alias(id_col),
-            cosine(F.col("c_id_vec"), F.col("q_id_vec")).alias("sim"),
-        )
-        .where(F.col("sim") >= tau)
-    )
+    return _lsh_candidates(
+        corpus, queries, id_col, vec_col, dim, n_planes, n_bands
+    ).where(F.col("sim") >= tau)
 
 
 #: `ivf_assign` switches from the interpreted-HOF distance
@@ -672,7 +662,7 @@ def ivf_train(
         # persist each round: the next assignment reads this round's
         # cells, and without it every means.collect() re-runs the
         # whole lazy chain from the raw scan (quadratic recompute)
-        assigned = assigned.persist()
+        assigned = persist(assigned)
         # element-wise mean via posexplode → ONE avg aggregate.
         # `dim` parallel avg(element_at) columns give the same
         # shuffle volume (map-side combine → k×dim partials either
@@ -792,7 +782,7 @@ def ivf_train_grouped(
     prev = None
     cents: dict[int, list[list[float]]] = {}
     for _ in range(iters + 1):
-        df = df.persist()
+        df = persist(df)
         means = (
             df.select("g", "sub", F.posexplode("v").alias("pos", "x"))
             .groupBy("g", "sub", "pos")

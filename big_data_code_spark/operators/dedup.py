@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cacheutil import persist
 from ..functions.text import tokenize, word_shingles
 
 N_MINHASHES = 16
@@ -101,15 +102,11 @@ def ngram_jaccard_pairs(
     the candidate set scales with near-duplicates rather than with
     shingle-frequency².
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # r10: three consumers (prefix candidate gen + both sides of the
     # scoring join) — persist so the shingle explode + per-doc
     # sorted-set build runs once, not three times (the signature-
     # table convention of `minhash_lsh_pairs`).
-    sh = track_persisted(
+    sh = persist(
         _exploded_shingles(docs, id_col, text_col, n)
         .select("id", F.xxhash64("shingle").alias("sh"))
         .groupBy("id")
@@ -121,7 +118,6 @@ def ngram_jaccard_pairs(
                 F.size("shs") - F.ceil(F.size("shs") * F.lit(threshold)).cast("int") + 1,
             ).alias("prefix"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pref = sh.select("id", "n_sh", F.explode("prefix").alias("sh"))
     cand = (
@@ -254,20 +250,11 @@ def minhash_lsh_pairs(
     |bucket|² expansion; default None keeps the plain equi-join
     (AQE absorbs moderate skew).
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # Three consumers (band explode + both sides of the est-similarity
     # join) would otherwise recompute the 16×md5-per-shingle signature
     # pass; persist it once. At cluster scale this is the "write the
-    # signature table" step of a production LSH pipeline. Tracked so
-    # harness loops can `release_persisted()` after materializing.
-    sigs = track_persisted(
-        minhash_signatures(docs, id_col, text_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    # signature table" step of a production LSH pipeline.
+    sigs = persist(minhash_signatures(docs, id_col, text_col))
     bands = sigs.select("id", F.explode(_band_keys(F.col("sig"))).alias("bk"))
     if hot_bucket_threshold is not None:
         from .skew import salted_self_pairs
@@ -470,19 +457,13 @@ def simhash_band_pairs(
 
     Returns (id_a, id_b, hamming), id_a < id_b.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     assert 64 % n_bands == 0 and max_hamming < n_bands
     width = 64 // n_bands
     mask = (1 << width) - 1
     # both sides of the band self-join consume the fingerprints —
     # persist so the (expensive: explode + 64 partial aggs) SimHash
     # build runs once, exactly like the MinHash signature table.
-    fps = track_persisted(
-        fps.select(id_col, fp_col).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    fps = persist(fps.select(id_col, fp_col))
     banded = fps.select(
         F.col(id_col).alias("id"),
         F.col(fp_col).alias("fp"),

@@ -58,6 +58,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cacheutil import persist
+
 #: Fallback range-slice count for the two-pass rank when the session
 #: exposes no shuffle parallelism. The DEFAULT derives from
 #: ``spark.sql.shuffle.partitions`` at call time, so the slice count
@@ -122,10 +124,6 @@ def two_pass_ranks(
     Every spec shares ONE range shuffle; each adds a tiny broadcast
     join + a per-slice local window.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # validate the integer-only cumsum contract up front so BOTH
     # paths enforce it identically
     for spec in specs:
@@ -152,13 +150,12 @@ def two_pass_ranks(
     # counts, rollups — would run double without it (measured 3× on
     # sequence_packing at sf10). Call sites pass pre-projected
     # narrow frames, so the cache is cheap.
-    src = track_persisted(df.persist(StorageLevel.MEMORY_AND_DISK))
+    src = persist(df)
     if gated and src.count() <= SMALL_INPUT_ROWS:
         return _small_input_ranks(src, order_by, specs)
-    rp = track_persisted(
+    rp = persist(
         src.repartitionByRange(buckets, *order_by)
         .withColumn(PID, F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     out = rp
     for i, spec in enumerate(specs):

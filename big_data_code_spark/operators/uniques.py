@@ -23,17 +23,6 @@ from ..functions.timebuckets import emit_granularities, hour_bucket
 HLL_LGK = 14  # parity: new HyperLogLog(14), BatchWorkflow.java:430
 
 
-def _fan_granularities(df: DataFrame, key: str, ts: str, extra: str) -> DataFrame:
-    return (
-        df.select(
-            F.col(key),
-            F.explode(emit_granularities(hour_bucket(F.col(ts)))).alias("gb"),
-            F.col(extra),
-        )
-        .select(key, F.col("gb.granularity").alias("granularity"), F.col("gb.bucket").alias("bucket"), extra)
-    )
-
-
 def uniques_exact(df: DataFrame, key: str, ts: str, user: str) -> DataFrame:
     """Exact distinct users per (key, granularity, bucket).
 

@@ -14,7 +14,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cacheutil import materialize
+from ..cacheutil import materialize, persist
 from ..functions.timebuckets import epoch_us
 from ..operators.asof import asof_join
 from ..sources.tables import load_table
@@ -1790,21 +1790,16 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # items feeds FOUR consumers (order total, brand counts, both
     # self-join sides) — persist or the lineitem⋈part join and the
     # distinct re-run once per consumer (the knn_graph lesson;
     # measured 113.8s → 21.5s at sf10).
-    items = track_persisted(
+    items = persist(
         li.join(part, li.l_partkey == part.p_partkey)
         .select("l_orderkey", F.col("p_brand").alias("brand"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_orders = items.agg(
         F.countDistinct("l_orderkey").cast("long").alias("n_orders")
@@ -1914,13 +1909,10 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(o_totalprice * 1e6) AS BIGINT)").alias("p_fp"),
     )
     maxd = o.agg(F.max("d_us").alias("max_us"))
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # two consumers (threshold agg + scoring) — persist or the
     # orders scan and customer roll-up run twice.
-    per_cust = track_persisted(
+    per_cust = persist(
         o.groupBy("o_custkey")
         .agg(
             F.max("d_us").alias("last_us"),
@@ -1936,7 +1928,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "frequency",
             "m_fp",
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     thr = per_cust.agg(
         *[
@@ -2310,9 +2301,6 @@ def _lambda_sessions_from_events(ev: DataFrame) -> DataFrame:
     speed_ev = ev2.where(
         F.col("us") > F.col("max_us") - SESSION_INCR_WINDOW_US
     ).drop("max_us")
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # r10 (guide §5): the stitch references b THREE times (b_cnt,
     # b_last, batch_keep) and s twice (s_first, speed_shift), and
@@ -2326,16 +2314,8 @@ def _lambda_sessions_from_events(ev: DataFrame) -> DataFrame:
     # — docstring), an order of magnitude smaller than the event
     # grain, and every consumer now reads the cache. Executed
     # events scans drop to the 3 slice passes.
-    b = track_persisted(
-        _session_rollup_us(_sessionize_frame(batch_ev)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
-    s = track_persisted(
-        _session_rollup_us(_sessionize_frame(speed_ev)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    b = persist(_session_rollup_us(_sessionize_frame(batch_ev)))
+    s = persist(_session_rollup_us(_sessionize_frame(speed_ev)))
 
     b_cnt = b.groupBy("user_id").agg(F.max("session_id").alias("b_cnt"))
     b_last = b.join(b_cnt, "user_id").where(F.col("session_id") == F.col("b_cnt"))
@@ -3052,14 +3032,11 @@ def _markov_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).over(wp).alias("first_p"),
         F.max("pos").over(wp).alias("last_pos"),
     )
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # r10: both the transition branch and the terminal branch consume
     # this frame — persist so the sessionize + two window passes run
     # once, not twice.
-    kept = track_persisted(
+    kept = persist(
         pos2.where(
             F.col("first_p").isNull() | (F.col("pos") <= F.col("first_p"))
         )
@@ -3070,7 +3047,6 @@ def _markov_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("event_type"))
             .alias("dst"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     trans = kept.select(
         F.coalesce(F.lag("dst").over(wk), F.lit("START")).alias("src"), "dst"
@@ -3868,17 +3844,12 @@ def item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # (order, item) distinct feeds three consumers (item counts +
     # both self-join sides) — the market_basket_lift persist lesson.
-    items = track_persisted(
+    items = persist(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", F.col("l_partkey").alias("item"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     item_cnt = items.groupBy("item").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -4724,21 +4695,16 @@ def itemcf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # r10: persist the DISTINCT basket table once, not just the train
     # slice — the executed before-plan ran the scan+distinct shuffle
     # FOUR times (train cache build + cand/th/n_test, whose copies
     # carry divergent join-inferred not-null filters, so AQE exchange
     # reuse never fires on them). Train/test filters are narrow reads
     # of the one cache; same rows, oracle re-proved.
-    all_items = track_persisted(
+    all_items = persist(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", F.col("l_partkey").alias("item"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     train = all_items.where(F.col("l_orderkey") % ITEMCF_TEST_MOD != 0)
     test = all_items.where(F.col("l_orderkey") % ITEMCF_TEST_MOD == 0)

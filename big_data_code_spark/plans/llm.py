@@ -32,7 +32,7 @@ from ..functions.text import (
     tokenize,
     word_shingles,
 )
-from ..cacheutil import materialize, serve_once
+from ..cacheutil import materialize, persist, serve_once
 from ..operators import ann, dedup
 from ..sources.tables import load_table, staged
 
@@ -209,8 +209,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only master + recompute story, restated as the
     dedup-on-absorb step of a training-data pipeline.
     """
-    from pyspark import StorageLevel
-
     corpus = _corpus(spark, sf_dir)
     master = corpus.where(F.col("doc_id") < DUP_SEED_OFFSET)
     batch = corpus.where(F.col("doc_id") >= DUP_SEED_OFFSET)
@@ -224,12 +222,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one signature pass over the whole corpus, split by side — the
     # local stand-in for "read the master's stored signature table".
-    # Tracked for `cacheutil.release_persisted()` in harness loops.
-    from ..cacheutil import track_persisted
-
-    sigs = track_persisted(
-        dedup.minhash_signatures(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sigs = persist(dedup.minhash_signatures(corpus))
     near_ids = (
         dedup.minhash_lsh_pairs_cross(
             batch,
@@ -2385,18 +2378,11 @@ def training_corpus_final(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.size("tokens")
         ).between(QF_MIN_MEAN_TOKLEN, QF_MAX_MEAN_TOKLEN)
     )
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # r10: qual feeds the dedup stage (survivors) AND the final
     # verdict join — persist so the tokenize + quality-feature pass
     # runs once, not twice.
-    qual = track_persisted(
-        toks.select("doc_id", "text", keep.alias("keep_quality")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    qual = persist(toks.select("doc_id", "text", keep.alias("keep_quality")))
     survivors = qual.where("keep_quality").select("doc_id", "text")
     pairs = dedup.minhash_lsh_pairs(survivors, threshold=MINHASH_LSH_THRESHOLD)
     mapping = connected_components(
@@ -3973,10 +3959,6 @@ def exact_substring_dedup(
     Returns (doc_id_a, doc_id_b, n_shared_windows, overlap_a,
     overlap_b) for pairs sharing ≥1 non-boilerplate window.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     corpus = _corpus(spark, sf_dir)
     # three consumers (sizes + both join sides) would each re-run
     # the explode + window-hash build — persist it once, like the
@@ -3987,7 +3969,7 @@ def exact_substring_dedup(
     # 32-char string keys quadrupled the h-shuffle volume and
     # dominated the sort at sf10 (84s → 54s measured on the
     # shuffle-side legs of an sf10 probe).
-    win = track_persisted(
+    win = persist(
         corpus.select(
             "doc_id",
             F.explode(
@@ -4013,7 +3995,6 @@ def exact_substring_dedup(
             F.xxhash64("w").alias("h"),
             F.xxhash64(F.lit(1), "w").alias("h2"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sizes = win.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_win"))
     eligible = (
@@ -4133,9 +4114,6 @@ def substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (doc_id, n_tokens, n_removed, kept_text); kept_text is
     NULL when every token was removed.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
     from ..operators.skew import widen_for_compute
 
     k = SUBSTR_WIN_K
@@ -4143,10 +4121,9 @@ def substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r10: tokenized frame is consumed three times (windows, token
     # positions, per-doc totals) — widen the tokenize map (guide
     # §2.5) and persist it once instead of re-tokenizing per branch.
-    toks = track_persisted(
+    toks = persist(
         widen_for_compute(corpus)
         .select("doc_id", tokenize(F.col("text")).alias("toks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     win = (
         toks.where(F.size("toks") >= k)
@@ -4463,8 +4440,6 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded-LSH kNN edge-list build (signatures → band self-
     join → symmetric top-k), materialized via localCheckpoint —
     runs the FULL build on every call."""
-    from pyspark import StorageLevel
-
     emb = _embeddings(spark, sf_dir)
     rows = _knn_band_rows(spark, sf_dir)
     # the symmetric union below consumes the pair frame TWICE —
@@ -4472,14 +4447,16 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band join + candidate cosines) runs once per consumer
     # (measured 78s → ~40s at the sf10 probe). Dropped as soon as
     # the finished edges materialize below.
-    pairs = ann.cosine_dup_pairs_lsh(
-        emb,
-        threshold=-1.0,
-        n_planes=KNN_BANDS * rows,
-        n_bands=KNN_BANDS,
-        arrow_sig=True,
-        arrow_dot=True,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = persist(
+        ann.cosine_dup_pairs_lsh(
+            emb,
+            threshold=-1.0,
+            n_planes=KNN_BANDS * rows,
+            n_bands=KNN_BANDS,
+            arrow_sig=True,
+            arrow_dot=True,
+        )
+    )
     # materialize before fan-out (cold-cache branch races)
     pairs.count()
     sym = pairs.select(
@@ -4593,10 +4570,6 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (src, rank, dst, cos) — identical to `knn_graph`.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     emb = _embeddings(spark, sf_dir)
     rows = _knn_band_rows(spark, sf_dir)
     n_planes = KNN_BANDS * rows
@@ -4608,27 +4581,19 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batch self-join) — in production these ARE the stored
     # signature tables; the r7 review measured the inline builds
     # paying a full extra Arrow signature pass per leg.
-    base_master = track_persisted(
-        ann.lsh_base(master, n_planes=n_planes, arrow_sig=True).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
-    base_batch = track_persisted(
-        ann.lsh_base(batch, n_planes=n_planes, arrow_sig=True).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    base_master = persist(ann.lsh_base(master, n_planes=n_planes, arrow_sig=True))
+    base_batch = persist(ann.lsh_base(batch, n_planes=n_planes, arrow_sig=True))
     base_master.count()
     base_batch.count()
 
     # stored state stand-in: the master's own top-K graph (one
     # banded self-join; in production this is a table read)
-    master_pairs = track_persisted(
+    master_pairs = persist(
         ann.cosine_dup_pairs_lsh(
             master, threshold=-1.0, n_planes=n_planes,
             n_bands=KNN_BANDS, arrow_sig=True, base=base_master,
             arrow_dot=True,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     master_pairs.count()
     msym = master_pairs.select(
@@ -4646,7 +4611,7 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # the incremental step — cost ∝ batch
-    new_pairs = track_persisted(
+    new_pairs = persist(
         ann.cosine_pairs_lsh_cross(
             batch, master, threshold=-1.0, n_planes=n_planes,
             n_bands=KNN_BANDS, arrow_sig=True,
@@ -4658,7 +4623,6 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_bands=KNN_BANDS, arrow_sig=True, base=base_batch, arrow_dot=True,
             )
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     new_pairs.count()
     nsym = new_pairs.select(
@@ -4715,9 +4679,6 @@ def gopher_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (doc_id, n_words, mean_word_len, alpha_frac, stop_hits,
     top2_frac, dup3_frac, keep).
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
     from ..operators.skew import widen_for_compute
 
     # r10: the tokenize pass feeds TWO branches (the per-doc scalar
@@ -4726,11 +4687,7 @@ def gopher_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.5 input skew), and persist the tokenized frame once
     # so both branches read it instead of re-tokenizing (§5).
     docs = widen_for_compute(load_table(spark, sf_dir, "documents"))
-    toks = track_persisted(
-        docs.select("doc_id", tokenize(F.col("text")).alias("toks")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    toks = persist(docs.select("doc_id", tokenize(F.col("text")).alias("toks")))
     all3 = word_shingles(F.col("toks"), distinct=False)
     stop_best = F.greatest(
         *[stopword_hits(F.col("toks"), lang) for lang in sorted(STOPWORDS)]
@@ -5101,14 +5058,10 @@ def _qlt_std_frames(labeled: DataFrame):
     (`_qlt_std_consts`), so the frozen serving constants can never
     diverge from what training standardizes with (r7 review — the
     helper previously re-implemented this derivation verbatim)."""
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # r10: three consumers (stats1, the z-frame, stats2 through it)
     # would each re-run the tokenize-heavy feature pass — persist the
-    # labeled frame once (tracked, so harness loops release it).
-    labeled = track_persisted(labeled.persist(StorageLevel.MEMORY_AND_DISK))
+    # labeled frame once.
+    labeled = persist(labeled)
     stats1 = labeled.agg(
         F.count(F.lit(1)).alias("n"),
         *[
@@ -5217,9 +5170,6 @@ def quality_logit_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the weight vector after each round (r7: over the standardized
     features, with the z_sat² curvature weight).
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
     from ..operators.skew import narrow_for_iteration
 
     # r11 (VERDICT r10 #2): the standardized frame is 7 numerics per
@@ -5227,12 +5177,8 @@ def quality_logit_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tokenize pass's width (24 rounds × 32 near-empty tasks was
     # the loop's dominant scheduler cost at sf0.1; no-op on a
     # cluster where the scan is already right-sized).
-    labeled = track_persisted(
-        narrow_for_iteration(
-            _qlt_labeled_std(spark, sf_dir),
-            sf_dir,
-            "documents",
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+    labeled = persist(
+        narrow_for_iteration(_qlt_labeled_std(spark, sf_dir), sf_dir, "documents")
     )
     from ..session import no_aqe
 
@@ -5501,8 +5447,6 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns 1 row: (n_train, n_val, n_pos, n_neg, auc_val, acc_val).
     """
-    from pyspark import StorageLevel
-
     from ..operators.ranking import two_pass_ranks
 
     labeled_all = _qlt_labeled(spark, sf_dir)
@@ -5516,7 +5460,7 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import narrow_for_iteration
 
     # r11: same iteration-frame sizing as quality_logit_train
-    lab_train = (
+    lab_train = persist(
         narrow_for_iteration(
             z4t.crossJoin(F.broadcast(consts2)).select(
                 "doc_id",
@@ -5530,7 +5474,6 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir,
             "documents",
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     from ..session import no_aqe
 
@@ -5567,9 +5510,8 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         F.expr(f"round(1e0 / (1e0 + exp(-({_QLT_MARGIN}))), 9)").alias("p"),
     )
-    from ..cacheutil import track_persisted
 
-    scored = track_persisted(scored.persist(StorageLevel.MEMORY_AND_DISK))
+    scored = persist(scored)
     grp = scored.groupBy("p").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
         F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0))
@@ -6246,12 +6188,7 @@ def pagerank_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (vec_id, pagerank) for every vector.
     """
-    edges = knn_graph(spark, sf_dir).select("src", "dst")
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
-    edges = track_persisted(edges.persist(StorageLevel.MEMORY_AND_DISK))
+    edges = persist(knn_graph(spark, sf_dir).select("src", "dst"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = _embeddings(spark, sf_dir).select("vec_id")
     n = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -6494,15 +6431,9 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per training round; corpus_tokens is the weighted symbol
     count AFTER applying that round's merge.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # same 2^R lineage re-derivation as bpe_encode (each round
     # references `words` twice) — persist the vocab-sized base once.
-    words = track_persisted(
-        _bpe_word_frame(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    words = persist(_bpe_word_frame(spark, sf_dir))
     out_rounds = []
     for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
         words = _bpe_merge_round(words)
@@ -6592,17 +6523,11 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (doc_id, n_words, n_bpe_tokens, fertility), one row per
     doc with ≥1 token.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # each merge round references `words` twice (pair counts + the
     # merge itself), so the final encoding's lineage re-derives w0
     # 2^R times — persist the vocab-sized base frame once so those
     # re-derivations never re-run the corpus explode + groupBy.
-    words = track_persisted(
-        _bpe_word_frame(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    words = persist(_bpe_word_frame(spark, sf_dir))
     for _ in range(BPE_TRAIN_ROUNDS):
         words = _bpe_merge_round(words).select("word", "wf", "s")
     enc = words.select(
@@ -7020,12 +6945,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame({"asset_id": pdf["asset_id"], "phash": hashes})
 
-    sigs = assets.mapInPandas(run, "asset_id long, phash string")
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
-    sigs = track_persisted(sigs.persist(StorageLevel.MEMORY_AND_DISK))
+    sigs = persist(assets.mapInPandas(run, "asset_id long, phash string"))
     bands = sigs.select(
         "asset_id",
         F.explode(
@@ -7269,21 +7189,16 @@ def triangle_count_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangles, lcc) for every node of the kNN edge set.
     """
     g = knn_graph(spark, sf_dir)
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # five consumers below (degree build + both wedge sides + the
     # closure probe) would each re-run the banded-LSH kNN
-    # construction — persist the undirected edge list once (tracked,
-    # so bench/driver loops release it between queries; measured
+    # construction — persist the undirected edge list once (measured
     # 18s → 4s at sf0.1)
-    edges = track_persisted(
+    edges = persist(
         g.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # materialize before fan-out: parallel branches of one action
     # race a cold lazy cache and each recompute the kNN build
@@ -7303,12 +7218,12 @@ def triangle_count_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # three consumers (both wedge sides + the closure probe) —
     # persist the oriented adjacency once as well
-    oriented = track_persisted(
+    oriented = persist(
         e.select(
             F.when(low_u, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(low_u, F.col("v")).otherwise(F.col("u")).alias("b"),
             F.when(low_u, F.col("dv")).otherwise(F.col("du")).alias("db"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     oriented.count()  # same eager-touch rationale as `edges`
     o1 = oriented.select(
@@ -7827,18 +7742,14 @@ def semdedup_kmeans(
         n_cells, centroids = _semdedup_index(spark, sf_dir, corpus)
     else:
         centroids = ann.ivf_train(corpus, n_cells=n_cells)
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # assignment feeds two consumers (the pair stage + the output
-    # join) — persist it once (tracked/releasable). The per-vector
+    # join) — persist it once. The per-vector
     # norm is hoisted here (r7): computed once per vector, it is the
     # same double it would be per pair.
-    asg = track_persisted(
+    asg = persist(
         ann.ivf_assign(corpus, centroids, "vec_id", "embedding")
         .withColumn("nrm", ann.norm(F.col("v")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # materialize before the pair-stage fan-out (cold-cache races)
     asg.count()
@@ -8033,12 +7944,8 @@ def _semdedup_hier_apply(
 ) -> DataFrame:
     """Leaf assignment + within-leaf pair sweep over a trained
     two-stage index."""
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     asg1 = ann.ivf_assign(corpus, cents1, "vec_id", "embedding")
-    asg = track_persisted(
+    asg = persist(
         asg1.select(
             "id",
             "v",
@@ -8050,7 +7957,6 @@ def _semdedup_hier_apply(
             ).alias("cell"),
         )
         .withColumn("nrm", ann.norm(F.col("v")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     asg.count()
     pairs = asg.groupBy("cell").applyInPandas(
@@ -8187,17 +8093,13 @@ def label_propagation_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
-    # one symmetric edge table re-joined every round — persisted
-    # (tracked/releasable), not checkpointed: LPA_ROUNDS is a small
-    # constant so lineage stays bounded without truncation
-    sym = track_persisted(
+    # one symmetric edge table re-joined every round — persisted, not
+    # checkpointed: LPA_ROUNDS is a small constant so lineage stays
+    # bounded without truncation
+    sym = persist(
         und.select(F.col("u").alias("a"), F.col("v").alias("b"))
         .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # materialize before the round loop (cold-cache branch races)
     sym.count()
@@ -9153,14 +9055,8 @@ def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (n_bands, rows_per_band, detect_prob_at_tau,
     n_candidates, n_verified, precision) — one row per config.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     corpus = _corpus(spark, sf_dir)
-    sigs = track_persisted(
-        dedup.minhash_signatures(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    sigs = persist(dedup.minhash_signatures(corpus))
     sigs.count()
     sa = sigs.select(F.col("id").alias("doc_id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("doc_id_b"), F.col("sig").alias("sig_b"))
@@ -9563,15 +9459,11 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     corpus = _vector_corpus(spark, sf_dir)
     n_cells, centroids = _semdedup_index(spark, sf_dir, corpus)
-    from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
-    asg = track_persisted(
+    asg = persist(
         ann.ivf_assign(corpus, centroids, "vec_id", "embedding")
         .withColumn("nrm", ann.norm(F.col("v")))
         .withColumn("is_batch", F.col("id") >= DUP_SEED_OFFSET)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     asg.count()
     pairs = asg.groupBy("cell").applyInPandas(
@@ -9622,18 +9514,14 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (anchor_id, positive_id, pos_est_j, negative_id,
     neg_cos, neg_rank).
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     # r10: the LSH pair frame feeds both symmetric-union branches,
     # and the union feeds the best-positive window AND the negative
     # anti-join — un-persisted, the band join + est-Jaccard filter
     # re-ran up to 4×. Persist the small pair frame once.
-    pos = track_persisted(
+    pos = persist(
         dedup.minhash_lsh_pairs(
             _corpus(spark, sf_dir), threshold=MINHASH_LSH_THRESHOLD
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     sympos = pos.select(
         F.col("doc_id_a").alias("anchor"),
@@ -9920,10 +9808,6 @@ def doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one row per domain per round, weight summing to 1 (±1e-9·K
     quantization) each round.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     dt0, _, _ = _doremi_base(spark, sf_dir)
     # r11 (VERDICT r10 #5): hash-partition the (dom, token) stats by
     # tok ONCE before persisting — the per-round vocab-grain
@@ -9933,9 +9817,7 @@ def doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spark.sql.shuffle.partitions (+ AQE), not a local constant.
     # nd/v/hown are re-derived FROM the persisted frame so their
     # one-time jobs read the cache instead of re-scanning documents.
-    dt = track_persisted(
-        dt0.repartition(F.col("tok")).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    dt = persist(dt0.repartition(F.col("tok")))
     dt.count()
     nd = materialize(dt.groupBy("dom").agg(F.sum("c").cast("long").alias("n")))
     v = materialize(
@@ -10085,21 +9967,18 @@ def quality_ablation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     fcols = [f"f{i}" for i in range(len(_GOPHER_ABLATION_RULES))]
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # r10: nf feeds THREE consumers (the stack unpivot, the 'any'
     # union branch, and the totals agg) — un-persisted, each re-ran
     # the whole Gopher feature pass (tokenize + rlike HOFs + the
     # 2-gram agg). nf is doc_id + 8 small ints, the cheapest possible
     # frame to hold (§5).
-    nf = track_persisted(
+    nf = persist(
         flags.select(
             "doc_id",
             *fcols,
             sum([F.col(c) for c in fcols[1:]], F.col(fcols[0])).alias("n_fails"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     stack_args = ", ".join(
         f"'{key}', f{i}" for i, (key, _) in enumerate(_GOPHER_ABLATION_RULES)
@@ -10637,19 +10516,11 @@ def term_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (term_x, term_y, n_pair, pmi, rank).
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     # one tokenize pass feeds THREE consumers (pair explode, unigram
     # counts, corpus totals) — persist it or each re-scans and
     # re-tokenizes the corpus (the market_basket_lift lesson).
-    toks = track_persisted(
-        docs.select(tokenize(F.col("text")).alias("toks")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    toks = persist(docs.select(tokenize(F.col("text")).alias("toks")))
     pairs = toks.select(
         F.explode(
             F.expr(
@@ -10944,17 +10815,12 @@ def link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (node_a, node_b, n_common, aa_score, rank).
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     g = knn_graph(spark, sf_dir)
-    edges = track_persisted(
+    edges = persist(
         g.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # materialize before fan-out (parallel consumers of a cold lazy
     # cache each recompute the banded kNN build — the triangle_count
@@ -11470,17 +11336,12 @@ def node_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (node_a, node_b, n_common, jaccard, is_edge, rank).
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     g = knn_graph(spark, sf_dir)
-    edges = track_persisted(
+    edges = persist(
         g.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     edges.count()
     nbr = edges.select(F.col("u").alias("w"), F.col("v").alias("n")).unionByName(
@@ -12975,24 +12836,20 @@ def embedding_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the train slice. Returns (vec_id, n_eval_hits, is_contaminated)
     for every NON-eval corpus vector.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
     vc = _vector_corpus(spark, sf_dir)
     is_eval = (F.col("vec_id") < DUP_SEED_OFFSET) & (
         F.col("vec_id") % DECON_EVAL_MOD == 0
     )
     # r10: both symmetric-union branches consume the LSH pair frame —
     # persist so the signature + band join + cosine filter runs once.
-    pairs = track_persisted(
+    pairs = persist(
         ann.cosine_dup_pairs_lsh(
             vc,
             threshold=COSINE_DUP_THRESHOLD,
             n_planes=SEMANTIC_N_PLANES,
             n_bands=SEMANTIC_N_BANDS,
             arrow_sig=True,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
     )
     both = pairs.select(
         F.col("vec_id_a").alias("target"), F.col("vec_id_b").alias("partner")
@@ -13154,12 +13011,7 @@ def ppr_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (vec_id, is_seed, ppr) for every base vector.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
-
-    edges = knn_graph(spark, sf_dir).select("src", "dst")
-    edges = track_persisted(edges.persist(StorageLevel.MEMORY_AND_DISK))
+    edges = persist(knn_graph(spark, sf_dir).select("src", "dst"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = _embeddings(spark, sf_dir).select(
         "vec_id", (F.col("vec_id") % PPR_SEED_MOD == 0).alias("is_seed")

@@ -25,7 +25,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cacheutil import materialize
+from ..cacheutil import materialize, persist
 from ..functions.timebuckets import epoch_us, us_to_ts
 from ..sources.tables import load_table, staged, table_path
 from ..streaming import speed_layer as sl
@@ -612,9 +612,6 @@ def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-at-once `dedup_incremental`, and its oracle
     (`DEDUP_INCREMENTAL_SQL`) checks this stream hash-exactly.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
     from ..operators import dedup as dd
     from .llm import _corpus
 
@@ -622,16 +619,13 @@ def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _chunked_docs_dir(spark, sf_dir)
     # "read the master's stored signature table" — computed once,
     # shared by every micro-batch.
-    master_sigs = track_persisted(
-        dd.minhash_signatures(master).persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    master_sigs = persist(dd.minhash_signatures(master))
     # r10: the exact-dup hash set is likewise per-ingest-constant —
     # un-persisted, every micro-batch re-ran the master scan + md5 +
     # distinct shuffle behind the semi-join.
-    master_hashes = track_persisted(
+    master_hashes = persist(
         master.select(F.md5("text").alias("h"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return sl.run_foreach_batch(
         _docs_stream(spark, src),
@@ -994,19 +988,15 @@ def streaming_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (doc_id, n_shingles, n_novel, novelty) for the streamed
     docs — `ngram_novelty`'s schema with master-only reference.
     """
-    from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
     from ..operators.dedup import _shingle_table
     from .llm import DUP_SEED_OFFSET, _corpus
 
     master = _corpus(spark, sf_dir).where(F.col("doc_id") < DUP_SEED_OFFSET)
     src = _chunked_docs_dir(spark, sf_dir)
-    master_sh = track_persisted(
+    master_sh = persist(
         _shingle_table(master, "doc_id", "text", 3)
         .select("sh")
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     master_sh.count()
     return sl.run_foreach_batch(

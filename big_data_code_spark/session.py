@@ -81,8 +81,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
 #: Production posture for a large cluster (order 1000 executors,
 #: 100 TB inputs). Not applied in local tests — documented here as
-#: the deployment contract, applied via ``get_spark(profile=
-#: "cluster")`` or spark-submit --conf.
+#: the deployment contract, applied via spark-submit --conf.
 CLUSTER_PROFILE: dict[str, str] = {
     # ~2-3 × total cores so AQE has room to coalesce; at 100 TB this
     # keeps post-shuffle partitions near the advisory size instead of
@@ -106,17 +105,6 @@ CLUSTER_PROFILE: dict[str, str] = {
     # the same classes each cycle; see the module docstring
     "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
 }
-
-
-def get_cluster_spark(app_name: str = "big-data-code-spark") -> SparkSession:
-    """Session with the 100 TB posture applied (on a real cluster,
-    master comes from spark-submit; local fallback for smoke)."""
-    builder = SparkSession.builder.appName(app_name).config(
-        "spark.sql.session.timeZone", "UTC"
-    ).config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for k, v in CLUSTER_PROFILE.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
 
 
 from contextlib import contextmanager

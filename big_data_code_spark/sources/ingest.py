@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..cacheutil import persist
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -59,15 +61,11 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Spark refuses queries that reference ONLY ``_corrupt_record``
     from a raw JSON/CSV scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN) —
-    the parse is cached first so both splits read materialized rows.
-    The cache is registered with `cacheutil.track_persisted` so
-    harness loops release it after materializing the consuming
-    query (r7 advice #3 — it previously leaked one parse cache per
-    invocation).
+    the parse is persisted first (`cacheutil.persist`, so harness
+    loops release it after materializing the consuming query) and
+    both splits read materialized rows.
     """
-    from ..cacheutil import track_persisted
-
-    df = track_persisted(df.cache())
+    df = persist(df)
     clean = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = df.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return clean, quarantine

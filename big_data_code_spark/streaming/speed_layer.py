@@ -52,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from .. import cacheutil
+from ..cacheutil import persist
 from ..functions.timebuckets import ntz_to_ltz
 from ..sources.tables import prune_stale_dirs
 
@@ -394,10 +395,10 @@ def run_foreach_batch(
       empty.
     - Micro-batch ``i`` writes ``batch_frame(batch_df, i, dir)``;
       inside `cacheutil.recording()` that frame's physical plan is
-      recorded before it is written. Frames the body tracks with
-      `cacheutil.track_persisted` are released once the batch is
-      written (`cacheutil.releasing`), so a long stream holds no
-      cached blocks per trigger.
+      recorded before it is written. Frames the body caches with
+      `cacheutil.persist` are released once the batch is written
+      (`cacheutil.releasing`), so a long stream holds no cached
+      blocks per trigger.
     - ``versioned=False``: every write appends parquet parts to the
       dir, read back as one table. ``versioned=True``: every write
       is a full new version ``v_<i>`` of a versioned store
@@ -620,8 +621,8 @@ def upsert_to_keyvalue_sink(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        new = batch_df.persist()
-        try:
+        with cacheutil.releasing():
+            new = persist(batch_df)
             current = _resolve_store_version(store_dir)
             if current is not None:
                 existing = spark.read.parquet(current)
@@ -642,8 +643,6 @@ def upsert_to_keyvalue_sink(
             )
             for d in versions[:-2]:
                 shutil.rmtree(os.path.join(store_dir, d), ignore_errors=True)
-        finally:
-            new.unpersist()
 
     writer = (
         agg_stream.writeStream.outputMode("update")

@@ -6,22 +6,10 @@ import duckdb
 import pytest
 
 from big_data_code_spark.session import get_spark
+from big_data_code_spark.sources.tables import TABLES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 @pytest.fixture(scope="session")
@@ -54,6 +42,11 @@ def recorded_plans(spark, name: str, sf_dir: str = SF_SMOKE) -> list[str]:
     with cacheutil.recording() as plans:
         QUERIES[name](spark, sf_dir)
     return plans
+
+
+def cache_manager_is_empty(spark) -> bool:
+    """Spark's CacheManager holds no cached plan."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def has_cc_round(plans: list[str]) -> bool:

@@ -673,6 +673,55 @@ def test_materialize_is_the_only_checkpoint():
     assert len(hits) == 1 and hits[0].startswith("cacheutil.py:"), hits
 
 
+def test_persist_is_the_only_cache():
+    """Every cached frame in the package goes through
+    `cacheutil.persist`, so `release_persisted()` can drop all of
+    them and the storage level is chosen in one place."""
+    import pathlib
+
+    import big_data_code_spark
+    from big_data_code_spark import cacheutil
+
+    root = pathlib.Path(big_data_code_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path.name != "cacheutil.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if any(s in line for s in (".persist(", ".cache()", "StorageLevel", "track_persisted"))
+    ]
+    assert not hits, hits
+    assert not hasattr(cacheutil, "track_persisted")
+
+
+@pytest.mark.parametrize(
+    "name, target",
+    [
+        # a round of the holdout trainer, while `lab_train` is cached
+        ("quality_logit_holdout_eval", "_qlt_round_step"),
+        # the kNN edge checkpoint, while the pair frame is cached
+        ("knn_graph_build", "materialize"),
+    ],
+)
+def test_raising_query_leaves_no_cached_frame(spark, monkeypatch, name, target):
+    """A query that raises before its own early `unpersist()` strands
+    no cached frame: `release_persisted()` empties the CacheManager."""
+    from big_data_code_spark import cacheutil
+    from big_data_code_spark.plans import llm
+    from big_data_code_spark.plans.registry import QUERIES
+    from tests.conftest import cache_manager_is_empty
+
+    def boom(*args, **kwargs):
+        raise RuntimeError(f"injected failure in {target}")
+
+    spark.catalog.clearCache()  # only what this query caches counts
+    monkeypatch.setattr(llm, target, boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        QUERIES[name](spark, SF_SMOKE)
+    cacheutil.release_persisted()
+    assert cache_manager_is_empty(spark)
+
+
 def test_streams_run_only_through_speed_layer():
     """`foreachBatch(` appears only in `streaming/speed_layer.py`
     (whose runners record what a stream executes), and no registry

@@ -858,7 +858,7 @@ def test_streams_record_the_plans_they_run(spark):
 
 def test_foreach_batch_releases_what_its_micro_batches_persist(spark, monkeypatch):
     """Each micro-batch's KMV partial persists two-pass-rank frames
-    (`cacheutil.track_persisted`); `run_foreach_batch` releases them
+    (`cacheutil.persist`); `run_foreach_batch` releases them
     once the batch is written, so after the query only the serve
     step's tracked frames remain."""
     from big_data_code_spark import cacheutil

@@ -299,15 +299,21 @@ def audited_plans(spark):
     (`cacheutil.recording`): an iterative operator's rounds execute
     and vanish behind checkpoints before the returned frame exists,
     and a stream's stateful plan and per-batch frames run before its
-    sink is read."""
+    sink is read. After each entry `release_persisted()` must leave
+    the CacheManager empty: every frame an entry caches is
+    releasable."""
     from big_data_code_spark import cacheutil
     from big_data_code_spark.plans.registry import QUERIES
+    from tests.conftest import cache_manager_is_empty
 
+    spark.catalog.clearCache()  # what earlier test modules cached
     swept = []
     for name, fn in QUERIES.items():
         with cacheutil.recording() as recorded:
             df = fn(spark, SF_SMOKE)
         swept.append((name, [physical_plan(df), *recorded]))
+        cacheutil.release_persisted()
+        assert cache_manager_is_empty(spark), f"{name} left a cached frame"
     return swept
 
 

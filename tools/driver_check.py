@@ -56,20 +56,9 @@ import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+from big_data_code_spark.sources.tables import TABLES
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def plain_session() -> SparkSession:
