@@ -2869,13 +2869,17 @@ def test_streaming_ngram_novelty_oracle_and_masters(spark):
 
 def _seq_cos(a, b):
     """Sequential-fold cosine — bit-identical to `ann.dot` / DuckDB
-    list_dot_product (numpy's pairwise SIMD summation is NOT)."""
+    list_dot_product (numpy's pairwise SIMD summation is NOT). The
+    norms use `math.sqrt`, correctly rounded like Spark's `sqrt`;
+    `x**0.5` goes through `pow` and can land one ulp away."""
+    import math
+
     dot = nn = mm = 0.0
     for x, y in zip(a, b):
         dot += x * y
         nn += x * x
         mm += y * y
-    return dot / (nn**0.5 * mm**0.5)
+    return dot / (math.sqrt(nn) * math.sqrt(mm))
 
 
 def _sel_vectors(spark):

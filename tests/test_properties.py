@@ -7,6 +7,7 @@ so the budget goes to input diversity, not repetition.
 
 from __future__ import annotations
 
+import math
 from collections import defaultdict
 
 import pandas as pd
@@ -712,7 +713,7 @@ def test_kcenter_greedy_matches_python_on_random_vectors(spark, vecs):
             d += x * y
             n += x * x
             m += y * y
-        return d / (n**0.5 * m**0.5)
+        return d / (math.sqrt(n) * math.sqrt(m))
 
     pool = {i: [float(x) for x in v] for i, v in enumerate(vecs) if i > 0}
     dmin = {i: 1.0 - cos(v, [float(x) for x in vecs[0]]) for i, v in pool.items()}
@@ -765,7 +766,7 @@ def test_mmr_greedy_matches_python_on_random_vectors(spark, vecs):
             d += x * y
             n += x * x
             m += y * y
-        return d / (n**0.5 * m**0.5)
+        return d / (math.sqrt(n) * math.sqrt(m))
 
     q = [float(x) for x in vecs[0]]
     pool = {i: [float(x) for x in v] for i, v in enumerate(vecs) if i > 0}
